@@ -11,7 +11,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tests.test_weather_pipeline import YEAR_BOUNDARY_EPOCH, _payload
 from weather_data_data_pipeline_spark.operators.joins import anti_join_dedup
+from weather_data_data_pipeline_spark.pipeline import weather as W
 from weather_data_data_pipeline_spark.sources import jdbc
 
 
@@ -107,3 +109,26 @@ def test_jdbc_predicate_pushdown_reaches_derby(spark, tmp_path):
     plan = scan._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "k" in plan
     assert scan.count() == 9
+
+
+def test_full_load_sinks_hold_the_same_rows(spark, tmp_path):
+    """One batch, two sinks: the fact run_full_load returns (default
+    job_ts, i.e. current_timestamp()) appended to Derby holds exactly the
+    rows the parquet sink got, jobdate included — the returned frame is
+    the materialised batch, not a recompute with a later clock."""
+    payloads = [
+        _payload("Houston", "US", 29.76, -95.37, YEAR_BOUNDARY_EPOCH),
+        _payload("Berlin", "DE", 52.52, 13.40, YEAR_BOUNDARY_EPOCH),
+    ]
+    dest = str(tmp_path / "dest")
+    fact = W.run_full_load(spark, payloads, dest, "2023-12-28", "2023-12-29")["fact"]
+    url = _url(tmp_path, "sinkdb")
+    jdbc.append(fact, url, "weather_report_data", PROPS)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(*W.FACT_COLUMNS).collect())
+
+    parquet = rows(spark.read.parquet(f"{dest}/weather_report_data"))
+    derby = rows(jdbc.read_table(spark, url, "weather_report_data", PROPS))
+    assert len(parquet) == 80
+    assert parquet == derby

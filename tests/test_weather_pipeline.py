@@ -6,6 +6,11 @@ contract: double-run idempotency of the anti-join append."""
 from __future__ import annotations
 
 import datetime as dt
+import gc
+import re
+import time
+from collections import Counter
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -106,15 +111,108 @@ def test_avg_humidity_range_inclusive(fact):
     assert rows["Houston"]["start_date"] == dt.date(2023, 12, 28)
 
 
-def test_append_is_idempotent(spark, fact, tmp_path_factory):
-    dest = str(tmp_path_factory.mktemp("weather") / "weather_report_data")
-    W.append_idempotent(fact, dest, spark)
-    n1 = spark.read.parquet(dest).count()
-    # Second run with the same batch: anti-join must keep everything out.
-    W.append_idempotent(fact, dest, spark)
-    n2 = spark.read.parquet(dest).count()
-    assert n1 == fact.count()
-    assert n2 == n1, "double-run appended duplicates — idempotency broken"
+def _days(df):
+    """(first, last) weather_day of a batch, by direct aggregate."""
+    d = F.to_date("weatherDate")
+    return tuple(df.agg(F.min(d), F.max(d)).first())
+
+
+def _append(fact, dest, spark) -> int:
+    return W.append_idempotent(fact, dest, spark, _days(fact))["n_rows"]
+
+
+def _keys(df) -> Counter:
+    return Counter(tuple(r) for r in df.select(*W.DEDUP_KEYS).collect())
+
+
+def _files_per_day(dest) -> Counter:
+    return Counter(f.parent.name for f in Path(dest).glob("weather_day=*/*.parquet"))
+
+
+def _last_scan(spark) -> tuple[str, dict[str, str]]:
+    """Physical plan text and metric values of the session's latest SQL
+    execution that scanned parquet."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    last = next(
+        e for e in (execs.apply(i) for i in reversed(range(execs.size())))
+        if "Scan parquet" in e.physicalPlanDescription()
+    )
+    values = store.executionMetrics(last.executionId())
+    metrics = {}
+    for i in range(last.metrics().size()):
+        m = last.metrics().apply(i)
+        v = values.get(m.accumulatorId())
+        if v.isDefined():
+            metrics[m.name()] = v.get()
+    return last.physicalPlanDescription(), metrics
+
+
+def _held(spark, fact, held: str):
+    """Rows the destination holds before the batch lands."""
+    if held == "days around the batch":
+        # both cities over 2023-12-26 .. 2024-01-03, less Houston on the
+        # 29th: two days on each side of the batch, one batch day short
+        wide = W.transform_weather(
+            W.flatten_forecast(W.payloads_to_df(spark, [
+                _payload(c, k, 0.0, 0.0, YEAR_BOUNDARY_EPOCH - 2 * 86400, n=72)
+                for c, k in (("Houston", "US"), ("Berlin", "DE"))
+            ])),
+            job_ts=F.lit("2024-01-01 00:00:00").cast("timestamp"),
+        )
+        return wide.where(
+            (F.col("city") != "Houston") | (F.to_date("weatherDate") != "2023-12-29")
+        )
+    if held == "duplicate keys":
+        berlin = fact.where(F.col("city") == "Berlin")
+        return berlin.unionByName(berlin)
+    return None
+
+
+def test_append_is_idempotent(spark, fact, tmp_path):
+    for held in ("nothing", "days around the batch", "duplicate keys"):
+        _check_append(spark, fact, str(tmp_path / held.replace(" ", "_")), held)
+
+
+def _check_append(spark, fact, root: str, held: str) -> None:
+    dest = f"{root}/weather_report_data"
+    planted = _held(spark, fact, held)
+    before = Counter()
+    if planted is not None:
+        planted.withColumn("weather_day", F.to_date("weatherDate")).write.partitionBy(
+            "weather_day"
+        ).parquet(dest)
+        before = _keys(planted)
+    files = _files_per_day(dest)
+    # exactly the batch keys the destination lacks land, each once,
+    # however often the destination holds the others
+    new = Counter(k for k in _keys(fact) if k not in before)
+    assert _append(fact, dest, spark) == sum(new.values())
+    assert _keys(spark.read.parquet(dest)) - before == new
+    # one new file in each day partition the batch added rows to
+    assert _files_per_day(dest) - files == Counter(
+        {f"weather_day={day}": 1 for day in {k[2].date() for k in new}}
+    )
+
+    # Second run with the same batch: anti-join must keep everything out,
+    # and the dedup scan reads only the batch's weather_day partitions.
+    first, last = _days(fact)
+    batch_files = [
+        f for f in Path(dest).glob("weather_day=*/*.parquet")
+        if first <= dt.date.fromisoformat(f.parent.name.split("=")[1]) <= last
+    ]
+    assert _append(fact, dest, spark) == 0, "double-run appended duplicates"
+    plan, metrics = _last_scan(spark)
+    assert re.search(
+        rf"PartitionFilters: \[.*\(weather_day#\d+ >= {first}\), "
+        rf"\(weather_day#\d+ <= {last}\)\]", plan
+    ), plan
+    assert int(metrics["number of partitions read"]) == (last - first).days + 1
+    assert int(metrics["number of files read"]) == len(batch_files)
+    assert _keys(spark.read.parquet(dest)) - before == new
+
     # A genuinely new batch still lands.
     extra = W.transform_weather(
         W.flatten_forecast(
@@ -125,8 +223,7 @@ def test_append_is_idempotent(spark, fact, tmp_path_factory):
         ),
         job_ts=F.lit("2024-01-02 01:00:00").cast("timestamp"),
     )
-    W.append_idempotent(extra, dest, spark)
-    assert spark.read.parquet(dest).count() == n1 + 5
+    assert _append(extra, dest, spark) == 5
 
 
 def test_anti_join_no_destination_keys_survive(spark, fact):
@@ -180,6 +277,83 @@ def test_full_load_runs_end_to_end(spark, payloads, tmp_path_factory):
         job_ts=F.lit("2024-01-02 02:00:00").cast("timestamp"),
     )
     assert spark.read.parquet(f"{dest}/weather_report_data").count() == 80
+
+
+def test_full_load_metrics_match_direct_counts(spark, payloads, tmp_path):
+    """The load's metrics record rides the batch's own jobs, which it
+    does not add to: one job parses the payloads, and a batch into an
+    existing destination runs five (materialise, two reports, broadcast
+    of the destination keys, write)."""
+    dest = str(tmp_path)
+    sc = spark.sparkContext
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    for run, offered_before in enumerate((0, 80)):
+        # job counts of the static plan (AQE would add a job per stage),
+        # the posture tune_for_working_set picks for a batch this size
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        group = f"full-load-{run}-{tmp_path.name}"
+        sc.setJobGroup(group, "metrics test")
+        try:
+            out = W.run_full_load(spark, payloads, dest, "2023-12-28", "2023-12-29")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        store = sc._jsc.sc().statusStore()
+        names = [store.job(j).name() for j in jobs]
+        assert sum(n.startswith("localCheckpoint") for n in names) == 1, names
+        assert len(jobs) == (4 if run == 0 else 5), names
+
+        fact = out["fact"]
+        d = fact.agg(F.count("*"), F.min("weatherDate"), F.max("weatherDate")).first()
+        total = spark.read.parquet(f"{dest}/weather_report_data").count()
+        assert out["metrics"] == {
+            "rows_offered": d[0],
+            "rows_appended": total - offered_before,
+            "rows_rejected": d[0] - (total - offered_before),
+            "min_ts": d[1],
+            "max_ts": d[2],
+        }
+    assert out["metrics"]["rows_rejected"] == 80
+
+
+def test_payloads_cross_to_the_jvm_as_arrow(spark, payloads):
+    """The payload frame is JVM-resident rows (a local table scan), so
+    evaluating it starts no Python worker."""
+    raw = W.payloads_to_df(spark, payloads)
+    plan = raw._jdf.queryExecution().executedPlan().toString()
+    assert plan.startswith("LocalTableScan"), plan
+    assert W.payloads_to_df(spark, []).count() == 0
+
+
+def test_batches_leave_no_materialised_state(spark, payloads, tmp_path):
+    """The fact's checkpoint lives only as long as the returned frames:
+    with earlier results dropped, persisted RDDs stay flat over
+    repeated batches."""
+    sc = spark.sparkContext
+
+    def persisted() -> set[int]:
+        # storage info copies ids; getPersistentRDDs() would hand back a
+        # map holding the RDDs themselves, keeping them alive while polled
+        return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+
+    held = set()
+    for _ in range(3):
+        before = persisted()
+        out = W.run_full_load(spark, payloads, str(tmp_path), "2023-12-28", "2023-12-29")
+        mine = persisted() - before
+        assert len(mine) == 1  # the fact's checkpoint, nothing else
+        out["fact"].count()  # still readable while the result is held
+        held |= mine
+        del out
+        # the context cleaner unpersists asynchronously after a JVM GC
+        for _ in range(40):
+            gc.collect()
+            sc._jvm.System.gc()
+            if not held & persisted():
+                break
+            time.sleep(0.25)
+        assert not held & persisted()
 
 
 def test_fetch_forecasts_executor_fanout(spark, payloads):

@@ -1332,21 +1332,21 @@ def rho_excess_loss_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     arr = F.filter(F.split(F.col("text"), " "), lambda t: t != F.lit(""))
     arrs = docs.select("doc_id", arr.alias("t"))
     toks = arrs.select("doc_id", F.explode("t").alias("tok"))
-    # r16 (guide §2.4 fewer passes): total tokens and vocab size are
-    # integer identities OF uni — total = Σ uni.c, vs = |uni| — so both
-    # ride one single-partition window over the Zipf-small count table
-    # instead of two standalone scalar aggregates + crossJoins. The old
-    # `n` aggregate was a FULL second explode pass over the corpus (an
-    # entire scan removed at 100 TB); two broadcast-exchange jobs and
-    # their re-run of the token lineage disappear with it.
-    from pyspark.sql import Window as _W
-
-    w_all = _W.partitionBy()
-    uni = (
-        toks.groupBy("tok")
-        .agg(F.count("*").alias("c"))
-        .withColumn("total", F.sum("c").over(w_all))
-        .withColumn("vs", F.count("*").over(w_all))
+    # Total tokens and vocab size are integer identities OF uni —
+    # total = Σ uni.c, vs = |uni| — so one aggregate over the Zipf-small
+    # count table yields both, attached by a broadcast cross join: no
+    # second explode pass over the corpus, and no key-less window that
+    # would funnel the whole table through one task. Every counted token
+    # has c ≥ 1, so vs counts c > 0: a plain count(*) lets column pruning
+    # drop c from the vs branch, which then no longer matches the token
+    # counts' shuffle and re-explodes the corpus instead of reusing it.
+    counts = toks.groupBy("tok").agg(F.count("*").alias("c"))
+    uni = counts.crossJoin(
+        F.broadcast(
+            counts.agg(
+                F.sum("c").alias("total"), F.count_if(F.col("c") > 0).alias("vs")
+            )
+        )
     )
     bi = arrs.where(F.size("t") >= 2).select(
         "doc_id",

@@ -58,9 +58,26 @@ def observed_append(
     metrics: Sequence[Column],
     fmt: str = "parquet",
     name: str = "write_audit",
+    partition_by: Sequence[str] = (),
 ) -> dict:
-    """Write-audit: append ``df`` while collecting ``metrics`` on the same
-    pass; returns the observed metric dict for the gate decision."""
+    """Write-audit: append ``df`` (partitioned by ``partition_by``) while
+    collecting ``metrics`` on the same pass; returns the observed metric
+    dict for the gate decision."""
     observed, obs = with_observation(df, name, metrics)
-    observed.write.format(fmt).mode("append").save(path)
+    observed.write.format(fmt).mode("append").partitionBy(*partition_by).save(path)
     return dict(obs.get)
+
+
+def load_record(offered: dict, appended: dict) -> dict:
+    """The metrics record of one idempotent load, from two observations
+    that ride the load's own passes: ``offered`` on the pass that
+    materialises the batch (``audit_metrics(ts_col=...)``), ``appended``
+    on the write of the rows that survived the dedup
+    (``audit_metrics()``). Rejected rows are the difference."""
+    return {
+        "rows_offered": offered["n_rows"],
+        "rows_appended": appended["n_rows"],
+        "rows_rejected": offered["n_rows"] - appended["n_rows"],
+        "min_ts": offered["min_ts"],
+        "max_ts": offered["max_ts"],
+    }
