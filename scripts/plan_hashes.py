@@ -38,14 +38,28 @@ post-write scan). Changes to those HELPERS must be hand-pinned into
 registry._ROUND_HEAD; the full-surface two-scale mirrors still
 value-check every query every round.
 
+SCOPE CAVEAT — AQE-posture-dependent plans (ADVICE r16):
+``functions/winnow.py:hot_cut_side`` reads the session's AQE conf at
+plan build and hints the join only when AQE is off. This script's
+session is ``get_spark``'s default (AQE on), so the ledger fingerprints
+only the unhinted variant of the winnow queries; the hinted plan that
+runs under ``tune_for_working_set``'s small-data posture (AQE off) is
+never fingerprinted. A change to the hinted side must be hand-pinned
+like the checkpointed helpers above.
+
 (The physical-plan protocol this replaced had two measured leaks —
 CBO statistics from predecessors' eager actions, and a cached-table
 flap on ``embedding_drift_by_label`` — both gone under analyzed-plan
 hashing with cold per-query state.)
 
+The ledger was written with 32 shuffle partitions. Analyzed plans that
+embed the partition count (``repartitionByRange(n, ...)`` in
+operators/ranking.py, the semantic-dedup and packing queries) hash
+differently under any other ``SPARK_GRAFT_CPUS``, so pin it.
+
 Usage:
-    python scripts/plan_hashes.py --round 14           # update the ledger
-    python scripts/plan_hashes.py --round 14 --dry-run # report, no write
+    SPARK_GRAFT_CPUS=32 python scripts/plan_hashes.py --round 14           # update the ledger
+    SPARK_GRAFT_CPUS=32 python scripts/plan_hashes.py --round 14 --dry-run # report, no write
 """
 
 from __future__ import annotations

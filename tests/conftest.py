@@ -9,6 +9,7 @@ import math
 import duckdb
 import pytest
 from hypothesis import settings
+from hypothesis.configuration import set_hypothesis_home_dir
 
 from weather_data_data_pipeline_spark.session import get_spark
 from weather_data_data_pipeline_spark.sources.tables import TABLES
@@ -19,6 +20,13 @@ SF_DIR = "/root/testdata/sf0.001"
 # checkout; the suite writes nothing there.
 settings.register_profile("no-database", database=None)
 settings.load_profile("no-database")
+
+
+@pytest.fixture(scope="session", autouse=True)
+def _hypothesis_storage(tmp_path_factory):
+    # Even without a database, Hypothesis caches its unicode tables under
+    # .hypothesis/unicode_data in the working directory.
+    set_hypothesis_home_dir(str(tmp_path_factory.mktemp("hypothesis")))
 
 
 @pytest.fixture(scope="session")

@@ -7,11 +7,13 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from weather_data_data_pipeline_spark.functions.classifier import (
     quality_classifier_fit,
     quality_classifier_score,
+    score_frozen_md5,
 )
 
 # linearly separable by construction: positives speak "code", negatives
@@ -112,6 +114,23 @@ def test_scores_match_hand_computed_sigmoid(spark):
         .collect()[0]["prob_pos"]
     )
     assert abs(got - expected) <= 1e-6
+
+
+@pytest.mark.parametrize(
+    "weights,intercept",
+    [
+        ([0.5, math.nan], 0.0),
+        ([0.5, math.inf], 0.0),
+        ([0.5, -0.25], -math.inf),
+    ],
+    ids=["nan_weight", "inf_weight", "inf_intercept"],
+)
+def test_frozen_md5_rejects_non_finite_coefficients(spark, weights, intercept):
+    """A NaN or Inf literal would make from_json NULL the whole weight
+    array and every score with it; the plan build must fail instead."""
+    docs = _corpus(spark)
+    with pytest.raises(ValueError, match="non-finite"):
+        score_frozen_md5(docs, "doc_id", "text", weights, intercept)
 
 
 def test_scores_survive_observed_write(spark, tmp_path):

@@ -4,9 +4,12 @@ partition-count independent; ntile must match SQL ntile semantics."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField
 
 from weather_data_data_pipeline_spark.operators.ranking import (
     global_ntile,
@@ -22,30 +25,40 @@ def _df(spark, n: int, parts: int):
     return spark.createDataFrame(rows, "id long, v double").repartition(parts)
 
 
+@contextmanager
+def _aqe(spark, enabled: str):
+    old = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", enabled)
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", old)
+
+
+# (3, 2, 8) leaves at least five of the eight range partitions empty.
 @pytest.mark.parametrize("n,parts,rank_parts", [(40, 1, 4), (40, 5, 8), (3, 2, 8)])
 def test_global_row_number_matches_window(spark, n, parts, rank_parts):
     df = _df(spark, n, parts)
-    got = {
-        r["id"]: r["rank"]
-        for r in global_row_number(
-            df, ["v", "id"], num_partitions=rank_parts
-        ).collect()
-    }
     w = Window.orderBy("v", "id")
     want = {
         r["id"]: r["rank"]
         for r in df.select("id", F.row_number().over(w).alias("rank")).collect()
     }
-    assert got == want
+    for aqe in ("false", "true"):
+        with _aqe(spark, aqe):
+            got = {
+                r["id"]: r["rank"]
+                for r in global_row_number(
+                    df, ["v", "id"], num_partitions=rank_parts
+                ).collect()
+            }
+        assert got == want, f"AQE {aqe}"
 
 
+# (7, 10): fewer rows than buckets, and some of the six range partitions empty.
 @pytest.mark.parametrize("n,k", [(40, 10), (43, 10), (7, 10), (10, 3)])
 def test_global_ntile_matches_window(spark, n, k):
     df = _df(spark, n, parts=4)
-    got = {
-        r["id"]: r["bucket"]
-        for r in global_ntile(df, ["v", "id"], k, num_partitions=6).collect()
-    }
     w = Window.orderBy("v", "id")
     want = {
         r["id"]: r["bucket"]
@@ -53,7 +66,46 @@ def test_global_ntile_matches_window(spark, n, k):
             "id", F.ntile(k).over(w).cast("long").alias("bucket")
         ).collect()
     }
-    assert got == want
+    for aqe in ("false", "true"):
+        with _aqe(spark, aqe):
+            got = {
+                r["id"]: r["bucket"]
+                for r in global_ntile(df, ["v", "id"], k, num_partitions=6).collect()
+            }
+        assert got == want, f"AQE {aqe}"
+
+
+def _ntile4(df, sort_cols, num_partitions):
+    return global_ntile(df, sort_cols, 4, num_partitions=num_partitions)
+
+
+@pytest.mark.parametrize(
+    "rank", [global_row_number, _ntile4], ids=["row_number", "ntile"]
+)
+@pytest.mark.parametrize("aqe", ["false", "true"], ids=["aqe_off", "aqe_on"])
+def test_global_rank_starts_no_python_worker(spark, rank, aqe):
+    with _aqe(spark, aqe):
+        out = rank(_df(spark, 40, 3), ["v", "id"], num_partitions=4)
+        out.collect()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    assert not any(
+        node in plan for node in ("MapInPandas", "PythonMapInArrow", "EvalPython")
+    ), plan
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_global_rank_column_is_non_nullable_long(spark, ansi):
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        df = _df(spark, 10, 2)
+        ranked = global_row_number(df, ["v", "id"], num_partitions=3)
+        assert ranked.schema["rank"] == StructField("rank", LongType(), False)
+        assert ranked.schema.fields[:-1] == df.schema.fields
+        bucketed = _ntile4(df, ["v", "id"], num_partitions=3)
+        assert bucketed.schema["bucket"].dataType == LongType()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old)
 
 
 def test_global_row_number_is_dense_and_unique(spark):

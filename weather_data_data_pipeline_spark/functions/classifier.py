@@ -273,6 +273,12 @@ def score_frozen_md5(
     Provenance of the literals: scripts/fit_frozen_classifier.py
     (deterministic full-batch GD at dev time).
     """
+    import math
+
+    # a NaN/Inf token makes from_json NULL the whole array, which would
+    # silently turn every score NULL: fail at plan build instead
+    if not all(math.isfinite(w) for w in [*weights, intercept]):
+        raise ValueError("non-finite frozen coefficient")
     nb = len(weights)
     # ONE from_json string literal, not len(weights) F.lit children
     # (the r15/r16 device): Jackson parses each number token via exact

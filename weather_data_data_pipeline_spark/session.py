@@ -88,6 +88,8 @@ def get_spark(
         # messages lose the Python call-site line, nothing else; turn it
         # back on when debugging a plan, not in production paths.
         "spark.python.sql.dataFrameDebugging.enabled": "false",
+        # worker_daemon: 0.28 → 0.05 s of worker CPU per task (CPython 3.11).
+        "spark.python.daemon.module": "weather_data_data_pipeline_spark.worker_daemon",
     }
     if extra_conf:
         conf.update(extra_conf)
@@ -130,7 +132,10 @@ def apply_runtime_conf(spark: SparkSession) -> None:
 
     The correctness driver hands us its own SparkSession; queries must not
     depend on that session having been built by :func:`get_spark`. Only
-    runtime-settable confs belong here.
+    runtime-settable confs belong here. Such a session keeps pyspark's
+    default Python worker daemon, because ``spark.python.daemon.module``
+    is static: its workers re-read ``pyspark.zip`` and the Spark jar on
+    every task (slower, not wrong).
     """
     _ensure_worker_pythonpath()  # before the first python worker spawns
     spark.conf.set("spark.sql.session.timeZone", "UTC")
