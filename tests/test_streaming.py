@@ -1681,3 +1681,244 @@ def test_ohlc_compaction_bound_and_generation_retention(spark, tmp_path):
     assert gens == ["g=1", "g=2"]
     grown = key(S.read_ohlc_candles(spark, out))
     assert grown != full  # batch 3's events merged in
+
+
+def _one_file_per_batch(spark, src, chunks, schema):
+    """Write each chunk of rows as one parquet file under ``src``, with
+    increasing modification times, so a ``maxFilesPerTrigger=1`` stream
+    delivers chunk i as micro-batch i (an empty chunk becomes an empty
+    micro-batch)."""
+    import os
+    import time
+
+    def part_files():
+        if not os.path.isdir(src):
+            return set()
+        return {f for f in os.listdir(src) if f.endswith(".parquet")}
+
+    t0 = time.time() - 100 * len(chunks)
+    for i, chunk in enumerate(chunks):
+        before = part_files()
+        spark.createDataFrame(chunk, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+        added = part_files() - before
+        assert len(added) == 1, added
+        os.utime(os.path.join(src, added.pop()), (t0 + i, t0 + i))
+
+
+def _file_stream(spark, src, schema):
+    return (
+        spark.readStream.schema(schema)
+        .format("parquet")
+        .option("maxFilesPerTrigger", "1")
+        .load(src)
+    )
+
+
+def _sorted_rows(rows):
+    # str() per value: a multiset of rows that sorts with NULLs and
+    # mixed types, and keeps duplicates (unlike a dict keyed by id)
+    return sorted(tuple(str(v) for v in r) for r in rows)
+
+
+def _dsir_replay_case(spark):
+    from weather_data_data_pipeline_spark.functions.importance import (
+        dsir_model_ratios,
+    )
+
+    docs = load(spark, SF_DIR, "documents").select("doc_id", "text", "lang")
+    ratios = dsir_model_ratios(
+        docs, "doc_id", "text", F.col("lang") == "en"
+    ).localCheckpoint()
+    return docs, lambda s, out, ck: S.dsir_score_sink(s, ratios, out, ck)
+
+
+def _quality_replay_case(spark):
+    from weather_data_data_pipeline_spark.plans.selection_queries import (
+        FROZEN_QC_INTERCEPT,
+        FROZEN_QC_WEIGHTS,
+    )
+
+    docs = load(spark, SF_DIR, "documents").select("doc_id", "text")
+    return docs, lambda s, out, ck: S.quality_score_sink(
+        s, FROZEN_QC_WEIGHTS, FROZEN_QC_INTERCEPT, out, ck
+    )
+
+
+def _drift_replay_case(spark):
+    ev = load(spark, SF_DIR, "events").select("ts", "value")
+    counts = ev.groupBy(
+        F.floor(F.col("value") / 50).cast("int").alias("bin")
+    ).agg(F.count("*").alias("n"))
+    tot = counts.agg(F.sum("n").alias("t"))
+    ref = counts.crossJoin(F.broadcast(tot)).select(
+        "bin", (F.col("n") / F.col("t")).alias("p")
+    )
+    return ev, lambda s, out, ck: S.drift_monitor_sink(
+        s, ref, out, ck, bin_width=50.0
+    )
+
+
+def _sampling_replay_case(spark):
+    docs = load(spark, SF_DIR, "documents").select("doc_id", "text", "source")
+    temp_weights = {
+        r["source"]: "0.500000"
+        for r in docs.select("source").distinct().collect()
+    }
+    return docs, lambda s, out, ck: S.sampling_weight_sink(
+        s, temp_weights, None, out, ck, index_path=None
+    )
+
+
+@pytest.mark.parametrize(
+    "make_case",
+    [
+        _dsir_replay_case,
+        _quality_replay_case,
+        _drift_replay_case,
+        _sampling_replay_case,
+    ],
+    ids=["dsir", "quality", "drift", "sampling"],
+)
+def test_per_batch_sinks_converge_when_the_stream_is_redrained(
+    spark, tmp_path, make_case
+):
+    """foreachBatch is at-least-once: draining the same two files again
+    under a fresh checkpoint re-delivers batches 0 and 1. Each sink must
+    rewrite its own batch partitions, so the output row multiset is the
+    same after the second drain, not doubled."""
+    frame, sink = make_case(spark)
+    rows = frame.orderBy(frame.columns[0]).limit(40).collect()
+    src = str(tmp_path / "src")
+    _one_file_per_batch(spark, src, [rows[:20], rows[20:]], frame.schema)
+    out = str(tmp_path / "out")
+
+    def drain(ck):
+        stream = _file_stream(spark, src, frame.schema)
+        S.run_available_now(sink(stream, out, str(tmp_path / ck)))
+        return _sorted_rows(spark.read.parquet(out).collect())
+
+    first = drain("ck1")
+    batch_ids = spark.read.parquet(out).select("batch_id").distinct()
+    assert sorted(r[0] for r in batch_ids.collect()) == [0, 1]
+    assert drain("ck2") == first
+
+
+@pytest.mark.parametrize(
+    "sink",
+    ["idempotent_stream_append", "near_dedup_stream_append", "packing_state"],
+)
+def test_unreadable_destination_stops_the_query(spark, tmp_path, sink):
+    """A destination (or carry-state) directory that exists but cannot
+    be read is not "nothing written yet": the query must fail, and
+    append nothing, rather than skip the anti-join against it."""
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
+    docs = load(spark, SF_DIR, "documents").select("doc_id", "text")
+    src = str(tmp_path / "src")
+    _one_file_per_batch(
+        spark, src, [docs.orderBy("doc_id").limit(20).collect()], docs.schema
+    )
+    dest = str(tmp_path / "dest")
+    state = str(tmp_path / "state")
+    planted = state if sink == "packing_state" else dest
+    os.makedirs(planted)
+    with open(os.path.join(planted, "part-0.parquet"), "wb") as fh:
+        fh.write(b"this is not a parquet file\n")
+    before = sorted(os.listdir(planted))
+
+    stream = _file_stream(spark, src, docs.schema)
+    ck = str(tmp_path / "ck")
+    if sink == "idempotent_stream_append":
+        writer = S.idempotent_stream_append(stream, dest, ["doc_id"], ck)
+    elif sink == "near_dedup_stream_append":
+        writer = S.near_dedup_stream_append(stream, dest, "doc_id", "text", ck)
+    else:
+        writer = S.packing_stream_append(stream, dest, ck, state)
+    with pytest.raises(StreamingQueryException):
+        S.run_available_now(writer)
+    assert sorted(os.listdir(planted)) == before
+
+
+def test_empty_micro_batch_writes_nothing(spark, tmp_path):
+    """A source whose first file has zero rows delivers an empty batch
+    0: no sink may write anything for it, and the next batch must still
+    read the destination normally. (A zero-row partitioned write leaves
+    a directory without data files, which the next batch's read of a
+    delta index cannot infer a schema from.)"""
+    import os
+
+    import pyarrow.parquet as pq
+
+    docs = load(spark, SF_DIR, "documents").select("doc_id", "text", "source")
+    doc_rows = docs.orderBy("doc_id").limit(20).collect()
+    doc_src = str(tmp_path / "doc_src")
+    _one_file_per_batch(spark, doc_src, [[], doc_rows], docs.schema)
+    ev = load(spark, SF_DIR, "events").select(
+        "ts", "event_id", "event_type", "value"
+    )
+    ev_rows = ev.orderBy("ts", "event_id").limit(40).collect()
+    ev_src = str(tmp_path / "ev_src")
+    _one_file_per_batch(spark, ev_src, [[], ev_rows], ev.schema)
+
+    from weather_data_data_pipeline_spark.plans.selection_queries import (
+        FROZEN_QC_INTERCEPT,
+        FROZEN_QC_WEIGHTS,
+    )
+
+    qc_out = str(tmp_path / "qc_out")
+    S.run_available_now(
+        S.quality_score_sink(
+            _file_stream(spark, doc_src, docs.schema),
+            FROZEN_QC_WEIGHTS,
+            FROZEN_QC_INTERCEPT,
+            qc_out,
+            str(tmp_path / "qc_ck"),
+        )
+    )
+    assert [d for d in os.listdir(qc_out) if "=" in d] == ["batch_id=1"]
+    assert spark.read.parquet(qc_out).count() == len(doc_rows)
+
+    sw_out = str(tmp_path / "sw_out")
+    sw_idx = str(tmp_path / "sw_idx")
+    S.run_available_now(
+        S.sampling_weight_sink(
+            _file_stream(spark, doc_src, docs.schema),
+            {r["source"]: "0.500000" for r in doc_rows},
+            None,
+            sw_out,
+            str(tmp_path / "sw_ck"),
+            index_path=sw_idx,
+        )
+    )
+    assert [d for d in os.listdir(sw_out) if "=" in d] == ["batch_id=1"]
+    assert [d for d in os.listdir(sw_idx) if "=" in d] == ["v=1"]
+
+    ohlc_out = str(tmp_path / "ohlc_out")
+    S.run_available_now(
+        S.ohlc_candle_sink(
+            _file_stream(spark, ev_src, ev.schema),
+            ohlc_out,
+            str(tmp_path / "ohlc_ck"),
+        )
+    )
+    assert [d for d in os.listdir(ohlc_out) if "=" in d] == ["v=1"]
+
+    dest = str(tmp_path / "dest")
+    S.run_available_now(
+        S.idempotent_stream_append(
+            _file_stream(spark, ev_src, ev.schema),
+            dest,
+            ["event_id"],
+            str(tmp_path / "dest_ck"),
+        )
+    )
+    got = spark.read.parquet(dest).select(*ev.columns)
+    assert _sorted_rows(got.collect()) == _sorted_rows(ev_rows)
+    data_files = [f for f in os.listdir(dest) if f.endswith(".parquet")]
+    assert data_files
+    for f in data_files:
+        assert pq.read_metadata(os.path.join(dest, f)).num_rows > 0, f

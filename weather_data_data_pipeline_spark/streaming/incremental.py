@@ -16,18 +16,104 @@ loop natively:
 State store size is bounded by the watermark horizon — the property that
 makes this run forever on a cluster where "re-read the whole destination"
 (the reference's approach, full:160) cannot.
+
+The sink contract, shared by every ``foreachBatch`` sink below (all of
+them are wired through :func:`_foreach_batch`):
+
+- **At-least-once delivery.** A micro-batch can be re-delivered with
+  the same ``batch_id`` after a failure, or re-drained from batch 0
+  under a fresh checkpoint; every sink must converge to the same rows.
+- **Empty micro-batches are skipped.** A zero-row batch writes
+  nothing. A zero-row partitioned write leaves a directory without
+  data files, and the next ``spark.read.parquet`` of it (a sink that
+  reads its own deltas back) fails with ``UNABLE_TO_INFER_SCHEMA``; a
+  zero-row append adds an empty file.
+- **Replay-safe layout.** The per-batch sinks write their rows as the
+  partition ``batch_id=<id>`` (``v=<id>`` for the OHLC candles) under
+  dynamic partition overwrite (``sources/layout.py:write_versioned``),
+  so a re-delivered batch rewrites exactly its own partition instead
+  of appending a second copy. A reader of the output directory sees
+  ``batch_id`` as an int partition column. The destination-anti-join
+  sinks (:func:`idempotent_stream_append` and the near-dedup twins)
+  append survivors instead; the anti-join against the destination is
+  what makes their replays no-ops.
+- **Frozen state ⇒ stream equals batch.** A sink's model, eval set or
+  index is built once, at sink construction, and a row's output depends
+  only on the row and that frozen state. Batch boundaries therefore
+  cannot change a row, and the stream's output equals the batch
+  operator over the union of its inputs (pinned by the stream == batch
+  tests).
+- **A destination that cannot be read is an error.** Only a missing
+  path means "nothing written yet" (:func:`_read_parquet_or_none`);
+  any other read failure stops the query rather than appending rows
+  that were never checked against the destination.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
 from weather_data_data_pipeline_spark.operators.joins import anti_join_dedup
+from weather_data_data_pipeline_spark.sources.layout import write_versioned
 from weather_data_data_pipeline_spark.sources.tables import load, normalize_ntz
+
+
+def _foreach_batch(
+    stream: DataFrame,
+    checkpoint: str,
+    write_batch: Callable[[DataFrame, int], None],
+) -> DataStreamWriter:
+    """The one ``foreachBatch`` wiring of the module: checkpointed,
+    update output mode, and ``write_batch`` never sees an empty
+    micro-batch (see the sink contract in the module docstring)."""
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        write_batch(batch_df, batch_id)
+
+    return (
+        stream.writeStream.foreachBatch(run)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("update")
+    )
+
+
+def _per_batch_sink(
+    stream: DataFrame,
+    out_path: str,
+    checkpoint: str,
+    per_batch: Callable[[DataFrame], DataFrame],
+    version_col: str = "batch_id",
+) -> DataStreamWriter:
+    """A sink whose output for a micro-batch is ``per_batch(batch_df)``,
+    written as that batch's ``<version_col>=<batch_id>`` partition of
+    ``out_path`` (the replay-safe layout)."""
+    return _foreach_batch(
+        stream,
+        checkpoint,
+        lambda batch_df, batch_id: write_versioned(
+            per_batch(batch_df), out_path, batch_id, version_col
+        ),
+    )
+
+
+def _read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
+    """``spark.read.parquet(path)``, or None when the path does not
+    exist yet. Every other error re-raises: treating an unreadable
+    destination or state file as "nothing there yet" would skip the
+    anti-join or restart carried state at zero."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as exc:
+        if exc.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -127,19 +213,11 @@ def idempotent_stream_append(
     across restarts."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        try:
-            dest = spark.read.parquet(dest_path)
-        except Exception:
-            dest = None
+        dest = _read_parquet_or_none(batch_df.sparkSession, dest_path)
         out = batch_df if dest is None else anti_join_dedup(batch_df, dest, keys)
         out.write.mode("append").parquet(dest_path)
 
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
+    return _foreach_batch(stream, checkpoint, write_batch)
 
 
 def near_dedup_stream_append(
@@ -169,21 +247,13 @@ def near_dedup_stream_append(
     )
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        try:
-            kept = spark.read.parquet(dest_path)
-        except Exception:
-            kept = None
+        kept = _read_parquet_or_none(batch_df.sparkSession, dest_path)
         out = incremental_near_dedup(
             batch_df, kept, id_col, text_col, threshold=threshold
         )
         out.write.mode("append").parquet(dest_path)
 
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
+    return _foreach_batch(stream, checkpoint, write_batch)
 
 
 def near_dedup_stream_append_indexed(
@@ -211,23 +281,14 @@ def near_dedup_stream_append_indexed(
     """
     from weather_data_data_pipeline_spark.functions.dedup import (
         append_to_minhash_index,
+        build_minhash_index,
+        incremental_near_dedup,
         incremental_near_dedup_indexed,
     )
 
-    from weather_data_data_pipeline_spark.functions.dedup import (
-        incremental_near_dedup,
-    )
-
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            # an empty micro-batch must not append footer-less parquet
-            # dirs (they poison later schema inference on the index)
-            return
         spark = batch_df.sparkSession
-        try:
-            kept = spark.read.parquet(dest_path)
-        except Exception:
-            kept = None  # first batch: no corpus yet
+        kept = _read_parquet_or_none(spark, dest_path)
         try:
             # probe readability, not just existence: a corpus row
             # without a readable index (crash between the two appends
@@ -251,21 +312,13 @@ def near_dedup_stream_append_indexed(
         if degraded:
             # the index didn't cover the kept corpus — rebuild it whole
             # so subsequent batches probe a complete structure
-            from weather_data_data_pipeline_spark.functions.dedup import (
-                build_minhash_index,
-            )
-
             build_minhash_index(
                 spark.read.parquet(dest_path), index_path, id_col, text_col
             )
         else:
             append_to_minhash_index(out, index_path, id_col, text_col)
 
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
+    return _foreach_batch(stream, checkpoint, write_batch)
 
 
 def stream_stream_join(
@@ -463,9 +516,9 @@ def dsir_score_sink(
 ) -> DataStreamWriter:
     """Streaming DSIR scoring: score arriving documents against a
     FROZEN importance model (the (bucket, r) ratio table from
-    functions/importance.py:dsir_model_ratios) and append
-    (batch_id, doc_id, n_grams, log_w) per micro-batch — the live twin
-    of the batch ``dsir_importance_weights`` scoring pass, i.e. how a
+    functions/importance.py:dsir_model_ratios) and write
+    (doc_id, n_grams, log_w) as each micro-batch's partition — the live
+    twin of the batch ``dsir_importance_weights`` scoring pass, i.e. how a
     serving pipeline admits fresh crawl against the model it fit at
     training time.
 
@@ -488,25 +541,18 @@ def dsir_score_sink(
         for row in ratios.select("bucket", "r").collect()
     ]
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        scored = dsir_score_frozen(
+    return _per_batch_sink(
+        stream,
+        out_path,
+        checkpoint,
+        lambda batch_df: dsir_score_frozen(
             batch_df,
             frozen,
             id_col,
             text_col,
             num_buckets=num_buckets,
             include_bigrams=include_bigrams,
-        )
-        scored.withColumn("batch_id", F.lit(int(batch_id))).select(
-            "batch_id", id_col, "n_grams", "log_w"
-        ).write.mode("append").parquet(out_path)
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+        ).select(id_col, "n_grams", "log_w"),
     )
 
 
@@ -521,9 +567,9 @@ def quality_score_sink(
 ) -> DataStreamWriter:
     """Streaming FROZEN-classifier quality scoring: score arriving
     documents with the literal pinned coefficients
-    (functions/classifier.py:score_frozen_md5) and append
-    (batch_id, id, margin, prob_pos, pred) per micro-batch — the live
-    twin of the batch ``quality_classifier_frozen_scores`` query, i.e.
+    (functions/classifier.py:score_frozen_md5) and write
+    (id, margin, prob_pos, pred) as each micro-batch's partition — the
+    live twin of the batch ``quality_classifier_frozen_scores`` query, i.e.
     how a serving pipeline quality-gates fresh crawl with the filter it
     fit at training time.
 
@@ -538,22 +584,14 @@ def quality_score_sink(
         score_frozen_md5,
     )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        scored = score_frozen_md5(
+    return _per_batch_sink(
+        stream,
+        out_path,
+        checkpoint,
+        lambda batch_df: score_frozen_md5(
             batch_df, id_col, text_col, weights, intercept
-        )
-        scored.withColumn("batch_id", F.lit(int(batch_id))).select(
-            "batch_id", id_col, "margin", "prob_pos", "pred"
-        ).write.mode("append").parquet(out_path)
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+        ).select(id_col, "margin", "prob_pos", "pred"),
     )
-
 
 
 def drift_monitor_sink(
@@ -567,7 +605,7 @@ def drift_monitor_sink(
 ) -> DataStreamWriter:
     """Streaming distribution-drift monitor: per micro-batch, bin the
     arriving values on the SAME fixed-width grid as a frozen reference
-    histogram and append one PSI row per batch — the live twin of the
+    histogram and write one PSI row per batch — the live twin of the
     batch ``corpus_drift_psi`` query, i.e. the alert signal a serving
     pipeline watches between retrains.
 
@@ -575,8 +613,8 @@ def drift_monitor_sink(
     from the training window with the same ``bin_width`` (see
     tests/test_streaming.py for the two-line recipe). Per batch: one
     conditional aggregate over the batch (bins), a broadcast join to
-    the (tiny) reference, and a one-row PSI reduce — appended as
-    (batch_id, n_rows, psi). Bins present in only one side contribute
+    the (tiny) reference, and a one-row reduce to (n_rows, psi), the
+    batch's partition. Bins present in only one side contribute
     through the eps-smoothed terms, matching the batch query's
     formula. State is just the frozen reference; nothing grows.
     """
@@ -584,42 +622,33 @@ def drift_monitor_sink(
         F.col("bin").cast("int").alias("bin"), F.col("p").alias("p")
     )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    def psi(batch_df: DataFrame) -> DataFrame:
         binned = batch_df.select(
             F.floor(F.col(value_col) / bin_width).cast("int").alias("bin")
         )
         q = binned.groupBy("bin").agg(F.count("*").alias("n"))
         tot = q.agg(F.sum("n").alias("t"))
         qn = q.crossJoin(F.broadcast(tot)).select(
-            "bin", (F.col("n") / F.col("t")).alias("q")
+            "bin", (F.col("n") / F.col("t")).alias("q"), "t"
         )
         joined = ref.join(qn, "bin", "full_outer").select(
             F.coalesce("p", F.lit(0.0)).alias("p"),
             F.coalesce("q", F.lit(0.0)).alias("q"),
+            "t",
         )
-        psi_row = joined.agg(
+        # t is the batch's row count on every bin the batch holds
+        return joined.agg(
+            F.max("t").cast("long").alias("n_rows"),
             F.round(
                 F.sum(
                     (F.col("p") - F.col("q"))
                     * F.log((F.col("p") + eps) / (F.col("q") + eps))
                 ),
                 5,
-            ).alias("psi")
-        ).collect()[0]
-        n_rows = batch_df.count()
-        spark.createDataFrame(
-            [(int(batch_id), int(n_rows), float(psi_row["psi"]))],
-            "batch_id long, n_rows long, psi double",
-        ).write.mode("append").parquet(out_path)
+            ).alias("psi"),
+        )
 
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
+    return _per_batch_sink(stream, out_path, checkpoint, psi)
 
 
 def sampling_weight_sink(
@@ -636,8 +665,8 @@ def sampling_weight_sink(
     """Streaming FROZEN-mix sampling weights: score arriving documents
     with the fit-time artifacts — literal per-source temperature
     weights and a persisted normalized-digest duplicate-count index —
-    and append (batch_id, id, weight triple, final weight) per
-    micro-batch; the live twin of the batch ``doc_sampling_weights``
+    and write (id, weight triple, final weight) as each micro-batch's
+    partition; the live twin of the batch ``doc_sampling_weights``
     query, i.e. how a serving pipeline prices fresh crawl into the
     training mix without recomputing corpus state.
 
@@ -653,17 +682,15 @@ def sampling_weight_sink(
     duplicates that arrived in EARLIER micro-batches of this same
     stream are not counted, so the index must be refreshed externally
     between runs (ADVICE r6). Pass ``index_path`` to make the sink
-    self-maintaining: each batch appends its own digest counts as a
+    self-maintaining: each batch writes its own digest counts as a
     delta partition (``v=<batch_id>``), and every batch's history is
     ``history ∪ Σ deltas with v < batch_id`` — so cross-batch stream
     duplicates discount exactly like the batch recompute over the full
-    prefix. Replays overwrite their own delta and output partitions
-    (dynamic partition overwrite), so at-least-once delivery converges
-    to the same bytes. At real scale, compact the delta partitions
-    periodically; the per-batch read is one groupBy over them.
+    prefix. Both writes are versioned partitions, so a replay rewrites
+    its own delta as well as its own output. At real scale, compact the
+    delta partitions periodically; the per-batch read is one groupBy
+    over them.
     """
-    from pyspark.errors import AnalysisException
-
     from weather_data_data_pipeline_spark.functions.text import (
         digest_counts,
         doc_sampling_weights_frozen,
@@ -672,16 +699,11 @@ def sampling_weight_sink(
     def _accumulated_history(spark, batch_id: int) -> DataFrame | None:
         if index_path is None:
             return history
-        try:
-            deltas = (
-                spark.read.parquet(index_path)
-                .where(F.col("v") < F.lit(int(batch_id)))
-                .select("digest", "c_hist")
+        deltas = _read_parquet_or_none(spark, index_path)
+        if deltas is not None:
+            deltas = deltas.where(F.col("v") < F.lit(int(batch_id))).select(
+                "digest", "c_hist"
             )
-        except AnalysisException as exc:
-            if "PATH_NOT_FOUND" not in str(exc):
-                raise
-            deltas = None
         frames = [f for f in (history, deltas) if f is not None]
         if not frames:
             return None
@@ -693,8 +715,6 @@ def sampling_weight_sink(
         )
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         scored = doc_sampling_weights_frozen(
             batch_df,
             temp_weights,
@@ -703,31 +723,24 @@ def sampling_weight_sink(
             text_col=text_col,
             source_col=source_col,
         )
-        out = scored.withColumn("batch_id", F.lit(int(batch_id))).select(
+        write_versioned(
+            scored.select(
+                id_col,
+                "dedup_weight",
+                "quality_weight",
+                "temp_weight",
+                "final_weight",
+            ),
+            out_path,
+            batch_id,
             "batch_id",
-            id_col,
-            "dedup_weight",
-            "quality_weight",
-            "temp_weight",
-            "final_weight",
         )
-        if index_path is None:
-            out.write.mode("append").parquet(out_path)
-            return
-        out.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("batch_id").parquet(out_path)
-        digest_counts(batch_df, text_col).withColumn(
-            "v", F.lit(int(batch_id))
-        ).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("v").parquet(index_path)
+        if index_path is not None:
+            write_versioned(
+                digest_counts(batch_df, text_col), index_path, batch_id
+            )
 
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
+    return _foreach_batch(stream, checkpoint, write_batch)
 
 
 def _read_carry_state(spark, state_path: str) -> tuple[int, int, int]:
@@ -737,19 +750,10 @@ def _read_carry_state(spark, state_path: str) -> tuple[int, int, int]:
     transient listing/IO failure as "fresh stream" would silently
     restart the offset at 0 and corrupt every later bin assignment
     (ADVICE r6)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        row = spark.read.parquet(state_path).collect()[0]
-    except AnalysisException as exc:
-        cond = ""
-        try:
-            cond = exc.getCondition() or ""
-        except Exception:
-            pass
-        if "PATH_NOT_FOUND" in cond or "PATH_NOT_FOUND" in str(exc):
-            return -1, 0, 0
-        raise
+    state = _read_parquet_or_none(spark, state_path)
+    if state is None:
+        return -1, 0, 0
+    row = state.collect()[0]
     return (
         int(row["last_batch_id"]),
         int(row["total_before"]),
@@ -796,11 +800,7 @@ def packing_stream_append(
     write_batch = _packing_batch_writer(
         out_path, state_path, context_tokens, id_col, text_col
     )
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
+    return _foreach_batch(stream, checkpoint, write_batch)
 
 
 def _packing_batch_writer(
@@ -818,8 +818,6 @@ def _packing_batch_writer(
     )
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         last_id, before, after = _read_carry_state(spark, state_path)
         if batch_id < last_id:
@@ -833,7 +831,6 @@ def _packing_batch_writer(
         )
         rt = global_running_sum(base, [id_col], "n_tok", out_col="rt")
         packed = rt.select(
-            F.lit(int(batch_id)).alias("batch_id"),
             id_col,
             "n_tok",
             F.floor(
@@ -845,11 +842,9 @@ def _packing_batch_writer(
             .cast("bigint")
             .alias("bin"),
         )
-        # dynamic overwrite of ONLY this batch's partition: a replay
-        # rewrites its own rows instead of appending duplicates
-        packed.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("batch_id").parquet(out_path)
+        # overwrite of ONLY this batch's partition: a replay rewrites
+        # its own rows instead of appending duplicates
+        write_versioned(packed, out_path, batch_id, "batch_id")
         new_total = int(offset) + int(
             base.agg(F.sum("n_tok")).collect()[0][0] or 0
         )
@@ -876,8 +871,8 @@ def ess_monitor_sink(
     (functions/text.py:doc_sampling_weights_frozen — literal
     temperature weights + optional persisted duplicate index) and
     rolled up to per-source Kish ESS via the SHARED
-    functions/text.py:ess_rollup fragment, appending
-    (batch_id, source, n_docs, sum_w, sum_w2, ess, ess_ratio) — the
+    functions/text.py:ess_rollup fragment, writing
+    (source, n_docs, sum_w, sum_w2, ess, ess_ratio) per batch — the
     live twin of the batch ``sampling_ess_by_source`` query, i.e. the
     dashboard row a serving pipeline watches to catch a crawl source
     whose weight mass is collapsing onto a handful of documents
@@ -885,16 +880,13 @@ def ess_monitor_sink(
     Because the scorer and the rollup are the same compiled
     expressions as the batch path, per-batch output equals the batch
     recompute on that batch's documents bit-for-bit (pinned in
-    tests/test_streaming.py). Replays dynamic-overwrite their own
-    output partition, so at-least-once delivery converges."""
+    tests/test_streaming.py)."""
     from weather_data_data_pipeline_spark.functions.text import (
         doc_sampling_weights_frozen,
         ess_rollup,
     )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def rollup(batch_df: DataFrame) -> DataFrame:
         scored = doc_sampling_weights_frozen(
             batch_df,
             temp_weights,
@@ -903,20 +895,11 @@ def ess_monitor_sink(
             text_col=text_col,
             source_col=source_col,
         )
-        ess_rollup(scored, source_col, "final_weight").withColumn(
-            "batch_id", F.lit(int(batch_id))
-        ).select(
-            "batch_id", source_col, "n_docs", "sum_w", "sum_w2",
-            "ess", "ess_ratio",
-        ).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("batch_id").parquet(out_path)
+        return ess_rollup(scored, source_col, "final_weight").select(
+            source_col, "n_docs", "sum_w", "sum_w2", "ess", "ess_ratio"
+        )
 
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
+    return _per_batch_sink(stream, out_path, checkpoint, rollup)
 
 
 def decontamination_sink(
@@ -931,7 +914,7 @@ def decontamination_sink(
     """Streaming decontamination CLEANING: every arriving train document
     has its eval-overlapping n-gram spans removed
     (functions/dedup.py:decontamination_clean) and the cleaned rows
-    append as (batch_id, id, clean_text, n_tokens, kept_tokens) — the
+    land as (id, clean_text, n_tokens, kept_tokens) — the
     live form of the batch ``decontamination_clean_corpus`` query, i.e.
     how fresh crawl is scrubbed against a FROZEN eval set before it can
     enter the training mix.
@@ -939,8 +922,7 @@ def decontamination_sink(
     Because the eval set is frozen, a document's cleaned form depends
     only on itself — batch boundaries are trivially irrelevant and the
     stream equals the batch run over the union bit-for-bit (pinned in
-    tests/test_streaming.py). Replays dynamic-overwrite their own
-    output partition, so at-least-once delivery converges.
+    tests/test_streaming.py).
 
     The eval set is FROZEN, so its gram hashes, the bloom sizing count,
     and the filter literal are computed ONCE here at sink construction
@@ -954,22 +936,13 @@ def decontamination_sink(
 
     eval_state = decontamination_eval_state(eval_df, id_col, text_col, n=n)
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        cleaned = decontamination_clean(
+    return _per_batch_sink(
+        stream,
+        out_path,
+        checkpoint,
+        lambda batch_df: decontamination_clean(
             batch_df, None, id_col, text_col, n=n, eval_state=eval_state
-        )
-        cleaned.withColumn("batch_id", F.lit(int(batch_id))).select(
-            "batch_id", id_col, "clean_text", "n_tokens", "kept_tokens"
-        ).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("batch_id").parquet(out_path)
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+        ).select(id_col, "clean_text", "n_tokens", "kept_tokens"),
     )
 
 
@@ -986,36 +959,29 @@ def semantic_decontamination_sink(
     is scored by its max cosine against the FROZEN eval embedding set
     (the shared functions/similarity.py:nearest_in_set GEMM kernel,
     so batch and stream cannot drift)
-    and appended as (batch_id, id, nearest_eval_id, max_cosine,
-    contaminated) — the live twin of the batch
-    ``semantic_decontamination`` query. A vector's score depends only
-    on itself and the frozen eval set, so the stream equals the batch
-    run over the union bit-for-bit (pinned in tests/test_streaming.py);
-    replays dynamic-overwrite their own output partition."""
+    and written as (id, nearest_eval_id, max_cosine, contaminated) —
+    the live twin of the batch ``semantic_decontamination`` query. A
+    vector's score depends only on itself and the frozen eval set, so
+    the stream equals the batch run over the union bit-for-bit (pinned
+    in tests/test_streaming.py)."""
     from weather_data_data_pipeline_spark.functions.similarity import (
         nearest_in_set,
     )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        best = nearest_in_set(batch_df, eval_df, id_col, vec_col)
-        best.select(
-            F.lit(int(batch_id)).alias("batch_id"),
+    return _per_batch_sink(
+        stream,
+        out_path,
+        checkpoint,
+        lambda batch_df: nearest_in_set(
+            batch_df, eval_df, id_col, vec_col
+        ).select(
             id_col,
             F.col("nearest_id").alias("nearest_eval_id"),
             F.round("cosine_raw", 4).alias("max_cosine"),
             (F.col("cosine_raw") >= F.lit(threshold)).cast("int").alias(
                 "contaminated"
             ),
-        ).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("batch_id").parquet(out_path)
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+        ),
     )
 
 
@@ -1029,10 +995,9 @@ def ohlc_candle_sink(
     twin of the batch ``events_ohlc_15min`` query. Each micro-batch is
     aggregated to PARTIAL candles with the SAME shared raw-agg fragment
     the batch query compiles (operators/aggregates.py:ohlc_raw_aggs),
-    then written as a ``v=<batch_id>`` delta partition — the repo's
-    replay-safe layout: a re-delivered batch dynamic-overwrites exactly
-    its own partition and converges to the same bytes, so at-least-once
-    delivery never double-counts a candle.
+    then written as a ``v=<batch_id>`` delta partition (the module's
+    replay-safe layout, so a re-delivered batch never double-counts a
+    candle).
 
     The merge on (bucket_start, event_type) happens at READ
     (:func:`read_ohlc_candles`) with the associative combiner fragment:
@@ -1048,23 +1013,15 @@ def ohlc_candle_sink(
         ohlc_raw_aggs,
     )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        part = batch_df.groupBy(
+    return _per_batch_sink(
+        stream,
+        out_path,
+        checkpoint,
+        lambda batch_df: batch_df.groupBy(
             ohlc_bucket(interval_sec=interval_sec).alias("bucket_start"),
             "event_type",
-        ).agg(*ohlc_raw_aggs())
-        part.withColumn("v", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "v"
-        ).parquet(out_path)
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+        ).agg(*ohlc_raw_aggs()),
+        version_col="v",
     )
 
 
@@ -1101,8 +1058,6 @@ def _ohlc_state(spark, out_path: str):
     """(base_partials|None, covered_v, deltas|None): the latest complete
     base generation, the batch-id watermark it covers, and the raw
     delta frame (None when no v=* partition exists)."""
-    from pyspark.errors import AnalysisException
-
     gens = _ohlc_base_gens(spark, out_path)
     base, covered = None, -1
     if gens:
@@ -1330,40 +1285,31 @@ def url_blocklist_monitor_sink(
     """Live twin of the batch ``domain_blocklist_rollup`` policy
     preview: per micro-batch, canonicalize the arriving URLs with the
     SAME kernels the batch query compiles (functions/url.py), roll up
-    per registrable domain, flag blocklisted domains, and append
-    (batch_id, domain, n_urls, blocked, batch_share) — the monitor a
+    per registrable domain, flag blocklisted domains, and write
+    (domain, n_urls, blocked, batch_share) per batch — the monitor a
     crawl front-end runs so a blocked domain surging to 30% of a fetch
     batch pages someone BEFORE the batch lands in the corpus. The
     share is per-BATCH by construction (a monitor alarms on the
     arriving traffic, not the accumulated corpus; the batch query
     remains the corpus-wide view). Decimal-pinned shares, so the
-    stream==batch equality test compares bits. Replay-safe like the
-    module's other sinks: rows land as a ``batch_id=<id>`` partition
-    under dynamic overwrite, so an at-least-once re-delivery rewrites
-    exactly its own partition instead of appending a duplicate copy."""
+    stream==batch equality test compares bits."""
     from weather_data_data_pipeline_spark.functions.url import (
         canonical_host,
         domain_share_rollup,
         registrable_domain,
     )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        dom = batch_df.select(
-            registrable_domain(canonical_host(url_col)).alias("domain")
-        )
-        out = domain_share_rollup(
-            dom, blocked_domains, "batch_share"
-        ).select(F.lit(int(batch_id)).alias("batch_id"), "*")
-        out.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("batch_id").parquet(out_path)
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    return _per_batch_sink(
+        stream,
+        out_path,
+        checkpoint,
+        lambda batch_df: domain_share_rollup(
+            batch_df.select(
+                registrable_domain(canonical_host(url_col)).alias("domain")
+            ),
+            blocked_domains,
+            "batch_share",
+        ),
     )
 
 
@@ -1383,25 +1329,23 @@ def winnow_match_sink(
     live twin of the batch ``winnowing_overlap_pairs`` family for the
     serving shape where one side is a reference corpus: every arriving
     document is fingerprinted and probed against the index's postings,
-    and matches append as (batch_id, id, match_id, n_shared).
+    and matches land as (id, match_id, n_shared).
 
     Because the index is frozen and winnowing fingerprints a document
     in isolation, a document's matches depend only on itself — batch
     boundaries are irrelevant and the stream equals the batch probe
-    over the union bit-for-bit (pinned in tests/test_streaming.py).
-    Replay-safe like the module's other sinks: rows land as a
-    ``batch_id=<id>`` partition under dynamic overwrite, so an
-    at-least-once re-delivery rewrites exactly its own partition.
+    over the union bit-for-bit (pinned in tests/test_winnow.py).
     State never grows with the stream — it IS the index, and the
     stop-fingerprint cap was already applied at index build."""
     from weather_data_data_pipeline_spark.functions.winnow import (
         winnow_probe_index,
     )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        matches = winnow_probe_index(
+    return _per_batch_sink(
+        stream,
+        out_path,
+        checkpoint,
+        lambda batch_df: winnow_probe_index(
             batch_df.sparkSession,
             index_path,
             batch_df,
@@ -1410,17 +1354,7 @@ def winnow_match_sink(
             k=k,
             w=w,
             min_shared=min_shared,
-        )
-        matches.withColumn("batch_id", F.lit(int(batch_id))).select(
-            "batch_id", id_col, "match_id", "n_shared"
-        ).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("batch_id").parquet(out_path)
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+        ).select(id_col, "match_id", "n_shared"),
     )
 
 
@@ -1438,25 +1372,24 @@ def mem_match_sink(
     positional-gram index (functions/dedup.py:build_mem_index) — the
     live twin of the batch ``exact_substring_mems`` family for the
     serving shape where one side is a reference corpus: every arriving
-    document's MEMs against the index append as (batch_id, id,
-    match_id, start_a, start_b, match_tokens). Same contract as
+    document's MEMs against the index land as (id, match_id, start_a,
+    start_b, match_tokens). Same contract as
     :func:`winnow_match_sink`, exact spans instead of sampled
     fingerprints: the index is frozen and a document's positional grams
     depend only on itself, so batch boundaries cannot change a MEM row
     and the stream equals the batch probe over the union bit-for-bit
-    (pinned in tests/test_span_removal.py). Replay-safe: rows land as a
-    ``batch_id=<id>`` partition under dynamic overwrite, so an
-    at-least-once re-delivery rewrites exactly its own partition. State
-    never grows with the stream — it IS the index, and the stop-gram
-    cap was already applied at index build."""
+    (pinned in tests/test_span_removal.py). State never grows with the
+    stream — it IS the index, and the stop-gram cap was already applied
+    at index build."""
     from weather_data_data_pipeline_spark.functions.dedup import (
         mem_probe_index,
     )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        mems = mem_probe_index(
+    return _per_batch_sink(
+        stream,
+        out_path,
+        checkpoint,
+        lambda batch_df: mem_probe_index(
             batch_df.sparkSession,
             index_path,
             batch_df,
@@ -1464,22 +1397,7 @@ def mem_match_sink(
             text_col,
             n=n,
             min_tokens=min_tokens,
-        )
-        mems.withColumn("batch_id", F.lit(int(batch_id))).select(
-            "batch_id",
-            id_col,
-            "match_id",
-            "start_a",
-            "start_b",
-            "match_tokens",
-        ).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("batch_id").parquet(out_path)
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+        ).select(id_col, "match_id", "start_a", "start_b", "match_tokens"),
     )
 
 
@@ -1499,26 +1417,25 @@ def mem_clean_sink(
     where one side is a frozen reference/training corpus: every
     arriving document has its maximal >=min_tokens-token spans shared
     with the index CUT (the reference keeps its copy) and lands
-    reassembled as (batch_id, id, clean_text, n_tokens, kept_tokens).
+    reassembled as (id, clean_text, n_tokens, kept_tokens).
     Same contract as :func:`mem_match_sink`, with the rebuild executed
     instead of reported: the index is frozen and a document's grams,
     cut islands, and rebuilt text depend only on itself, so batch
     boundaries cannot change a cleaned row and the stream equals the
     batch :func:`~weather_data_data_pipeline_spark.functions.dedup.
     mem_probe_clean` over the union bit-for-bit (pinned in
-    tests/test_span_removal.py). Replay-safe: rows land as a
-    ``batch_id=<id>`` partition under dynamic overwrite, so an
-    at-least-once re-delivery rewrites exactly its own partition.
-    State never grows with the stream — it IS the index, and the
-    stop-gram cap was already applied at index build."""
+    tests/test_span_removal.py). State never grows with the stream —
+    it IS the index, and the stop-gram cap was already applied at index
+    build."""
     from weather_data_data_pipeline_spark.functions.dedup import (
         mem_probe_clean,
     )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        cleaned = mem_probe_clean(
+    return _per_batch_sink(
+        stream,
+        out_path,
+        checkpoint,
+        lambda batch_df: mem_probe_clean(
             batch_df.sparkSession,
             index_path,
             batch_df,
@@ -1526,21 +1443,7 @@ def mem_clean_sink(
             text_col,
             n=n,
             min_tokens=min_tokens,
-        )
-        cleaned.withColumn("batch_id", F.lit(int(batch_id))).select(
-            "batch_id",
-            id_col,
-            "clean_text",
-            "n_tokens",
-            "kept_tokens",
-        ).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("batch_id").parquet(out_path)
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+        ).select(id_col, "clean_text", "n_tokens", "kept_tokens"),
     )
 
 
@@ -1558,45 +1461,25 @@ def ccnet_clean_sink(
     batch ``ccnet_line_clean`` for the serving shape where the
     boilerplate frequency state is frozen from a reference crawl: every
     arriving document has its reference-boilerplate lines dropped and
-    lands reassembled as (batch_id, id, clean_text, n_lines,
-    kept_lines). Completes the index/probe/sink trio for the CCNet
+    lands reassembled as (id, clean_text, n_lines, kept_lines).
+    Completes the index/probe/sink trio for the CCNet
     family (MinHash, winnow, and MEM already have theirs).
 
     A document's cleaned form depends only on itself and the frozen
     head, so batch boundaries cannot change a row and the stream equals
     the batch :func:`~weather_data_data_pipeline_spark.functions.text.
     line_boilerplate_probe_clean` over the union bit-for-bit (pinned in
-    tests/test_line_dedup.py). Replay-safe: rows land as a
-    ``batch_id=<id>`` partition under dynamic overwrite, so an
-    at-least-once re-delivery rewrites exactly its own partition. State
-    never grows with the stream — it IS the Zipf-bounded index head,
-    broadcast into every micro-batch."""
+    tests/test_line_dedup.py). State never grows with the stream — it
+    IS the Zipf-bounded index head, broadcast into every micro-batch."""
     from weather_data_data_pipeline_spark.functions.text import (
         line_boilerplate_probe_clean,
     )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        cleaned = line_boilerplate_probe_clean(
-            batch_df.sparkSession,
-            index_path,
-            batch_df,
-            id_col,
-            text_col,
-        )
-        cleaned.withColumn("batch_id", F.lit(int(batch_id))).select(
-            "batch_id",
-            id_col,
-            "clean_text",
-            "n_lines",
-            "kept_lines",
-        ).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("batch_id").parquet(out_path)
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    return _per_batch_sink(
+        stream,
+        out_path,
+        checkpoint,
+        lambda batch_df: line_boilerplate_probe_clean(
+            batch_df.sparkSession, index_path, batch_df, id_col, text_col
+        ).select(id_col, "clean_text", "n_lines", "kept_lines"),
     )
