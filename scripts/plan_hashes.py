@@ -1,22 +1,17 @@
 #!/usr/bin/env python
-"""Plan-hash ledger: normalized ANALYZED-plan fingerprints per query.
-
-Implements the plan-stable freshness amendment (VERDICT r13 ask #2): a
-query whose analyzed logical plan is byte-identical (after normalizing
-the session-dependent tokens below) since its last green driver stamp
-earns a 6-round verification budget instead of 5; plan-changed or new
-queries keep the 5-round budget and must re-earn in the next gate
-window.
+"""Plan-hash gate: normalized ANALYZED-plan fingerprints per query.
 
 This script analyzes every ORACLE-BEARING registered query at sf0.01,
 normalizes its ANALYZED logical plan (see ``formatted_plan`` for why
-not the physical plan), and maintains ``scripts/plan_hashes.json``::
+not the physical plan), compares the fingerprints with
+``scripts/plan_hashes.json``::
 
-    {query: {"hash": sha256-hex, "since_round": R}}
+    {query: sha256-hex}
 
-where ``since_round`` is the round the CURRENT hash was first observed —
-it only moves forward when the hash changes. A query is "plan-stable
-since its stamp" iff ``since_round <= ledger_stamp``.
+and reports which plans changed and which queries are new. A changed
+hash means the authored query changed: run it through
+``scripts/driver_mirror.py`` and say so in CHANGES.md, then rewrite the
+file (run without ``--dry-run``).
 
 Normalization (what makes a fingerprint stable across sessions):
 - expression IDs  ``#123`` / ``#123L``          → ``#x``
@@ -25,8 +20,8 @@ Normalization (what makes a fingerprint stable across sessions):
   (index-building queries write to per-run temp dirs) → ``<path>``
 - byte/row statistics ``Statistics(...)``        → elided
 Queries whose plan embeds genuinely run-varying content (random temp
-table names inside SQL text, literal timestamps) will simply never look
-stable — they conservatively keep the 5-round budget.
+table names inside SQL text, literal timestamps) report CHANGED on
+every run.
 
 SCOPE CAVEAT — checkpoint-truncated plans (ADVICE r15 #5): a query that
 eagerly localCheckpoints an intermediate (span_dedup_profile,
@@ -34,32 +29,32 @@ winnowing_overlap_pairs, the _pair_overlap family, minhash pair
 queries) hashes a plan whose upstream lineage is a LogicalRDD stub, so
 the fingerprint does NOT attest the checkpointed helper's lineage —
 exactly the blindness the snapshot_* write side has (their plan is a
-post-write scan). Changes to those HELPERS must be hand-pinned into
-registry._ROUND_HEAD; the full-surface two-scale mirrors still
-value-check every query every round.
+post-write scan). A change to one of those HELPERS is invisible here:
+list it in CHANGES.md and run its queries through
+``scripts/driver_mirror.py``.
 
 SCOPE CAVEAT — AQE-posture-dependent plans (ADVICE r16):
 ``functions/winnow.py:hot_cut_side`` reads the session's AQE conf at
 plan build and hints the join only when AQE is off. This script's
-session is ``get_spark``'s default (AQE on), so the ledger fingerprints
+session is ``get_spark``'s default (AQE on), so the file fingerprints
 only the unhinted variant of the winnow queries; the hinted plan that
 runs under ``tune_for_working_set``'s small-data posture (AQE off) is
-never fingerprinted. A change to the hinted side must be hand-pinned
-like the checkpointed helpers above.
+never fingerprinted. A change to the hinted side is invisible here
+too; treat it like the checkpointed helpers above.
 
 (The physical-plan protocol this replaced had two measured leaks —
 CBO statistics from predecessors' eager actions, and a cached-table
 flap on ``embedding_drift_by_label`` — both gone under analyzed-plan
 hashing with cold per-query state.)
 
-The ledger was written with 32 shuffle partitions. Analyzed plans that
+The file was written with 32 shuffle partitions. Analyzed plans that
 embed the partition count (``repartitionByRange(n, ...)`` in
 operators/ranking.py, the semantic-dedup and packing queries) hash
 differently under any other ``SPARK_GRAFT_CPUS``, so pin it.
 
 Usage:
-    SPARK_GRAFT_CPUS=32 python scripts/plan_hashes.py --round 14           # update the ledger
-    SPARK_GRAFT_CPUS=32 python scripts/plan_hashes.py --round 14 --dry-run # report, no write
+    SPARK_GRAFT_CPUS=32 python scripts/plan_hashes.py            # report, rewrite the file
+    SPARK_GRAFT_CPUS=32 python scripts/plan_hashes.py --dry-run  # report, no write
 """
 
 from __future__ import annotations
@@ -103,7 +98,7 @@ def normalize(plan: str) -> str:
 
 
 def formatted_plan(spark, df) -> str:
-    """The ANALYZED logical plan — the amendment's question is "did the
+    """The ANALYZED logical plan — the gate's question is "did the
     author change this query", and the analyzed plan is a pure function
     of the query expression + input schemas. The PHYSICAL plan is not:
     it folds in cache state and CBO statistics that other queries'
@@ -121,9 +116,8 @@ def compute_hashes() -> dict[str, str]:
     explain), alphabetical sweep. Query fns make plan choices off
     session state (cache substitution, ``load_fanout``'s
     getNumPartitions branch), so any shared warmth would make a
-    fingerprint depend on which queries ran before it — the ledger's
-    LRU rotation or one new query would then spuriously re-fingerprint
-    untouched queries every round."""
+    fingerprint depend on which queries ran before it — one new query
+    would then spuriously re-fingerprint untouched ones."""
     from weather_data_data_pipeline_spark.sources.tables import clear_cache
 
     spark = get_spark(app_name="plan_hashes")
@@ -132,7 +126,7 @@ def compute_hashes() -> dict[str, str]:
     for name in sorted(registry.query_names()):
         q = registry.get_query(name)
         if q.oracle is None:
-            continue  # rows-only queries are mirror-maintained (VERDICT r13)
+            continue  # rows-only: no oracle twin, checked by their closures
         # COLD state per query: fns make plan choices off session state
         # (load_fanout's getNumPartitions branch reads the table cache),
         # so any shared warmth makes a fingerprint depend on which
@@ -153,7 +147,6 @@ def compute_hashes() -> dict[str, str]:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--round", type=int, required=True)
     ap.add_argument("--dry-run", action="store_true")
     args = ap.parse_args()
 
@@ -164,29 +157,21 @@ def main() -> int:
         prev = {}
 
     now = compute_hashes()
-    merged: dict[str, dict] = {}
-    changed, new, stable = [], [], []
-    for name, h in sorted(now.items()):
-        old = prev.get(name)
-        if old is None:
-            merged[name] = {"hash": h, "since_round": args.round}
-            new.append(name)
-        elif old["hash"] != h:
-            merged[name] = {"hash": h, "since_round": args.round}
-            changed.append(name)
-        else:
-            merged[name] = old
-            stable.append(name)
+    new = sorted(set(now) - set(prev))
+    changed = sorted(n for n in set(now) & set(prev) if now[n] != prev[n])
     for name in sorted(set(prev) - set(now)):
         print(f"  dropped (no longer oracle-bearing): {name}")
 
-    print(f"stable: {len(stable)}  changed: {len(changed)}  new: {len(new)}")
+    print(
+        f"stable: {len(now) - len(changed) - len(new)}  "
+        f"changed: {len(changed)}  new: {len(new)}"
+    )
     for name in changed:
-        print(f"  plan CHANGED: {name} (since_round -> {args.round})")
+        print(f"  plan CHANGED: {name}")
     if not args.dry_run:
         with open(HASH_FILE, "w") as f:
-            json.dump(merged, f, indent=1, sort_keys=True)
-        print(f"wrote {HASH_FILE} ({len(merged)} queries)")
+            json.dump(now, f, indent=1, sort_keys=True)
+        print(f"wrote {HASH_FILE} ({len(now)} queries)")
     return 0
 
 

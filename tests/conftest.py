@@ -5,6 +5,7 @@ width, order-insensitive value comparison)."""
 from __future__ import annotations
 
 import math
+import tempfile
 
 import duckdb
 import pytest
@@ -20,6 +21,17 @@ SF_DIR = "/root/testdata/sf0.001"
 # checkout; the suite writes nothing there.
 settings.register_profile("no-database", database=None)
 settings.load_profile("no-database")
+
+
+@pytest.hookimpl(tryfirst=True)
+def pytest_configure(config):
+    # pytest-benchmark, when installed, creates its storage directory
+    # (.benchmarks/ in the working directory) at start-up even though no
+    # test uses its fixture. Point it at a temp dir the run removes.
+    if hasattr(config.option, "benchmark_storage"):
+        storage = tempfile.TemporaryDirectory(prefix="benchmarks-")
+        config.add_cleanup(storage.cleanup)
+        config.option.benchmark_storage = storage.name
 
 
 @pytest.fixture(scope="session", autouse=True)

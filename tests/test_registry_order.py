@@ -1,102 +1,16 @@
-"""Registration-order contract for the correctness driver.
+"""Order and closure contract of the query registry.
 
-The driver verifies a bounded prefix (~50 queries) of ``queries()`` per
-round; the computed ``registry._PRIORITY`` is therefore the verification
-schedule. Since round 4 the schedule is MECHANICAL (VERDICT r3 ask #3):
-
-    _ROUND_HEAD (new/changed this round)
-    + never-green queries (no verification_ledger.json row)
-    + everything else, least-recently-verified first (ties alphabetical)
-
-These tests pin the policy itself, not a hand-maintained name list.
+``registry.query_names()`` lists every oracle-bearing query in
+registration order, then every rows-only query in registration order,
+so a bounded prefix of it (a correctness gate's window) is fully
+hash-checkable against the DuckDB oracle.
 """
 
-import json
 from pathlib import Path
 
 from weather_data_data_pipeline_spark import registry
 
 WINDOW = 50
-
-# Mirror of registry._ROUND_HEAD — a deliberate copy so that editing the
-# head without thinking about the verification window fails a test.
-ROUND_HEAD = (
-    # r16 head (19) = 1 NEW row + 16 plan-changed rows (mechanical,
-    # scripts/plan_hashes.py --round 16) + 2 hand-pins for changes the
-    # analyzed-plan hash cannot see (checkpoint-truncated lineage).
-    # Includes the VERDICT r15 #3 semantic_dedup_keep/_capped re-stamp.
-    # No §2 staleness pins: the r15 pins are r15-stamped (age 1).
-    #
-    # r16 NEW: df-capped ngram-Jaccard bench row (VERDICT r15 #1)
-    "ngram_jaccard_pairs_capped",
-    # VERDICT r15 #3 re-stamp + nearest_centroid single-parse build
-    "semantic_dedup_keep",
-    "semantic_dedup_keep_capped",
-    "embedding_kmeans_assign",
-    "embedding_outlier_zscores",
-    # zero-job hot-set broadcast guard (posture-dependent hint)
-    "ngram_jaccard_pairs",
-    "ngram_containment_pairs",
-    "winnowing_overlap_pairs",
-    # rho scalar stats via one window
-    "rho_excess_loss_select",
-    # from_json single-node frozen literals
-    "dsir_score_frozen",
-    "quality_classifier_frozen_scores",
-    "curation_pipeline_frozen_e2e",
-    # bm25 parsed-expr builders
-    "bm25_search_topk",
-    "hybrid_search_rrf",
-    "hybrid_rerank_topk",
-    # URL split-pipeline parsed-expr twins
-    "url_domain_dedup_report",
-    "domain_blocklist_rollup",
-    # hand-pins (plan-hash-blind changes)
-    "minhash_dedup_pairs_portable",
-    "semantic_decontamination",
-)
-
-
-def _ledger() -> dict[str, int]:
-    path = (
-        Path(registry.__file__).resolve().parent / "verification_ledger.json"
-    )
-    return json.loads(path.read_text())
-
-
-def test_round_head_matches_registry():
-    assert tuple(ROUND_HEAD) == registry._ROUND_HEAD
-
-
-def test_round_head_all_registered():
-    names = set(registry.query_names())
-    missing = [n for n in registry._ROUND_HEAD if n not in names]
-    assert not missing, f"_ROUND_HEAD references unregistered queries: {missing}"
-
-
-def test_ledger_names_all_registered():
-    names = set(registry.query_names())
-    stale = [n for n in _ledger() if n not in names]
-    assert not stale, f"ledger references unregistered queries: {stale}"
-
-
-def test_head_is_prefix():
-    names = registry.query_names()
-    assert tuple(names[: len(ROUND_HEAD)]) == tuple(ROUND_HEAD)
-
-
-def _oracle_rest():
-    """Oracle-bearing names after the head, in driver order — the
-    population the scheduling invariants apply to (rows-only queries
-    are demoted below ALL oracle-bearing ones since r9, VERDICT r8
-    ask #3, so they never reach the gate window as `err` rows)."""
-    oracles = registry.oracle_sql()
-    head = set(ROUND_HEAD)
-    return [
-        n
-        for n in registry.query_names()
-        if n not in head and n in oracles
-    ]
 
 
 def test_rows_only_never_in_gate_window():
@@ -120,54 +34,6 @@ def test_rows_only_never_in_gate_window():
     assert last_oracle < first_rows_only
 
 
-def test_never_green_queries_precede_ledger_tail():
-    """An oracle-bearing query with no green driver row ever must sort
-    before any already-verified oracle-bearing query (right after the
-    head)."""
-    ledger = _ledger()
-    rest = _oracle_rest()
-    never = [n for n in rest if n not in ledger]
-    if never:
-        first_green = min(rest.index(n) for n in rest if n in ledger)
-        last_never = max(rest.index(n) for n in never)
-        assert last_never < first_green, (
-            f"never-verified queries {never} must precede verified ones"
-        )
-
-
-def test_tail_is_least_recently_verified_first():
-    ledger = _ledger()
-    tail = [n for n in _oracle_rest() if n in ledger]
-    tail_rounds = [ledger[n] for n in tail]
-    assert tail_rounds == sorted(tail_rounds), (
-        "verified queries must be ordered by ascending last-green round"
-    )
-    # deterministic tie-break: alphabetical within a round
-    for i in range(1, len(tail)):
-        if ledger[tail[i - 1]] == ledger[tail[i]]:
-            assert tail[i - 1] < tail[i]
-
-
-def test_window_spends_slots_on_oldest():
-    """The driver window = the head plus the stalest queries; nothing
-    fresher than necessary may occupy a slot."""
-    ledger = _ledger()
-    names = registry.query_names()
-    head = set(ROUND_HEAD)  # forced re-verification, exempt from freshness
-    oracles = registry.oracle_sql()
-    window = [n for n in names[:WINDOW] if n not in head]
-    outside = [n for n in names[WINDOW:] if n in oracles]
-    worst_in_window = max(
-        (ledger[n] for n in window if n in ledger), default=0
-    )
-    best_outside = min(
-        (ledger[n] for n in outside if n in ledger), default=10**9
-    )
-    assert worst_in_window <= best_outside, (
-        "a fresher query occupies a window slot while a staler one waits"
-    )
-
-
 def test_ordering_preserves_full_surface():
     # Reordering must not drop or duplicate anything.
     names = registry.query_names()
@@ -175,6 +41,12 @@ def test_ordering_preserves_full_surface():
     assert set(names) == set(registry.queries())
     # every oracle key is a registered query
     assert set(registry.oracle_sql()) <= set(names)
+    # within each group, oracle-bearing and rows-only, registration order
+    oracles = registry.oracle_sql()
+    registered = list(registry._REGISTRY)
+    assert names == [n for n in registered if n in oracles] + [
+        n for n in registered if n not in oracles
+    ]
 
 
 def test_each_name_binds_distinct_function():
@@ -212,17 +84,10 @@ def test_rows_only_queries_declare_resolvable_closure():
 
 
 def test_rows_only_closures_stay_fresh():
-    """ADVICE r9 #2: demoting rows-only queries below the gate window
-    means their external verification rests entirely on verified_by
-    closures — so the closures themselves must stay FRESH, mirroring
-    the oracle-bearing staleness pins. A registered TWIN must have a
-    green gate row within the same ~4-round rotation budget the §2
-    pins use (or be queued in the current head); a tests/ closure must
-    actually reference the query or its function (pytest re-runs it
-    every round, so reference == re-verification)."""
-    ledger = _ledger()
-    latest = max(ledger.values())
-    budget = 4
+    """A rows-only query rests on its verified_by closure, so a tests/
+    closure must actually reference the query or its function (pytest
+    re-runs it every time, so reference == re-verification). A twin
+    closure is oracle-checked itself (see the test above)."""
     for name in registry.query_names():
         q = registry.get_query(name)
         if q.oracle is not None:
@@ -234,56 +99,3 @@ def test_rows_only_closures_stay_fresh():
                 f"{name}: closure file {vb} never references the query — "
                 "the pin is not actually re-run against it"
             )
-        else:
-            twin_round = ledger.get(vb, 0)
-            assert (
-                twin_round >= latest - budget or vb in registry._ROUND_HEAD
-            ), (
-                f"{name}: twin {vb} last gate-green r{twin_round} "
-                f"(> {budget} rounds stale) — pin it into _ROUND_HEAD"
-            )
-
-
-def test_reference_queries_pinned_before_staleness():
-    """VERDICT r13 ask #4: a SURVEY-§2 / reference-tagged query must
-    never reach a freshness deadline without a head pin. If its stamp
-    age exceeds 3 rounds (the pre-deadline pin point the
-    scalar_transforms r13 and weather-twin r14 pins used), it must be
-    in _ROUND_HEAD this round."""
-    ledger = _ledger()
-    latest = max(ledger.values())
-    oracles = registry.oracle_sql()
-    offenders = []
-    for name in registry.query_names():
-        q = registry.get_query(name)
-        if "reference" not in q.tags or name not in oracles:
-            continue
-        stamp = ledger.get(name, 0)
-        if latest - stamp > 3 and name not in registry._ROUND_HEAD:
-            offenders.append((name, stamp))
-    assert not offenders, (
-        f"reference-surface queries >3 rounds stale without a head pin: "
-        f"{offenders}"
-    )
-
-
-def test_every_due_query_is_inside_the_gate_window():
-    """Plan-stable freshness amendment (VERDICT r13 ask #2): every
-    oracle-bearing query whose deadline falls at the NEXT driver round
-    (latest ledger round + 1) must sit inside the ~50-query window the
-    driver will actually verify — 6-round budget for plan-stable
-    queries (scripts/plan_hashes.json unchanged since the stamp / r13
-    bootstrap), 5-round otherwise, no deadline for mirror-maintained
-    rows-only queries."""
-    ledger = _ledger()
-    next_round = max(ledger.values()) + 1
-    window = set(registry.query_names()[:WINDOW])
-    overdue = [
-        (name, deadline, registry.freshness_budget(name))
-        for name, deadline in registry.freshness_deadlines().items()
-        if deadline <= next_round and name not in window
-    ]
-    assert not overdue, (
-        f"queries due at r{next_round} outside the gate window "
-        f"(name, deadline, budget): {overdue}"
-    )

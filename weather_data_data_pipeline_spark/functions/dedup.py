@@ -1437,14 +1437,13 @@ def span_dedup_stats(
     )
 
 
-# r16 note on the three F.broadcast(hot) stop-gram cuts below
-# (maximal_match_pairs, build_mem_index, _self_cut_islands): they carry
-# the same rows/max_df-bounded hot head as _pair_overlap, which r16
-# switched to the posture-dependent winnow.hot_cut_side guard. These
-# three keep the static hint THIS round only because flipping them
-# re-fingerprints five exact-substring gate rows in a window already
-# full of due-at-r16 freshness cohort; adopt hot_cut_side here in r17
-# when the window clears (queued in OPTIMIZATION_r16.md).
+# The three F.broadcast(hot) stop-gram cuts below (maximal_match_pairs,
+# build_mem_index, _self_cut_islands) carry the same rows/max_df-bounded
+# hot head as _pair_overlap, which uses the posture-dependent
+# winnow.hot_cut_side guard. They keep the static hint: switching them
+# to hot_cut_side is a plan change on exact_substring_mems, the
+# llm_curation benchmark's tail operation, so it is left to ROADMAP
+# direction 2, where that operation's cost is measured.
 def maximal_match_pairs(
     df: DataFrame,
     id_col: str,

@@ -284,8 +284,9 @@ def ngram_contamination_prescreen(
     n: int = 3,
 ) -> DataFrame:
     """:func:`ngram_contamination` with an EXACT broadcast prescreen on
-    the train side — the one-job batch shape adopted by the r14 replan
-    (VERDICT r13 ask #3; study: scripts/replan_contamination_r14.py).
+    the train side — the one-job batch shape. A same-session study
+    (BASELINE.md) timed it level with the exact twin, while the Bloom
+    form's extra build action was its whole gap to that twin.
 
     The bounded eval set's distinct gram hashes broadcast to the train
     gram scan as a left-semi probe BEFORE any shuffle, so only train

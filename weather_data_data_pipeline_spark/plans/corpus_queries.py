@@ -282,8 +282,8 @@ def decontamination_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     "interleaved round): the frozen-literal filter is the shape for "
     "streaming sinks and reusable eval state, where the extra "
     "bounded build ACTION amortizes across batches — for a one-shot "
-    "batch query that action is pure overhead (measured as the "
-    "entire over-bar gap, scripts/replan_contamination_r14.py), so "
+    "batch query that action is pure overhead (in a same-session "
+    "study it was the entire gap to the exact twin, BASELINE.md), so "
     "the benched batch form is corpus_contamination_prescreen.",
     tags=("llm", "dedup", "quality", "serving"),
 )

@@ -2063,11 +2063,11 @@ def span_dedup_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # truncates the analyzed plan at a LogicalRDD, so this query's (and
     # winnowing_overlap_pairs') plan-hash fingerprint does NOT attest
     # the upstream hashed_shingles / winnow_fingerprints lineage — the
-    # same gate blindness registry hand-pins for the snapshot write
-    # side. A change to those helpers must be hand-pinned into
-    # _ROUND_HEAD (the full-surface mirrors still value-check it every
-    # round). Building this plan also launches the checkpoint job as a
-    # side effect; bench.py's release_transients reclaims the RDD.
+    # same gate blindness the snapshot write side has. A change to
+    # those helpers must be listed in CHANGES.md and run through
+    # scripts/driver_mirror.py, which value-checks this query. Building
+    # this plan also launches the checkpoint job as a side effect;
+    # bench.py's release_transients reclaims the RDD.
     docs = load_fanout(spark, sf_dir, "documents")
     spans = hashed_shingles(docs, "doc_id", "text", n=8).localCheckpoint(
         eager=True

@@ -7,6 +7,10 @@ this for the correctness driver; tests iterate it for local oracle parity.
 Contract (driver): each spark_fn takes (spark, sf_dir) and returns a
 DataFrame whose column NAMES match the oracle SQL's output columns —
 the driver sorts columns by name before value-hashing.
+
+Order: ``queries()`` / ``query_names()`` list the oracle-bearing queries
+in registration order (the order their ``@register`` decorators ran),
+then the rows-only queries in registration order.
 """
 
 from __future__ import annotations
@@ -56,217 +60,6 @@ _QUERY_MODULES = (
 
 _loaded = False
 
-# Driver-facing registration order. The correctness driver verifies a
-# bounded prefix of the registry (~50 queries per round), so ordering is
-# the verification schedule. Since round 4 (VERDICT r3 ask #3) the
-# schedule is MECHANICAL, not hand-ordered:
-#
-#   _PRIORITY = _ROUND_HEAD                      (new/changed this round)
-#             + never-green queries              (no ledger row)
-#             + everything else, least-recently-verified first
-#
-# where "verified" comes from ``verification_ledger.json`` — a
-# machine-derived map {query: last green driver round} regenerated from
-# the repo-root CORRECTNESS_r*.json files by ``scripts/update_ledger.py``
-# after each round. Ties within a round break alphabetically so the order
-# is deterministic. Names the ledger and head both miss keep module
-# registration order after the computed prefix (see ``_ordered``).
-
-# Hand-maintained per round: queries that are NEW this round or whose
-# PLAN/ORACLE changed this round and must (re-)earn a green row. Keep
-# tests/test_registry_order.py's ROUND_HEAD copy in sync.
-_ROUND_HEAD: tuple[str, ...] = (
-    # r16 head (19): 1 NEW row + 16 r16 OPTIMIZATION-round plan-changed
-    # rows + 2 hand-pins (OPTIMIZATION_r16.md; every
-    # change value-verified hash-equal at sf0.01 in same-day targeted
-    # mirrors AND at both scales in the close mirrors, but a changed
-    # plan must re-earn its driver stamp). Includes the VERDICT r15 #3
-    # re-stamp of semantic_dedup_keep/_capped — changed-plan rows are
-    # never again deferred past the gate.
-    #
-    # (no §2 staleness pins this round: the r15 pins are r15-stamped,
-    # age 1 — the >3-round pin rule does not trigger)
-    # r16 NEW: the df-capped ngram-Jaccard bench row (VERDICT r15 #1)
-    "ngram_jaccard_pairs_capped",
-    # VERDICT r15 #3 re-stamp + r16 nearest_centroid single-parse build
-    "semantic_dedup_keep",
-    "semantic_dedup_keep_capped",
-    # nearest_centroid single-parse consumers (same folded literals,
-    # named_struct spelling — value-verified hash-equal)
-    "embedding_kmeans_assign",
-    "embedding_outlier_zscores",
-    # zero-job hot-set broadcast guard (hint now posture-dependent —
-    # VERDICT-scoped to winnow + _pair_overlap; the span/mem static
-    # hints keep their r15 plans this round, see dedup.py r16 note)
-    "ngram_jaccard_pairs",
-    "ngram_containment_pairs",
-    "winnowing_overlap_pairs",
-    # scalar stats derived from uni via one window (VERDICT r15 #5)
-    "rho_excess_loss_select",
-    # from_json single-node literals (frozen DSIR micros / frozen
-    # classifier weights) — the r15 bloom/centroid device extended
-    "dsir_score_frozen",
-    "quality_classifier_frozen_scores",
-    "curation_pipeline_frozen_e2e",
-    # bm25 parsed-expr builders
-    "bm25_search_topk",
-    "hybrid_search_rrf",
-    "hybrid_rerank_topk",
-    # URL split-pipeline parsed-expr twins
-    "url_domain_dedup_report",
-    "domain_blocklist_rollup",
-    # HAND-PINS — changed code the analyzed-plan hash cannot see
-    # (checkpoint-truncated lineage / index write side; the
-    # plan_hashes.py scope caveat):
-    # - signature-stage fanout sits above the sigs localCheckpoint
-    "minhash_dedup_pairs_portable",
-    # - nearest_centroid change sits above the CC collect boundary
-    "semantic_decontamination",
-)
-
-
-# --- plan-stable freshness amendment (VERDICT r13 ask #2, granted) ----
-#
-# Every oracle-bearing query must re-earn a green driver-gate stamp
-# within its freshness budget. The budget is 5 rounds; a query whose
-# ANALYZED LOGICAL PLAN is provably unchanged since its last green
-# stamp earns 6 (the authored query cannot have changed if the
-# analyzed plan is byte-identical, and the full-surface two-scale
-# mirror re-verifies values every round anyway; physical regressions
-# are separately gated by explain_audit Exchange counts + the
-# shuffle-byte gate). Plan stability comes from
-# scripts/plan_hashes.json — normalized analyzed-plan fingerprints
-# maintained by scripts/plan_hashes.py, whose ``since_round`` only
-# moves forward when a hash changes.
-#
-# Bootstrap: the baseline hashes were computed AGAINST THE ACTUAL
-# r13-close tree (git worktree of commit 3d15971, same protocol), so
-# ``since_round = 13`` is a true attestation — a query stamped r10
-# with an unchanged-since-r13 hash counts as plan-stable (its r13
-# form ran green in the r13 two-scale mirror; the per-round shuffle
-# gate covered r10→r13). Rows-only queries are
-# MIRROR-MAINTAINED: they can never enter the oracle gate, their
-# verified_by closures re-run every round, so they carry no deadline
-# and cost no window slot.
-FRESHNESS_BUDGET = 5
-FRESHNESS_BUDGET_STABLE = 6
-PLAN_HASH_BOOTSTRAP_ROUND = 13
-
-_PLAN_HASH_CACHE: dict[str, dict] | None = None
-
-
-def _load_plan_hashes() -> dict[str, dict]:
-    global _PLAN_HASH_CACHE
-    if _PLAN_HASH_CACHE is not None:
-        return _PLAN_HASH_CACHE
-    import json
-    from pathlib import Path
-
-    path = (
-        Path(__file__).resolve().parent.parent
-        / "scripts"
-        / "plan_hashes.json"
-    )
-    try:
-        _PLAN_HASH_CACHE = json.loads(path.read_text())
-    except (OSError, ValueError):
-        _PLAN_HASH_CACHE = {}
-    return _PLAN_HASH_CACHE
-
-
-def freshness_budget(name: str) -> int | None:
-    """Rounds this query's current green stamp stays fresh — 6 when the
-    plan hash attests the plan is unchanged since the stamp, 5
-    otherwise; None for rows-only queries (mirror-maintained, no
-    deadline).
-
-    The extended budget requires BOTH ``since_round <= stamp`` and
-    ``stamp >= PLAN_HASH_BOOTSTRAP_ROUND`` (ADVICE r14): the bootstrap
-    hashes were computed on the r13 tree, so for a pre-r13 stamp they
-    cannot attest the plan was unchanged between the stamp and r13 —
-    those stamps keep the base 5-round budget and re-earn under the
-    strict invariant."""
-    _ensure_loaded()
-    if _REGISTRY[name].oracle is None:
-        return None
-    stamp = _load_ledger().get(name)
-    meta = _load_plan_hashes().get(name)
-    since = None if meta is None else meta.get("since_round")
-    if (
-        stamp is not None
-        and since is not None
-        and stamp >= PLAN_HASH_BOOTSTRAP_ROUND
-        and since <= stamp
-    ):
-        return FRESHNESS_BUDGET_STABLE
-    return FRESHNESS_BUDGET
-
-
-def freshness_deadlines() -> dict[str, int]:
-    """{oracle-bearing query: round by which it must re-earn a green
-    driver stamp}. Never-green queries get deadline 0 (verify ASAP)."""
-    _ensure_loaded()
-    ledger = _load_ledger()
-    out: dict[str, int] = {}
-    for q in _REGISTRY.values():
-        if q.oracle is None:
-            continue
-        stamp = ledger.get(q.name)
-        out[q.name] = (
-            0 if stamp is None else stamp + freshness_budget(q.name)
-        )
-    return out
-
-
-_LEDGER_CACHE: dict[str, int] | None = None
-
-
-def _load_ledger() -> dict[str, int]:
-    # the ledger only changes between rounds (scripts/update_ledger.py),
-    # never within a process — cache it so queries()/query_names() in a
-    # driver or bench loop don't re-read and re-parse the file per call
-    global _LEDGER_CACHE
-    if _LEDGER_CACHE is not None:
-        return _LEDGER_CACHE
-    import json
-    from pathlib import Path
-
-    path = Path(__file__).resolve().parent / "verification_ledger.json"
-    try:
-        _LEDGER_CACHE = {
-            str(k): int(v) for k, v in json.loads(path.read_text()).items()
-        }
-    except (OSError, ValueError):
-        _LEDGER_CACHE = {}
-    return _LEDGER_CACHE
-
-
-def _compute_priority(registered: list[str] | None = None) -> tuple[str, ...]:
-    """Head + never-green + least-recently-verified-first.
-
-    ``registered`` (module registration order) supplies names the ledger
-    has never seen — they sort to the front (right after the head),
-    because a query with no green driver row ever is the most urgent to
-    verify. With ``registered=None`` only head + ledger names are ordered
-    (enough for the common case where every registered query is one or
-    the other).
-    """
-    ledger = _load_ledger()
-    head = [n for n in _ROUND_HEAD]
-    seen = set(head)
-    never_green = [
-        n for n in (registered or []) if n not in ledger and n not in seen
-    ]
-    seen.update(never_green)
-    tail = sorted(
-        (n for n in ledger if n not in seen),
-        key=lambda n: (ledger[n], n),
-    )
-    return tuple(head + never_green + tail)
-
-
-_PRIORITY: tuple[str, ...] = _compute_priority()
-
 
 def register(
     name: str,
@@ -280,9 +73,9 @@ def register(
             raise ValueError(f"duplicate query name: {name}")
         for other in _REGISTRY.values():
             if other.fn is fn:
-                # stacked @register decorators bind two names to ONE
-                # function — the r5 bpe_token_budget/doremi mixup; each
-                # registered name must map to a distinct callable
+                # stacked @register decorators would bind two names to
+                # ONE function; each registered name must map to a
+                # distinct callable
                 raise ValueError(
                     f"query {name!r} would re-register the same function "
                     f"already bound to {other.name!r}"
@@ -304,25 +97,10 @@ def _ensure_loaded() -> None:
 
 
 def _ordered() -> list[Query]:
-    """Registry values in driver-facing order (see _compute_priority),
-    with every ORACLE-BEARING query ahead of every rows-only one.
-
-    The driver's correctness gate verifies a bounded prefix (~50) of
-    this order, and a rows-only query sampled there records
-    ``err: no_oracle`` — which reads as "broken" in the gate file even
-    though each rows-only query carries a ``verified_by`` closure (a
-    registered oracle-checked portable twin, or an exact pinned unit
-    suite). Demoting rows-only queries below the full oracle-bearing
-    set (188 > the window) keeps the gate window 100% hash-checkable
-    (VERDICT r8 ask #3) while the full surface stays registered and
-    benchable."""
-    order = _compute_priority(list(_REGISTRY))
-    prioritized = [_REGISTRY[n] for n in order if n in _REGISTRY]
-    rest = [q for q in _REGISTRY.values() if q.name not in set(order)]
-    allq = prioritized + rest
-    return [q for q in allq if q.oracle is not None] + [
-        q for q in allq if q.oracle is None
-    ]
+    """Registry values in registration order, every ORACLE-BEARING query
+    ahead of every rows-only one (a stable sort), so any prefix of
+    ``query_names()`` is fully hash-checkable against its DuckDB twin."""
+    return sorted(_REGISTRY.values(), key=lambda q: q.oracle is None)
 
 
 def queries() -> dict[str, QueryFn]:
