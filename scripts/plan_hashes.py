@@ -19,6 +19,8 @@ Normalization (what makes a fingerprint stable across sessions):
 - filesystem paths ``file:/...`` and ``[...parquet...]`` location blobs
   (index-building queries write to per-run temp dirs) → ``<path>``
 - byte/row statistics ``Statistics(...)``        → elided
+- global-rank partition offsets ``array(0, 316, …)[SPARK_PARTITION_ID()]``
+  (data-derived per run, operators/ranking.py) → ``array(<offsets>)``
 Queries whose plan embeds genuinely run-varying content (random temp
 table names inside SQL text, literal timestamps) report CHANGED on
 every run.
@@ -88,6 +90,13 @@ _NORM = (
     (re.compile(r"\[[^\[\]]*\.parquet[^\[\]]*\]"), "[<path>]"),
     (re.compile(r"Statistics\([^)]*\)"), "Statistics(<elided>)"),
     (re.compile(r"Location: \S+ \[<path>?[^\]]*\]?"), "Location: <path>"),
+    # operators/ranking.py:_ranked writes each range partition's row
+    # offset into the plan; the range bounds come from a sample, so the
+    # offsets differ from run to run on unchanged data
+    (
+        re.compile(r"array\([^()]*\)\[SPARK_PARTITION_ID\(\)\]"),
+        "array(<offsets>)[SPARK_PARTITION_ID()]",
+    ),
 )
 
 

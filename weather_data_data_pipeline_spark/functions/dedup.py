@@ -22,6 +22,15 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .winnow import hot_cut_side
+
+# Hash column of a persisted MEM postings index (build_mem_index). It
+# holds _positional_gram_hashes' token-slot hash, whose values differ
+# from the gram-string hash that indexes written before it stored as
+# ``h``; the distinct name makes index_io.read_postings refuse such an
+# index instead of probing it into silently finding no matches.
+MEM_HASH_COL = "h_slots"
+
 DEFAULT_NUM_PERM = 64
 DEFAULT_BANDS = 16  # 16 bands × 4 rows — S-curve threshold ≈ 0.5 Jaccard
 
@@ -220,10 +229,6 @@ def _pair_overlap(
         # count-based guard measured +13% on ngram_containment_pairs).
         # NULL-key note: anti-join never matches NULL h, safe because
         # hashed_shingles emits non-null xxhash64 longs only.
-        from weather_data_data_pipeline_spark.functions.winnow import (
-            hot_cut_side,
-        )
-
         sh = sh.join(hot_cut_side(hot), "h", "left_anti")
         # cardinalities over the capped vocabulary, from the capped index
         counts = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
@@ -1321,7 +1326,7 @@ def _span_islands(
 
     ``toks`` is (id, _t token array, _len); ``islands`` is one row per
     merged duplicate interval (id, _isl, s, e) — positional n-grams
-    hashed AFTER the posexplode (whole-stage codegen), one map-side-
+    hashed over their token slots (whole-stage codegen), one map-side-
     combined corpus-frequency aggregate on the 8-byte hash, an
     inverted-index join back to positions, and a per-doc lag/running-sum
     window merging overlapping fixed-width spans (overlap iff
@@ -1358,20 +1363,33 @@ def _span_toks(df: "DataFrame", id_col: str, text_col: str) -> "DataFrame":
 def _positional_gram_hashes(
     toks: "DataFrame", id_col: str, n: int
 ) -> "DataFrame":
-    """(id, pos, h): xxhash64 of each positional n-gram — hashed AFTER
-    the posexplode so the hash stays in whole-stage codegen."""
+    """(id, pos, h): one row per positional n-gram, ``pos`` its 0-based
+    start token and ``h`` the xxhash64 of its n token SLOTS
+    ``_t[pos] … _t[pos+n-1]``. Explode and hash both stay in whole-stage
+    codegen: no higher-order function and no gram string is built. A
+    fresh pass over the 5,000 sf0.1 documents (8-grams grouped by ``h``;
+    JVM CPU, C1 JIT) costs about 2.1 s, against 4.3 s for hashing a
+    ``concat_ws`` of each gram built in a ``transform`` lambda.
+
+    ``h`` is only ever a join, Bloom and stop-gram key. Tokens come from
+    a split on ``' '``, so a token tuple and its space-joined gram
+    string determine each other and equality on ``h`` is equality on
+    the gram text. The values differ from ``xxhash64`` of the joined
+    string, so a persisted MEM index carries them under its own column
+    name (:data:`MEM_HASH_COL`)."""
+    pos = F.col("pos")
     return (
         toks.where(F.col("_len") >= n)
         .select(
             id_col,
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(1), F.col("_len") - (n - 1)),
-                    lambda i: F.concat_ws(" ", F.slice("_t", i, n)),
-                )
-            ).alias("pos", "gram"),
+            "_t",
+            F.explode(F.sequence(F.lit(0), F.col("_len") - n)).alias("pos"),
         )
-        .select(id_col, "pos", F.xxhash64("gram").alias("h"))
+        .select(
+            id_col,
+            "pos",
+            F.xxhash64(*[F.col("_t")[pos + k] for k in range(n)]).alias("h"),
+        )
     )
 
 
@@ -1437,13 +1455,11 @@ def span_dedup_stats(
     )
 
 
-# The three F.broadcast(hot) stop-gram cuts below (maximal_match_pairs,
-# build_mem_index, _self_cut_islands) carry the same rows/max_df-bounded
-# hot head as _pair_overlap, which uses the posture-dependent
-# winnow.hot_cut_side guard. They keep the static hint: switching them
-# to hot_cut_side is a plan change on exact_substring_mems, the
-# llm_curation benchmark's tail operation, so it is left to ROADMAP
-# direction 2, where that operation's cost is measured.
+# The stop-gram cuts below (maximal_match_pairs, build_mem_index,
+# _self_cut_islands) carry the same rows/max_df-bounded hot head as
+# _pair_overlap and go through the same winnow.hot_cut_side guard: a
+# static broadcast hint only under the small-data posture (AQE off),
+# AQE's runtime statistics at scale.
 def maximal_match_pairs(
     df: DataFrame,
     id_col: str,
@@ -1473,17 +1489,18 @@ def maximal_match_pairs(
     are 0-based token offsets (the positional-gram index convention of
     :func:`_positional_gram_hashes`).
 
-    Scale shape: positional gram hashes (codegen'd, hashed after the
-    posexplode) checkpoint once as the inverted index; grams in more
-    than ``max_df`` documents' positions leave the feature space via
-    the broadcast anti-join stop-gram cut (the bounded-join device of
-    the whole pair family — pair traffic ≤ cap × surviving postings,
-    never corpus-quadratic; a hot boilerplate gram inside a long match
-    splits the reported run, which is the documented capped-vocabulary
-    semantics). The diagonal islands use the pos − row_number() trick
-    (one window over rows already keyed by (id_a, id_b, diag) — pos_a
-    is unique within a diagonal by construction) so runs need no lag
-    self-comparison, and the output is one row per MEM, not per gram.
+    Scale shape: positional gram hashes (codegen'd token-slot hashes)
+    checkpoint once as the inverted index; grams in more than
+    ``max_df`` documents' positions leave the feature space via the
+    anti-join stop-gram cut behind the ``hot_cut_side`` broadcast
+    guard (the bounded-join device of the whole pair family — pair
+    traffic ≤ cap × surviving postings, never corpus-quadratic; a hot
+    boilerplate gram inside a long match splits the reported run, which
+    is the documented capped-vocabulary semantics). The diagonal
+    islands use the pos − row_number() trick (one window over rows
+    already keyed by (id_a, id_b, diag) — pos_a is unique within a
+    diagonal by construction) so runs need no lag self-comparison, and
+    the output is one row per MEM, not per gram.
     """
     min_grams = min_tokens - n + 1
     if min_grams < 1:
@@ -1500,7 +1517,7 @@ def maximal_match_pairs(
         .where(F.col("_df") > max_df)
         .select("h")
     )
-    kept = grams.join(F.broadcast(hot), "h", "left_anti")
+    kept = grams.join(hot_cut_side(hot), "h", "left_anti")
     a = kept.select(
         F.col(id_col).alias("id_a"), F.col("pos").alias("pos_a"), "h"
     )
@@ -1551,18 +1568,19 @@ def build_mem_index(
     max_df: int = 100,
 ) -> None:
     """Materialize the positional-gram index a served maximal-exact-
-    match probe needs: ``<path>/postings`` = (id, pos, h) rows with
-    grams occurring more than ``max_df`` times across the reference
-    corpus REMOVED at build time (the stop-gram cap is a property of
-    the reference corpus, so paying it once here keeps every probe
+    match probe needs: ``<path>/postings`` = (id, pos,
+    :data:`MEM_HASH_COL`) rows with grams occurring more than
+    ``max_df`` times across the reference corpus REMOVED at build time
+    (the stop-gram cap is a property of the reference corpus, so
+    paying it once here keeps every probe
     free of the per-gram frequency pass — the
     :func:`~weather_data_data_pipeline_spark.functions.winnow.build_winnow_index`
     convention). The index is three longs per kept gram position; at
     100 TB it partitions/buckets by hash like any posting list.
 
-    On-disk columns are CANONICAL — (id, pos, h) — regardless of
-    ``id_col``, so a probe never needs to know what the build-side
-    frame called its id column (ADVICE r12: a probe called with a
+    On-disk columns are CANONICAL — (id, pos, :data:`MEM_HASH_COL`) —
+    regardless of ``id_col``, so a probe never needs to know what the
+    build-side frame called its id column (ADVICE r12: a probe called with a
     different ``id_col`` than the build used to fail with a
     missing-column error)."""
     from pyspark import StorageLevel
@@ -1578,8 +1596,8 @@ def build_mem_index(
             .where(F.col("_df") > max_df)
             .select("h")
         )
-        grams.join(F.broadcast(hot), "h", "left_anti").select(
-            F.col(id_col).alias("id"), "pos", "h"
+        grams.join(hot_cut_side(hot), "h", "left_anti").select(
+            F.col(id_col).alias("id"), "pos", F.col("h").alias(MEM_HASH_COL)
         ).write.mode("overwrite").parquet(f"{path}/postings")
     finally:
         grams.unpersist()
@@ -1599,9 +1617,9 @@ def mem_probe_index(
     of :func:`maximal_match_pairs` where one side is a frozen reference
     corpus (attribution / contamination gating on arriving documents).
     Only the new batch pays gram extraction; the reference side costs a
-    postings read (canonical (id, pos, h) columns — the probe's
-    ``id_col`` names only the PROBE frame's id), and the build-time
-    stop-gram cap bounds the join.
+    postings read (canonical (id, pos, :data:`MEM_HASH_COL`) columns —
+    the probe's ``id_col`` names only the PROBE frame's id), and the
+    build-time stop-gram cap bounds the join.
     ``start_a`` is the 0-based offset in the PROBE document, ``start_b``
     in the matched reference document; rows where a probe document
     matches ITSELF in the index (same id) are dropped so re-screening
@@ -1616,8 +1634,10 @@ def mem_probe_index(
         read_postings,
     )
 
-    postings = read_postings(spark, path, ("id", "pos", "h")).select(
-        F.col("id").alias("match_id"), F.col("pos").alias("pos_b"), "h"
+    postings = read_postings(spark, path, ("id", "pos", MEM_HASH_COL)).select(
+        F.col("id").alias("match_id"),
+        F.col("pos").alias("pos_b"),
+        F.col(MEM_HASH_COL).alias("h"),
     )
     fresh = _positional_gram_hashes(
         _span_toks(new_docs, id_col, text_col), id_col, n
@@ -1887,7 +1907,7 @@ def _self_cut_islands(
     hashes plus match rows (bounded: the corpus-wide stop-gram cut
     ``max_df`` bounds within-document multiplicity too, so a group
     expands to at most max_df·(max_df−1)/2 pairs and hot boilerplate
-    grams leave the feature space entirely via the broadcast
+    grams leave the feature space entirely via the guarded
     anti-join). The diagonal islands reuse the pos − row_number()
     device; interval overlap merges in :func:`_merge_intervals`. No
     driver state, no collect."""
@@ -1906,7 +1926,7 @@ def _self_cut_islands(
         .where(F.col("_df") > max_df)
         .select("h")
     )
-    kept = grams.join(F.broadcast(hot), "h", "left_anti")
+    kept = grams.join(hot_cut_side(hot), "h", "left_anti")
     reps = (
         kept.groupBy(id_col, "h")
         .agg(F.sort_array(F.collect_list("pos")).alias("_ps"))

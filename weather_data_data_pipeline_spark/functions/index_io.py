@@ -20,7 +20,10 @@ def read_postings(
     spark, path: str, expected: tuple[str, ...]
 ) -> DataFrame:
     """Read ``<path>/postings`` with canonical columns ``expected``
-    (``("id", "h")`` for winnow, ``("id", "pos", "h")`` for MEM).
+    (``("id", "h")`` for winnow, ``("id", "pos", dedup.MEM_HASH_COL)``
+    for MEM). A MEM index that stores its hash as ``h`` holds the older
+    gram-string hash, which the current probe cannot match, so it falls
+    through to the rebuild error below.
 
     Legacy fallback: a pre-r13 index has every expected column except
     ``id`` plus exactly ONE extra column (the build frame's id name) —
@@ -40,8 +43,7 @@ def read_postings(
         return df.withColumnRenamed(legacy, "id").select(*expected)
     raise ValueError(
         f"postings at {path!r} have columns {sorted(cols)}, expected "
-        f"{list(expected)} (canonical since r13) or a single legacy "
-        "id column in place of 'id' — this index predates the "
-        "canonical-column layout; rebuild it with build_mem_index / "
-        "build_winnow_index"
+        f"{list(expected)} or a single legacy id column in place of "
+        "'id' — this index predates the current layout; rebuild it "
+        "with build_mem_index / build_winnow_index"
     )
