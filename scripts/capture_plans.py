@@ -3,9 +3,9 @@
 
 Usage: python scripts/capture_plans.py <outdir> <suffix> <query> [...]
 Writes <outdir>/<query>_<suffix>.txt for each query, built at
-$SPARK_GRAFT_SF_DIR (default sf0.1) under the engine session (the same
-session shape bench.py runs: warmed tables, stats-tuned AQE policy), so
-the plans match what the bench measures.
+$SPARK_GRAFT_SF_DIR (default sf0.1) under the shuffle gate's session
+(scripts/check_shuffle_bytes.py: warmed bench tables, stats-tuned AQE
+policy), so the plans match what that gate measures.
 """
 
 from __future__ import annotations
@@ -15,21 +15,11 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from check_shuffle_bytes import warm_bench_tables  # noqa: E402
 from weather_data_data_pipeline_spark import registry  # noqa: E402
-from weather_data_data_pipeline_spark.session import (  # noqa: E402
-    get_spark,
-    tune_for_working_set,
-)
-from weather_data_data_pipeline_spark.sources.tables import (  # noqa: E402
-    DOC_FANOUT,
-    warm_cache,
-)
+from weather_data_data_pipeline_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-WARM_TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "embeddings",
-)
 
 
 def main() -> None:
@@ -37,13 +27,7 @@ def main() -> None:
     os.makedirs(outdir, exist_ok=True)
     spark = get_spark(app_name="capture_plans")
     spark.sparkContext.setLogLevel("ERROR")
-    warm_cache(spark, SF_DIR, WARM_TABLES)
-    warm_cache(spark, SF_DIR, ("documents",), partitions=DOC_FANOUT)
-    working_set = sum(
-        os.path.getsize(os.path.join(SF_DIR, f"{t}.parquet"))
-        for t in (*WARM_TABLES, "documents")
-    )
-    tune_for_working_set(spark, working_set)
+    warm_bench_tables(spark, SF_DIR)
     for name in names:
         fn = registry.get_query(name).fn
         df = fn(spark, SF_DIR)

@@ -1,7 +1,9 @@
 #!/usr/bin/env python
-"""Per-query job/stage breakdown under bench.py conditioning: how many
-Spark jobs a query launches, each job's wall time and stage shape, plus
-the Python-side plan-construction time (fn call) vs execution time.
+"""Per-query job/stage breakdown under the shuffle gate's session
+(scripts/check_shuffle_bytes.py: warmed bench tables, working-set AQE
+policy): how many Spark jobs a query launches, each job's wall time and
+stage shape, plus the Python-side plan-construction time (fn call) vs
+execution time.
 
 Guide §1 ("measure first"): for sub-second local queries the job-launch
 floor (~0.05-0.15 s/job) and eager-materialization jobs (localCheckpoint,
@@ -20,54 +22,34 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from check_shuffle_bytes import (  # noqa: E402
+    persistent_ids,
+    release_transients,
+    run_query,
+    warm_bench_tables,
+)
 from weather_data_data_pipeline_spark import registry  # noqa: E402
-from weather_data_data_pipeline_spark.session import (  # noqa: E402
-    get_spark,
-    tune_for_working_set,
-)
-from weather_data_data_pipeline_spark.sources.tables import (  # noqa: E402
-    DOC_FANOUT,
-    warm_cache,
-)
+from weather_data_data_pipeline_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-WARM_TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "embeddings",
-)
 
 
 def main() -> None:
     names = sys.argv[1:]
     spark = get_spark(app_name="job_profile")
     spark.sparkContext.setLogLevel("ERROR")
-    warm_cache(spark, SF_DIR, WARM_TABLES)
-    warm_cache(spark, SF_DIR, ("documents",), partitions=DOC_FANOUT)
-    working_set = sum(
-        os.path.getsize(os.path.join(SF_DIR, f"{t}.parquet"))
-        for t in (*WARM_TABLES, "documents")
-    )
-    tune_for_working_set(spark, working_set)
-    keep = {
-        int(rid)
-        for rid in spark.sparkContext._jsc.getPersistentRDDs().keySet()
-    }
+    warm_bench_tables(spark, SF_DIR)
+    keep = persistent_ids(spark)
     st = spark.sparkContext.statusTracker()
     store = spark.sparkContext._jsc.sc().statusStore()
 
-    def release() -> None:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(jmap.keySet()):
-            if int(rid) not in keep:
-                jmap.get(rid).unpersist(False)
-        spark.sparkContext._jvm.System.gc()
-
     for name in names:
         fn = registry.get_query(name).fn
-        # bench-identical warmup: 3 untimed runs
+        # JIT warmup: a plan shape's generated code runs interpreted
+        # until C2 finishes, which takes several executions
         for _ in range(3):
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            release()
+            run_query(spark, fn, SF_DIR)
+            release_transients(spark, keep)
         group = f"profile_{name}"
         spark.sparkContext.setJobGroup(group, name)
         t0 = time.perf_counter()
@@ -104,7 +86,7 @@ def main() -> None:
             "n_jobs": len(jobs),
             "jobs": jobs,
         }))
-        release()
+        release_transients(spark, keep)
     spark.stop()
 
 

@@ -1,31 +1,43 @@
 #!/usr/bin/env python
-"""10× volume stress for the dedup path (VERDICT r3 ask #6).
+"""Volume stress over two decades: sf0.1 -> sf1 -> sf10.
 
-Correctness runs at sf0.001–0.01 and the bench at sf0.1; the 100 TB
-arguments were plan-shape extrapolations. This script MEASURES the
-scaling: it generates a one-off ~sf1-equivalent documents/embeddings set
-(10× sf0.1 rows, seed 777 ≠ the driver's 42, marginal distributions
-matched to the sf0.1 empirical data — same 31-token vocabulary with
-empirical unigram frequencies, empirical token-count distribution,
-lang/source proportions, the observed ~0.16% exact-dup rate planted,
-unit-norm float32 embeddings with the observed label mix), then runs the
-four headline dedup queries once at sf0.1 and once at sf1, recording
-wall seconds + shuffle-write bytes.
+Correctness runs at sf0.001–0.01 and the shuffle gate at sf0.1; this
+script MEASURES how a query scales. ``gen`` writes a one-off
+~sf1-equivalent documents/embeddings set (10× sf0.1 rows, seed 777 ≠
+the driver's 42, marginal distributions matched to the sf0.1 empirical
+data — same 31-token vocabulary with empirical unigram frequencies,
+empirical token-count distribution, lang/source proportions, the
+observed ~0.16% exact-dup rate planted, unit-norm float32 embeddings
+with the observed label mix); ``gen10`` writes the sf10-equivalent set
+(seed 778) and ``gen_events`` scaled events tables into both. ``run``
+measures each named query once per generated scale (one untimed JIT
+warmup, then a timed run with its shuffle-write bytes) and prints the
+wall and shuffle exponents of each decade (log10 of the ratio over a
+10× step; 1.0 is linear).
+
+Exact-pair families (exact Jaccard, containment, image dHash, uncapped
+banded self-joins) are quadratic BY CONSTRUCTION on the closed 31-token
+stress vocabulary, a workload property SCALE.md documents; the linear
+families are the ones worth stressing.
 
 Usage:
-    python scripts/scale_stress.py gen   # writes .scale_stress/sf1/
-    python scripts/scale_stress.py run   # measures, prints JSON
+    python scripts/scale_stress.py gen          # writes .scale_stress/sf1/
+    python scripts/scale_stress.py gen10        # writes .scale_stress/sf10/
+    python scripts/scale_stress.py gen_events   # events into both
+    python scripts/scale_stress.py run QUERY... # measures, prints JSON
 
-The generated set lives under .scale_stress/ (gitignored); /root/testdata
-is never written.
+``run`` covers sf10 only once ``gen10`` has written it. The generated
+sets live under .scale_stress/ (gitignored); /root/testdata is never
+written. Outputs of earlier stress runs, cited in SCALE.md, live in git
+history.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SRC_DIR = "/root/testdata/sf0.1"
@@ -33,20 +45,13 @@ OUT_DIR = os.path.join(REPO, ".scale_stress", "sf1")
 SEED = 777
 N_DOCS = 50_000  # 10× sf0.1
 N_VECS = 20_000  # 10× sf0.1
-QUERIES = (
-    "minhash_dedup_pairs_portable",
-    "dedup_clusters",
-    "semantic_dedup_keep",
-    "training_pipeline_e2e",
-    # r4: exact-substring removal — corpus-frequency join + per-doc
-    # window; expected ~linear (gram count scales with token count)
-    "span_dedup_removal",
-    # r4: the hot-cell cap under volume — with fixed seed centroids,
-    # 10x vectors means 10x-bigger cells and ~100x uncapped per-cell
-    # GEMM FLOPs (measured: semantic_dedup_keep wall grows superlinear
-    # at sf1); the star-edge cell cap must flatten that
-    "semantic_dedup_keep_capped",
-)
+# sf10-equivalent set: 500k docs / 200k vectors, seed 778, vectorized
+# generation (gen() below is kept byte-reproducible for its recorded run)
+OUT_DIR_10 = os.path.join(REPO, ".scale_stress", "sf10")
+SEED_10 = 778
+N_DOCS_10 = 500_000
+N_VECS_10 = 200_000
+SCALES = (("sf0.1", SRC_DIR), ("sf1", OUT_DIR), ("sf10", OUT_DIR_10))
 
 
 def gen() -> None:
@@ -134,93 +139,6 @@ def gen() -> None:
     print(f"wrote {OUT_DIR}: {N_DOCS} documents, {N_VECS} embeddings (seed {SEED})")
 
 
-def _measure(pairs, queries, group_prefix: str, app_name: str):
-    """Shared measurement loop for every stress decade: warm, one
-    untimed warmup per query, timed run with per-group shuffle bytes,
-    exponents from the (base, upper) label pair. One implementation so
-    decade results stay methodologically comparable."""
-    sys.path.insert(0, REPO)
-    import math
-
-    from bench import (
-        persistent_ids,
-        release_transients,
-        run_query,
-        shuffle_bytes_for_group,
-    )
-    from weather_data_data_pipeline_spark import registry
-    from weather_data_data_pipeline_spark.session import get_spark
-    from weather_data_data_pipeline_spark.sources.tables import (
-        DOC_FANOUT,
-        clear_cache,
-        warm_cache,
-    )
-
-    spark = get_spark(app_name=app_name)
-    spark.sparkContext.setLogLevel("ERROR")
-    results: dict[str, dict] = {}
-    for label, sf_dir in pairs:
-        warm_cache(spark, sf_dir, ("embeddings",))
-        warm_cache(spark, sf_dir, ("documents",), partitions=DOC_FANOUT)
-        keep = persistent_ids(spark)
-        for name in queries:
-            fn = registry.get_query(name).fn
-            run_query(spark, fn, sf_dir)  # one untimed warmup (JIT)
-            release_transients(spark, keep)
-            group = f"{group_prefix}_{label}_{name}"
-            spark.sparkContext.setJobGroup(group, name)
-            wall = run_query(spark, fn, sf_dir)
-            spark.sparkContext.setJobGroup(None, None)
-            sb = shuffle_bytes_for_group(spark, group)
-            release_transients(spark, keep)
-            results.setdefault(name, {})[label] = {
-                "wall_sec": round(wall, 3),
-                "shuffle_bytes": sb,
-            }
-            print(f"{label:6s} {name:32s} {wall:7.2f}s  {sb:>12,} B", file=sys.stderr)
-        # drop this SF's cached tables before warming the next
-        clear_cache()
-        release_transients(spark, set())
-    base, upper = pairs[0][0], pairs[1][0]
-    for name, r in results.items():
-        t0, t1 = r[base]["wall_sec"], r[upper]["wall_sec"]
-        b0, b1 = r[base]["shuffle_bytes"], r[upper]["shuffle_bytes"]
-        r["wall_exponent"] = round(math.log(t1 / t0) / math.log(10), 2)
-        r["shuffle_exponent"] = (
-            round(math.log(b1 / b0) / math.log(10), 2) if b0 and b1 else None
-        )
-    return results, spark
-
-
-def run() -> None:
-    results, spark = _measure(
-        (("sf0.1", SRC_DIR), ("sf1", OUT_DIR)), QUERIES, "stress", "scale_stress"
-    )
-    print(json.dumps({"seed": SEED, "n_docs": N_DOCS, "n_vecs": N_VECS,
-                      "queries": results}))
-    spark.stop()
-
-
-# ---------------------------------------------------------------------
-# Second decade (r4): sf10-equivalent set for the CAPPED/LINEAR family
-# only — 500k docs / 200k vectors, seed 778, vectorized generation
-# (the sf1 gen() above is kept byte-reproducible for its recorded run).
-# Two measured decades of linearity is the scale argument the 100 TB
-# claims rest on; the exact-Jaccard quadratic paths are excluded by
-# design (SCALE.md documents why, and sf10 would cost hours there).
-# ---------------------------------------------------------------------
-
-OUT_DIR_10 = os.path.join(REPO, ".scale_stress", "sf10")
-SEED_10 = 778
-N_DOCS_10 = 500_000
-N_VECS_10 = 200_000
-QUERIES_10 = (
-    "minhash_dedup_pairs_portable",
-    "span_dedup_removal",
-    "semantic_dedup_keep_capped",
-)
-
-
 def gen10() -> None:
     import numpy as np
     import pyarrow as pa
@@ -306,206 +224,9 @@ def gen10() -> None:
     print(f"wrote {OUT_DIR_10}: {N_DOCS_10} documents, {N_VECS_10} embeddings (seed {SEED_10})")
 
 
-def run10() -> None:
-    """Second decade: sf1 -> sf10 on the linear family only."""
-    results, spark = _measure(
-        (("sf1", OUT_DIR), ("sf10", OUT_DIR_10)),
-        QUERIES_10,
-        "stress10",
-        "scale_stress10",
-    )
-    print(json.dumps({"seed": SEED_10, "n_docs": N_DOCS_10,
-                      "n_vecs": N_VECS_10, "queries": results}))
-    spark.stop()
-
-
-# ---------------------------------------------------------------------
-# r5 additions: the round-5 operator family over BOTH decades. All are
-# designed-linear (hashed-bucket DSIR models, span-clean's capped gram
-# join, HashingTF+LBFGS, Zipf-small DoReMi count tables, PQ's broadcast
-# LUT scan); the containment query is EXCLUDED like exact Jaccard — the
-# closed 31-token stress vocabulary makes every df-capped posting
-# vanish / the uncapped ones quadratic, a workload property SCALE.md
-# already documents for the shingle family.
-# ---------------------------------------------------------------------
-
-QUERIES_R5 = (
-    "dsir_importance_weights",
-    "span_dedup_clean_corpus",
-    "quality_classifier_scores",
-    "doremi_domain_weights",
-    "ann_pq_topk_seeded",
-    # r6 additions: frozen-model scoring paths (one gram/token pass +
-    # broadcast literal model — designed scan-linear) and the
-    # trained-PQ + IVF-PQ recall report (bounded-sample training,
-    # broadcast LUTs). image_dhash_near_dup is EXCLUDED like exact
-    # Jaccard/containment, and for the same fixture-shaped reason: its
-    # fabricated corpus puts docs into doc_id % 100 base-pattern
-    # groups, so group size — and therefore the TRUE near-dup pair
-    # count — grows linearly with the corpus and the output is
-    # quadratic by construction (measured sf0.1→sf1: 23.7 MB → 1.95 GB
-    # shuffle, ~82× bytes for 10× docs, ~all of it the pair rows
-    # themselves). The banding adds nothing beyond the real pair
-    # density; on a corpus with scale-invariant duplicate density the
-    # candidate volume is linear.
-    "dsir_score_frozen",
-    "quality_classifier_frozen_scores",
-    "ann_pq_recall_report",
-)
-
-
-def runr5() -> None:
-    d1, spark = _measure(
-        (("sf0.1", SRC_DIR), ("sf1", OUT_DIR)), QUERIES_R5, "r5d1", "scale_r5"
-    )
-    spark.stop()
-    d2, spark = _measure(
-        (("sf1", OUT_DIR), ("sf10", OUT_DIR_10)), QUERIES_R5, "r5d2",
-        "scale_r5b",
-    )
-    print(json.dumps({"decade1_sf01_sf1": d1, "decade2_sf1_sf10": d2}))
-    spark.stop()
-
-
-QUERIES_R6 = (
-    # curation layer (plans/curation_queries.py)
-    "soft_dedup_weights",        # digest window — expect ~linear shuffle
-    "doc_char_entropy",          # zero-shuffle HOF fold — expect 0 bytes
-    "ngram_novelty_curriculum",  # gram window — ~linear (grams ∝ tokens)
-    "temperature_mix_weights",   # scan + tiny agg — expect ~flat bytes
-    "kcenter_coreset_select",    # 7 max-struct aggs — linear scans, tiny shuffle
-    # r6 selection layer
-    "rho_excess_loss_select",    # two gram joins vs Zipf-small count tables
-    "shard_manifest",            # two-level prefix sum
-    "embedding_diversity_by_label",  # Gram identity — one agg over vectors
-    # dedup_keep_best_quality is EXCLUDED for the same fixture-shaped
-    # reason as dedup_clusters' exact-Jaccard core (documented in
-    # SCALE.md): the closed 31-token vocabulary makes the exact
-    # shingle-join pair count quadratic BY CONSTRUCTION, and that core
-    # was already measured in the r3 stress set.
-)
-
-
-QUERIES_R6C = (
-    # late-r6 additions: trainer-facing weight table (digest window +
-    # broadcast per-source weights), vocabulary-window tokenizer sizing,
-    # prefix-sum packing utilization, and the key-skew profile (grouped
-    # counts + range-partitioned rank)
-    "doc_sampling_weights",
-    "vocab_nucleus_coverage",
-    "packing_efficiency_report",
-    # event_key_skew_profile is events-table-based; the stress dirs
-    # only synthesize documents/embeddings, so it is excluded here —
-    # its machinery (grouped counts + the range-partitioned prefix-sum
-    # rank) is the same global_row_number path shard_manifest and
-    # sequence_packing already measure linear
-)
-
-
-def runr6c() -> None:
-    d1, spark = _measure(
-        (("sf0.1", SRC_DIR), ("sf1", OUT_DIR)), QUERIES_R6C, "r6c1",
-        "scale_r6c",
-    )
-    spark.stop()
-    d2, spark = _measure(
-        (("sf1", OUT_DIR), ("sf10", OUT_DIR_10)), QUERIES_R6C, "r6c2",
-        "scale_r6cb",
-    )
-    print(json.dumps({"decade1_sf01_sf1": d1, "decade2_sf1_sf10": d2}))
-    spark.stop()
-
-
-QUERIES_R7 = (
-    # r7 new/replanned families. decontamination: bloom probe before any
-    # shuffle + the span gaps-and-islands machinery (both measured-linear
-    # components). contamination bloom: post-literal-fix plan. frozen
-    # curation e2e: the single linear plan (gate filter -> span clean ->
-    # digest window -> carried dsir top-k). dedup_incremental_batch is
-    # EXCLUDED like exact Jaccard: its registered form runs the
-    # md5-portable family UNCAPPED (the oracle replays no bucket cap),
-    # and on the closed-vocabulary stress corpus uncapped banded
-    # self-joins were already measured quadratic-by-workload in r4; the
-    # capped xxhash production family (incremental_near_dedup,
-    # max_bucket_size=1000) is the shipped scale path.
-    "decontamination_clean_corpus",
-    "corpus_contamination_bloom",
-    "curation_pipeline_frozen_e2e",
-)
-
-
-QUERIES_R7B = (
-    # late-r7 additions. semantic_decontamination: broadcast(bounded
-    # eval) × one train scan + map-side struct-max — expect ~linear
-    # wall, near-flat shuffle (one row per train vector). KN logppl:
-    # model tables are vocabulary-bounded (≤ |V|² bigram types on the
-    # closed stress vocab), per-doc terms linear. length_debias: one
-    # histogram aggregate + one accept scan — near-flat shuffle.
-    # quality_proxy_agreement: 7 moment numbers per source — flat
-    # shuffle, wall = the per-doc entropy HOF (linear scan).
-    "semantic_decontamination",
-    "doc_bigram_kn_logppl",
-    "length_debias_sample",
-    "quality_proxy_agreement",
-)
-
-
-def runr7b() -> None:
-    d1, spark = _measure(
-        (("sf0.1", SRC_DIR), ("sf1", OUT_DIR)), QUERIES_R7B, "r7b1",
-        "scale_r7b1",
-    )
-    spark.stop()
-    d2, spark = _measure(
-        (("sf1", OUT_DIR), ("sf10", OUT_DIR_10)), QUERIES_R7B, "r7b2",
-        "scale_r7b2",
-    )
-    print(json.dumps({"decade1_sf01_sf1": d1, "decade2_sf1_sf10": d2}))
-    spark.stop()
-
-
-QUERIES_R8 = (
-    # r8 replans + new instruments. dsir pair: the fused 3-shuffle
-    # fit+score plan (conditional-agg bucket models, window totals over
-    # the 256-row model frame, per-doc sentinel instead of a corpus
-    # join-back) — expect the same ~linear gram-shuffle as the old plan,
-    # minus the join-back bytes. ESS: the doc_sampling_weights pipeline
-    # + one 20-row aggregate — expect the digest-window linear shuffle.
-    # context sweep: ONE prefix sum fanned 4× through a literal-array
-    # explode — the exploded frame is (n_tok, rt, ctx) triples, so
-    # expect ~linear bytes at 4× the manifest frame's rate. chunk
-    # histogram: non-overlapping 32-token blocks → digests → counts;
-    # chunk count ∝ tokens, expect ~linear. simhash portable: post
-    # expr-string replan (plan-build constant is SF-independent; the
-    # banded self-join on the closed stress vocab is the documented
-    # workload-quadratic family, so it is EXCLUDED like exact Jaccard).
-    "dsir_importance_weights",
-    "dsir_select_topk",
-    "sampling_ess_by_source",
-    "packing_context_sweep",
-    "chunk_dedup_histogram",
-)
-
-
-def runr8() -> None:
-    d1, spark = _measure(
-        (("sf0.1", SRC_DIR), ("sf1", OUT_DIR)), QUERIES_R8, "r8d1",
-        "scale_r8a",
-    )
-    spark.stop()
-    d2, spark = _measure(
-        (("sf1", OUT_DIR), ("sf10", OUT_DIR_10)), QUERIES_R8, "r8d2",
-        "scale_r8b",
-    )
-    print(json.dumps({"decade1_sf01_sf1": d1, "decade2_sf1_sf10": d2}))
-    spark.stop()
-
-
-
-
 def gen_events() -> None:
     """Synthesize 10x/100x events tables into the sf1/sf10 stress dirs
-    (r9: the event-stream instruments — seasonality, transitions, weekly
+    (the event-stream instruments — seasonality, transitions, weekly
     dup rate — need a scaled EVENTS table, which gen()'s documents/
     embeddings set lacks). Marginals match sf0.1 empirically: event_type
     mix, value distribution (resampled), the SAME wall-clock window
@@ -522,7 +243,7 @@ def gen_events() -> None:
     types = np.array(ev.column("event_type").to_pylist())
     # explicit float64 (NULL -> NaN) rather than to_pylist(): a NULL in
     # the source column would otherwise yield an object-dtype array and
-    # pa.array over mixed float/None objects can mistype (ADVICE r9 #4)
+    # pa.array over mixed float/None objects can mistype
     values = ev.column("value").to_numpy(zero_copy_only=False)
     ts = ev.column("ts").to_pylist()
     lo = min(ts)
@@ -535,7 +256,7 @@ def gen_events() -> None:
         n = ev.num_rows * mult
         n_users = n_users_base * mult
         # dtype='int64' explicitly: microsecond spans overflow platform
-        # long where it is 32-bit (ADVICE r9 #4)
+        # long where it is 32-bit
         offs = np.sort(rng.randint(0, span_us, size=n, dtype="int64"))
         tbl = pa.table(
             {
@@ -572,330 +293,75 @@ def gen_events() -> None:
         print(f"wrote {out_dir}/events.parquet: {n} rows, {n_users} users")
 
 
-QUERIES_R9 = (
-    # r9 stress targets (VERDICT r8 ask #7): the late-r8 instruments
-    # never stressed, plus the r9 vocab_growth_curve replan.
-    # blocklist pair: one scan + rollup (report) / one scan + filter
-    # (redact) — expect ~linear bytes, tiny report shuffle. ablation:
-    # one scan, 4x literal-struct fan-out, one rollup — near-flat
-    # shuffle (4 rows per partition). overlap: the per-source DISTINCT
-    # vocab table is Zipf-small, so the token-keyed self-join should
-    # grow with VOCABULARY, not corpus — expect strongly sublinear.
-    # seasonality: one partial+final agg over a 7x24 key space — flat.
-    # transitions: ONE user-keyed window shuffle — linear in events.
-    # weekly dup rate: (week, triple)-keyed distinct — linear.
-    # vocab growth: two conditional aggregates (replaces the corpus-
-    # broadcasting BNLJ) — shuffle is the firsts table, vocab-bounded.
-    "blocklist_filter_report",
-    "blocklist_redacted_corpus",
-    "quality_rule_ablation",
-    "source_overlap_jaccard",
-    "ngram_entropy_by_source",
-    "length_quality_curve",
-    "truncation_loss_sweep",
-    "vocab_growth_curve",
-    "event_value_seasonality",
-    "event_type_transitions",
-    "weekly_event_dup_rate",
-)
-
-
-def runr9() -> None:
-    d1, spark = _measure(
-        (("sf0.1", SRC_DIR), ("sf1", OUT_DIR)), QUERIES_R9, "r9d1",
-        "scale_r9a",
+def run(names: list[str]) -> None:
+    """Measure ``names`` at every generated scale in one session and
+    print per-scale wall/shuffle bytes plus each decade's exponents."""
+    from check_shuffle_bytes import (
+        persistent_ids,
+        release_transients,
+        run_in_group,
+        run_query,
     )
-    spark.stop()
-    d2, spark = _measure(
-        (("sf1", OUT_DIR), ("sf10", OUT_DIR_10)), QUERIES_R9, "r9d2",
-        "scale_r9b",
+    from weather_data_data_pipeline_spark import registry
+    from weather_data_data_pipeline_spark.session import get_spark
+    from weather_data_data_pipeline_spark.sources.tables import (
+        DOC_FANOUT,
+        clear_cache,
+        warm_cache,
     )
-    print(json.dumps({"decade1_sf01_sf1": d1, "decade2_sf1_sf10": d2}))
+
+    scales = [
+        (label, d) for label, d in SCALES
+        if os.path.exists(os.path.join(d, "documents.parquet"))
+    ]
+    if len(scales) < 2:
+        sys.exit("no stress set: run `scale_stress.py gen` first")
+    if len(scales) < len(SCALES):
+        print("sf10 set not generated (gen10): measuring sf0.1 -> sf1 only",
+              file=sys.stderr)
+    spark = get_spark(app_name="scale_stress")
+    spark.sparkContext.setLogLevel("ERROR")
+    results: dict[str, dict] = {}
+    for label, sf_dir in scales:
+        warm_cache(spark, sf_dir, ("embeddings",))
+        warm_cache(spark, sf_dir, ("documents",), partitions=DOC_FANOUT)
+        keep = persistent_ids(spark)
+        for name in names:
+            fn = registry.get_query(name).fn
+            run_query(spark, fn, sf_dir)  # one untimed warmup (JIT)
+            release_transients(spark, keep)
+            wall, sb = run_in_group(spark, fn, sf_dir, f"stress_{label}_{name}")
+            release_transients(spark, keep)
+            results.setdefault(name, {})[label] = {
+                "wall_sec": round(wall, 3),
+                "shuffle_bytes": sb,
+            }
+            print(f"{label:6s} {name:32s} {wall:7.2f}s  {sb:>12,} B", file=sys.stderr)
+        # drop this SF's cached tables before warming the next
+        clear_cache()
+        release_transients(spark, set())
     spark.stop()
+    for r in results.values():
+        for (lo, _), (hi, _) in zip(scales, scales[1:]):
+            t0, t1 = r[lo]["wall_sec"], r[hi]["wall_sec"]
+            b0, b1 = r[lo]["shuffle_bytes"], r[hi]["shuffle_bytes"]
+            r[f"{lo}->{hi}"] = {
+                "wall_exponent": round(math.log10(t1 / t0), 2),
+                "shuffle_exponent": (
+                    round(math.log10(b1 / b0), 2) if b0 and b1 else None
+                ),
+            }
+    print(json.dumps({"queries": results}))
 
 
-def runr7() -> None:
-    d1, spark = _measure(
-        (("sf0.1", SRC_DIR), ("sf1", OUT_DIR)), QUERIES_R7, "r7d1",
-        "scale_r7",
-    )
-    spark.stop()
-    d2, spark = _measure(
-        (("sf1", OUT_DIR), ("sf10", OUT_DIR_10)), QUERIES_R7, "r7d2",
-        "scale_r7b",
-    )
-    print(json.dumps({"decade1_sf01_sf1": d1, "decade2_sf1_sf10": d2}))
-    spark.stop()
-
-
-def runr6() -> None:
-    d1, spark = _measure(
-        (("sf0.1", SRC_DIR), ("sf1", OUT_DIR)), QUERIES_R6, "r6d1", "scale_r6"
-    )
-    spark.stop()
-    d2, spark = _measure(
-        (("sf1", OUT_DIR), ("sf10", OUT_DIR_10)), QUERIES_R6, "r6d2",
-        "scale_r6b",
-    )
-    print(json.dumps({"decade1_sf01_sf1": d1, "decade2_sf1_sf10": d2}))
-    spark.stop()
-
-
-
-
-QUERIES_R10 = (
-    # r10 stress targets (VERDICT r9 ask #6): the two new URL/domain
-    # curation queries, the snapshot/time-travel read, and the two
-    # fused ANN replans.
-    # url report: one scan, all string canonicalization codegen'd into
-    # it, (domain, url)-keyed distinct then a 20-row rollup — shuffle
-    # carries (domain, url) pairs, expect ~linear. blocklist rollup:
-    # one scan + domain rollup + 1-row broadcast total — tiny shuffle,
-    # near-flat. snapshot: writes the weekly delta layout then reads
-    # v<=cut with partition pruning + one struct-argmax upsert — the
-    # shuffle carries one candidate row per (key, partition), expect
-    # ~linear in the surviving prefix. ann fused pair: one mapInPandas
-    # GEMM pass + a q*k-bounded window — wall should grow ~linearly
-    # with the corpus GEMM, shuffle stays candidate-bounded (~flat).
-    "url_domain_dedup_report",
-    "domain_blocklist_rollup",
-    "snapshot_read_as_of",
-    "ann_lsh_topk",
-    "embedding_ann_recall_report",
-)
-
-
-QUERIES_R11 = (
-    # r11 replanned family (BASELINE.md round-11): fused expression
-    # BM25 — expect near-ZERO shuffle bytes at every SF (one 1-row
-    # stats aggregate), wall ~linear in the scan
-    "bm25_search_topk",
-    "hybrid_search_rrf",
-    "hybrid_rerank_topk",
-    # literal frozen-DSIR model: one partial-agg groupBy(doc) — shuffle
-    # ~O(docs), wall ~linear in gram count
-    "dsir_score_frozen",
-    "curation_pipeline_frozen_e2e",
-    # fused SemDeDup now REGISTERED: per-cell union-find, same cell
-    # shuffle as the unfused form measured r10 — re-measure the
-    # registered plan
-    "semantic_dedup_keep_capped",
-    # new rows-only bench row: one mapInPandas candidate pass, zero
-    # shuffle, driver-side exact greedy over partitions × 2k rows
-    "kcenter_select_composable",
-    # new oracle-bearing recall report: seeded PQ/IVF-PQ + GEMM truth
-    "ann_pq_recall_seeded",
-)
-
-# r11 late additions (winnowing family): doc-keyed gram windows — wall
-# should track gram count ~linearly, the pair query's postings cap
-# bounds the join
-QUERIES_R11B = (
-    "winnowing_fingerprint_summary",
-    "winnowing_overlap_pairs",
-)
-
-
-def runr11b() -> None:
-    d1, spark = _measure(
-        (("sf0.1", SRC_DIR), ("sf1", OUT_DIR)), QUERIES_R11B, "r11bd1",
-        "scale_r11b1",
-    )
-    spark.stop()
-    d2, spark = _measure(
-        (("sf1", OUT_DIR), ("sf10", OUT_DIR_10)), QUERIES_R11B, "r11bd2",
-        "scale_r11b2",
-    )
-    print(json.dumps({"decade1_sf01_sf1": d1, "decade2_sf1_sf10": d2}))
-    spark.stop()
-
-
-QUERIES_R12 = (
-    # r12 new operators. winnowing_index_probe: the serving round-trip
-    # (build index -> parquet postings+sizes -> probe the doc_id%3==0
-    # batch) — fingerprinting is the linear winnow scan measured in
-    # r11b; the probe join is capped-postings-bounded, so expect
-    # ~linear wall and postings-linear bytes. exact_substring_mems:
-    # positional-gram index (linear) + capped diagonal join; on the
-    # closed 31-token stress vocabulary the diagonal-run pair family
-    # densifies like every exact pair family here (documented r4
-    # workload property) — the df<=100 stop-gram cap is what bounds
-    # the join at all SFs.
-    "winnowing_index_probe",
-    "exact_substring_mems",
-)
-
-
-def runr12() -> None:
-    d1, spark = _measure(
-        (("sf0.1", SRC_DIR), ("sf1", OUT_DIR)), QUERIES_R12, "r12d1",
-        "scale_r12d1",
-    )
-    spark.stop()
-    d2, spark = _measure(
-        (("sf1", OUT_DIR), ("sf10", OUT_DIR_10)), QUERIES_R12, "r12d2",
-        "scale_r12d2",
-    )
-    print(json.dumps({"decade1_sf01_sf1": d1, "decade2_sf1_sf10": d2}))
-    spark.stop()
-
-
-QUERIES_R13 = (
-    # mem_index_probe: the MEM serving round-trip (build_mem_index ->
-    # parquet postings (id,pos,h) -> probe the doc_id%3==0 batch) —
-    # landed r12 AFTER scale_stress_r12.json was generated (VERDICT
-    # r12 ask #3). Build side is the linear positional-gram scan +
-    # build-time df<=100 stop cut; the probe pays only the batch's
-    # grams + one capped join, so expect the winnowing_index_probe
-    # pattern: sub-linear-ish wall, closed-vocab densification on d2
-    # bytes (documented stress-corpus class).
-    "mem_index_probe",
-    # exact_substring_removal: r13 new — maximal_match_pairs (measured
-    # r12 as exact_substring_mems) + a distinct + per-doc interval
-    # window whose rows scale with MATCH count, not token count.
-    "exact_substring_removal",
-)
-
-
-QUERIES_R13B = (
-    # the applied/serving CLEAN forms that landed after the first r13
-    # stress run — same MEM core as runr13's queries plus the
-    # higher-order token rebuild (batch) / probe-side rebuild (serving):
-    # rebuild rows scale with doc count, islands with match count.
-    "exact_substring_clean",
-    "mem_index_clean",
-)
-
-
-def runr13b() -> None:
-    d1, spark = _measure(
-        (("sf0.1", SRC_DIR), ("sf1", OUT_DIR)), QUERIES_R13B, "r13bd1",
-        "scale_r13b1",
-    )
-    spark.stop()
-    d2, spark = _measure(
-        (("sf1", OUT_DIR), ("sf10", OUT_DIR_10)), QUERIES_R13B, "r13bd2",
-        "scale_r13b2",
-    )
-    print(json.dumps({"decade1_sf01_sf1": d1, "decade2_sf1_sf10": d2}))
-    spark.stop()
-
-
-QUERIES_R14 = (
-    # ccnet_line_dedup / ccnet_line_clean: r14 new — one distinct
-    # (h, id) pass + count-per-hash (Zipf-small boilerplate head) +
-    # broadcast semi-join back. The 4-line fabricated bodies make line
-    # volume linear in docs; the boilerplate set is bounded by the
-    # source/lang cross (40 lines), so expect ~linear wall/shuffle with
-    # the closed-vocab densification on the distinct pass.
-    "ccnet_line_dedup",
-    "ccnet_line_clean",
-    # corpus_contamination_prescreen: r14 replan — the train gram scan
-    # probes the broadcast eval hash set BEFORE any shuffle; only the
-    # overlap sliver (bounded by the eval gram set, here the closed
-    # 31-token vocabulary saturates it) shuffles to the distinct, so
-    # wall should track the scan and shuffle bytes stay near-flat.
-    "corpus_contamination_prescreen",
-)
-
-
-def runr14() -> None:
-    d1, spark = _measure(
-        (("sf0.1", SRC_DIR), ("sf1", OUT_DIR)), QUERIES_R14, "r14d1",
-        "scale_r14d1",
-    )
-    spark.stop()
-    d2, spark = _measure(
-        (("sf1", OUT_DIR), ("sf10", OUT_DIR_10)), QUERIES_R14, "r14d2",
-        "scale_r14d2",
-    )
-    print(json.dumps({"decade1_sf01_sf1": d1, "decade2_sf1_sf10": d2}))
-    spark.stop()
-
-
-def runr13() -> None:
-    d1, spark = _measure(
-        (("sf0.1", SRC_DIR), ("sf1", OUT_DIR)), QUERIES_R13, "r13d1",
-        "scale_r13d1",
-    )
-    spark.stop()
-    d2, spark = _measure(
-        (("sf1", OUT_DIR), ("sf10", OUT_DIR_10)), QUERIES_R13, "r13d2",
-        "scale_r13d2",
-    )
-    print(json.dumps({"decade1_sf01_sf1": d1, "decade2_sf1_sf10": d2}))
-    spark.stop()
-
-
-def runr11() -> None:
-    d1, spark = _measure(
-        (("sf0.1", SRC_DIR), ("sf1", OUT_DIR)), QUERIES_R11, "r11d1",
-        "scale_r11",
-    )
-    spark.stop()
-    d2, spark = _measure(
-        (("sf1", OUT_DIR), ("sf10", OUT_DIR_10)), QUERIES_R11, "r11d2",
-        "scale_r11b",
-    )
-    print(json.dumps({"decade1_sf01_sf1": d1, "decade2_sf1_sf10": d2}))
-    spark.stop()
-
-
-def runr10() -> None:
-    d1, spark = _measure(
-        (("sf0.1", SRC_DIR), ("sf1", OUT_DIR)), QUERIES_R10, "r10d1",
-        "scale_r10",
-    )
-    spark.stop()
-    d2, spark = _measure(
-        (("sf1", OUT_DIR), ("sf10", OUT_DIR_10)), QUERIES_R10, "r10d2",
-        "scale_r10b",
-    )
-    print(json.dumps({"decade1_sf01_sf1": d1, "decade2_sf1_sf10": d2}))
-    spark.stop()
-
+COMMANDS = {"gen": gen, "gen10": gen10, "gen_events": gen_events}
 
 if __name__ == "__main__":
-    cmd = sys.argv[1] if len(sys.argv) > 1 else "run"
-    if cmd == "gen":
-        gen()
-    elif cmd == "run":
-        run()
-    elif cmd == "gen10":
-        gen10()
-    elif cmd == "run10":
-        run10()
-    elif cmd == "runr5":
-        runr5()
-    elif cmd == "runr6":
-        runr6()
-    elif cmd == "runr6c":
-        runr6c()
-    elif cmd == "runr7":
-        runr7()
-    elif cmd == "runr7b":
-        runr7b()
-    elif cmd == "runr8":
-        runr8()
-    elif cmd == "gen_events":
-        gen_events()
-    elif cmd == "runr9":
-        runr9()
-    elif cmd == "runr10":
-        runr10()
-    elif cmd == "runr11":
-        runr11()
-    elif cmd == "runr11b":
-        runr11b()
-    elif cmd == "runr12":
-        runr12()
-    elif cmd == "runr14":
-        runr14()
-    elif cmd == "runr13":
-        runr13()
-    elif cmd == "runr13b":
-        runr13b()
+    cmd, args = (sys.argv[1], sys.argv[2:]) if len(sys.argv) > 1 else ("", [])
+    if cmd == "run" and args:
+        run(args)
+    elif cmd in COMMANDS and not args:
+        COMMANDS[cmd]()
     else:
-        print("usage: scale_stress.py [gen|run|gen10|run10|runr5|runr6|"
-              "runr6c|runr7|runr7b|runr8|gen_events|runr9|runr10|runr11]")
+        print("usage: scale_stress.py gen|gen10|gen_events|run QUERY...")
         sys.exit(2)

@@ -287,12 +287,7 @@ def language_id_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
     "by minhash_dedup_pairs_portable (the same exact-Jaccard kernel "
     "verifying banded LSH candidates). Stays oracle-checked in "
     "rotation.",
-    # shuffle16: the posting self-join is a JVM-heavy reduce that wants
-    # width (measured 1.29s at 8 partitions vs 1.09s at 16 at sf0.1);
-    # python-stage-heavy queries want the opposite (minhash: 1.77s at 8
-    # vs 2.38s at 16). AQE coalescing makes this call per-stage at real
-    # scale; the tag is the static local-mode analog.
-    tags=("llm", "dedup", "diagnostic", "shuffle16"),
+    tags=("llm", "dedup", "diagnostic"),
 )
 def ngram_jaccard_pairs_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The documents scan is a single small file → 1 task; fan out before
@@ -337,7 +332,7 @@ def ngram_jaccard_pairs_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     "self-join — the surviving r12 3-way-study shape); only the cap "
     "differs, mirrored exactly in the oracle (the capped vocabulary is "
     "the feature space, not an approximation of the uncapped value).",
-    tags=("llm", "dedup", "bench", "shuffle16"),
+    tags=("llm", "dedup", "bench"),
 )
 def ngram_jaccard_pairs_capped_query(
     spark: SparkSession, sf_dir: str
@@ -378,7 +373,7 @@ def ngram_jaccard_pairs_capped_query(
     "vocabulary is the feature space, mirrored in the oracle); only the "
     "final measure differs: C(A→B) = |S_A∩S_B| / |S_A| per direction, "
     "kept when either direction ≥ 0.55.",
-    tags=("llm", "dedup", "bench", "shuffle16"),
+    tags=("llm", "dedup", "bench"),
 )
 def ngram_containment_pairs_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from weather_data_data_pipeline_spark.functions.dedup import (
@@ -2067,7 +2062,7 @@ def span_dedup_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # those helpers must be listed in CHANGES.md and run through
     # scripts/driver_mirror.py, which value-checks this query. Building
     # this plan also launches the checkpoint job as a side effect;
-    # bench.py's release_transients reclaims the RDD.
+    # the shuffle gate's release_transients reclaims the RDD.
     docs = load_fanout(spark, sf_dir, "documents")
     spans = hashed_shingles(docs, "doc_id", "text", n=8).localCheckpoint(
         eager=True

@@ -16,7 +16,7 @@ from pyspark.sql import SparkSession
 from weather_data_data_pipeline_spark import py4j_fastpath
 
 # Driver-side reflection cache for py4j (see py4j_fastpath module doc):
-# installed at import so every entry path — bench.py, the driver's own
+# installed at import so every entry path — perfbench, the driver's own
 # harness importing __spark_entry__, scripts — builds plans with one
 # round trip per F.* call instead of three. Pure process-local lookup
 # caching of immutable JVM handles; no Spark semantics change.
