@@ -123,12 +123,29 @@ def persistent_ids(spark) -> set[int]:
 
 
 def release_transients(spark, keep_ids: set[int]) -> None:
-    """Unpersist every cached RDD not in ``keep_ids`` (query-local
-    localCheckpoints of signature/index tables) and ask the driver JVM
-    to collect. Left in place, that state accumulates across a long run
-    of queries and shows up as multi-second GC spikes on unrelated
-    queries; Spark's ContextCleaner reclaims shuffle files and
+    """Drop what a query cached for itself and ask the driver JVM to
+    collect: its Dataset cache entries (``persist``/``cache``, e.g. the
+    range-partitioned input of ``operators.ranking``) and every other
+    cached RDD not in ``keep_ids`` (query-local localCheckpoints of
+    signature/index tables). An entry whose buffers are in ``keep_ids``
+    (a warmed table) stays. A cache entry left behind would serve the
+    next query over the same plan, whose shuffle would then not run;
+    an unpersisted RDD left behind accumulates across a long run of
+    queries and shows up as multi-second GC spikes on unrelated
+    queries. Spark's ContextCleaner reclaims shuffle files and
     broadcasts only after the driver GC drops their references."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    # Spark keeps the entry list private and offers no enumeration
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    entries = field.get(cm)  # an immutable snapshot; uncaching replaces it
+    for entry in (entries.apply(i) for i in range(entries.size())):
+        builder = entry.cachedRepresentation().cacheBuilder()
+        if not (
+            builder.isCachedColumnBuffersLoaded()
+            and builder.cachedColumnBuffers().id() in keep_ids
+        ):
+            cm.uncacheQuery(spark._jsparkSession, entry.plan(), False, False)
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     for rid in list(jmap.keySet()):
         if int(rid) not in keep_ids:

@@ -8,10 +8,14 @@ append sink ×2 + anti-join dedup idempotency
 
 from __future__ import annotations
 
+import json
+from collections import Counter
+
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
-from tests.test_weather_pipeline import YEAR_BOUNDARY_EPOCH, _payload
+from tests.test_weather_pipeline import YEAR_BOUNDARY_EPOCH, _files_per_day, _payload
 from weather_data_data_pipeline_spark.operators.joins import anti_join_dedup
 from weather_data_data_pipeline_spark.pipeline import weather as W
 from weather_data_data_pipeline_spark.sources import jdbc
@@ -132,3 +136,98 @@ def test_full_load_sinks_hold_the_same_rows(spark, tmp_path):
     derby = rows(jdbc.read_table(spark, url, "weather_report_data", PROPS))
     assert len(parquet) == 80
     assert parquet == derby
+
+
+def _group_shape(spark, group: str) -> tuple[int, int]:
+    """(stages, tasks) that ran for a job group, from the status store."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    stages = tasks = 0
+    for job in sc.statusTracker().getJobIdsForGroup(group):
+        for sid in sc.statusTracker().getJobInfo(job).stageIds:
+            try:
+                st = store.lastStageAttempt(sid)
+            except Py4JJavaError:
+                continue  # skipped: its shuffle output was reused
+            stages += 1
+            tasks += st.numCompleteTasks()
+    return stages, tasks
+
+
+def _batch(b: int) -> list[dict]:
+    """16 cities' forecasts from slot ``b``: each batch shifts one
+    three-hour slot, so it adds one row per city, as the hourly feed."""
+    return [
+        _payload(f"City{i}", "US", 30.0 + i, -95.0, YEAR_BOUNDARY_EPOCH + b * 3 * 3600)
+        for i in range(16)
+    ]
+
+
+def _load(spark, b: int, dest: str, url: str):
+    """Batch ``b`` into both sinks as the hourly job does: parquet inside
+    ``run_full_load``, then Derby, whole on the first batch and through
+    ``rows_to_append`` after it. Returns the batch's fact."""
+    fact = W.run_full_load(spark, _batch(b), dest, "2023-12-28", "2023-12-29")["fact"]
+    new = fact
+    if b:
+        derby = jdbc.read_table(spark, url, "weather_report_data", PROPS)
+        new = W.rows_to_append(fact, derby)
+    jdbc.append(new, url, "weather_report_data", PROPS)
+    return fact
+
+
+def test_small_batch_runs_in_one_partition_end_to_end(spark, tmp_path):
+    """A batch under 64 MB is one partition from the fact checkpoint to
+    the JDBC sink: the checkpoint, each report and the fact write run
+    one task per stage, the destination-key broadcast one per scan
+    split, and the Derby anti-join append one per side and one for the
+    join. Sized by the session's width instead (8 cores, 4 shuffle
+    partitions), the same batch ran 11 stages and 58 tasks."""
+    dest, url = str(tmp_path / "dest"), _url(tmp_path, "shapedb")
+    _load(spark, 0, dest, url)
+    sc = spark.sparkContext
+    group = f"batch-shape-{tmp_path.name}"
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    # the static plan: tune_for_working_set turns AQE off for a batch this size
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup(group, "batch shape test")
+    try:
+        _load(spark, 1, dest, url)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    stages, tasks = _group_shape(spark, group)
+    assert stages <= 9 and tasks <= 13, (stages, tasks)
+    assert jdbc.read_table(spark, url, "weather_report_data", PROPS).count() == 16 * 41
+
+
+@pytest.mark.parametrize("parts", [3, 10])
+def test_wide_batch_keeps_its_partitions_to_the_sinks(spark, tmp_path, monkeypatch, parts):
+    """A batch of several partition targets is checkpointed into that
+    many partitions: merged from the payload scan's 8 (3), or shuffled
+    out past them (10). Each day partition still gets one file per
+    batch, the JDBC append gets no more partitions than the batch, and
+    both sinks hold the same rows."""
+    size = sum(len(json.dumps(p)) for p in _batch(1))
+    monkeypatch.setattr(W, "PARTITION_BYTES", -(-size // parts))
+    assert W.batch_partitions(size) == parts
+    dest, url = str(tmp_path / "dest"), _url(tmp_path, f"wide{parts}db")
+    _load(spark, 0, dest, url)
+    files = _files_per_day(f"{dest}/weather_report_data")
+    assert set(files.values()) == {1}
+
+    fact = _load(spark, 1, dest, url)
+    assert fact.rdd.getNumPartitions() == parts
+    derby = jdbc.read_table(spark, url, "weather_report_data", PROPS)
+    assert W.rows_to_append(fact, derby).rdd.getNumPartitions() <= parts
+    # batch 1's one new slot per city falls on 2024-01-02, a new day
+    assert _files_per_day(f"{dest}/weather_report_data") - files == Counter(
+        {"weather_day=2024-01-02": 1}
+    )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(*W.FACT_COLUMNS).collect())
+
+    parquet = rows(spark.read.parquet(f"{dest}/weather_report_data"))
+    assert len(parquet) == 16 * 41
+    assert parquet == rows(jdbc.read_table(spark, url, "weather_report_data", PROPS))

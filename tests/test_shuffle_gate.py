@@ -1,10 +1,16 @@
-"""The shuffle-volume gate's verdict (scripts/check_shuffle_bytes.py:
-``compare``), pinned without a Spark session: growth beyond 1.30x + 1 MB
-fails, new and stale queries are info, and a missing baseline accepts
-nothing unless --update."""
+"""The shuffle-volume gate (scripts/check_shuffle_bytes.py). Its verdict
+(``compare``) is pinned without a Spark session: growth beyond 1.30x +
+1 MB fails, new and stale queries are info, and a missing baseline
+accepts nothing unless --update. Its measurement is pinned on the test
+session: a query measures the same bytes however often it runs."""
 
 import importlib.util
 from pathlib import Path
+
+import pytest
+
+from tests.conftest import SF_DIR
+from weather_data_data_pipeline_spark import registry
 
 _PATH = Path(__file__).resolve().parent.parent / "scripts" / "check_shuffle_bytes.py"
 _spec = importlib.util.spec_from_file_location("check_shuffle_bytes", _PATH)
@@ -45,3 +51,19 @@ def test_missing_baseline_accepts_only_under_update():
     failures, _ = gate.compare(now, None, update=False)
     assert len(failures) == 1
     assert gate.compare(now, None, update=True) == ([], [])
+
+
+def test_a_rerun_measures_the_same_shuffle_bytes(spark):
+    """``release_transients`` drops the cache entry a query added (here
+    the range-partitioned input ``operators.ranking`` persists), so a
+    second run shuffles again instead of reading the first run's
+    cached rows and measuring next to nothing."""
+    fn = registry.get_query("event_value_global_deciles").fn
+    keep = gate.persistent_ids(spark)
+    measured = []
+    for run in range(2):
+        _, shuffled = gate.run_in_group(spark, fn, SF_DIR, f"gate-rerun-{run}")
+        gate.release_transients(spark, keep)
+        measured.append(shuffled)
+    # the same bytes, up to compression jitter
+    assert measured[0] > 0 and measured[1] == pytest.approx(measured[0], rel=0.01), measured

@@ -317,6 +317,37 @@ def test_full_load_metrics_match_direct_counts(spark, payloads, tmp_path):
     assert out["metrics"]["rows_rejected"] == 80
 
 
+def test_batch_partitions_follow_batch_bytes():
+    """One partition per 64 MB of payload JSON, and one for a batch
+    under it, empty included."""
+    mb64 = 64 << 20
+    assert W.batch_partitions(0) == 1
+    assert W.batch_partitions(mb64) == 1
+    assert W.batch_partitions(mb64 + 1) == 2
+
+
+def _executions(spark) -> dict[int, str]:
+    """Physical plan text of every SQL execution of the session, by id."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return {
+        e.executionId(): e.physicalPlanDescription()
+        for e in (execs.apply(i) for i in range(execs.size()))
+    }
+
+
+def test_report_writes_plan_no_shuffle(spark, payloads, tmp_path):
+    """A batch under 64 MB is checkpointed into one partition, so both
+    report aggregates read it where it lies: neither write shuffles."""
+    before = _executions(spark)
+    W.run_full_load(spark, payloads, str(tmp_path), "2023-12-28", "2023-12-29")
+    new = [p for i, p in _executions(spark).items() if i not in before]
+    for report in ("weekly_avg_temp_report_data", "weather_avg_humidity_report_data"):
+        plans = [p for p in new if report in p]
+        assert len(plans) == 1, report
+        assert "Exchange" not in plans[0], plans[0]
+
+
 def test_payloads_cross_to_the_jvm_as_arrow(spark, payloads):
     """The payload frame is JVM-resident rows (a local table scan), so
     evaluating it starts no Python worker."""

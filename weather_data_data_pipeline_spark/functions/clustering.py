@@ -62,8 +62,11 @@ def nearest_centroid(
 ) -> Column:
     """struct(dist2, cluster) of the nearest centroid; ties → lowest id.
 
-    k distance expressions evaluated inline per row (whole-stage
-    codegen), argmin via array_min's struct ordering — no join, no UDF.
+    k distance expressions evaluated inline per row, argmin via
+    array_min's struct ordering — no join, no UDF. The stage around
+    them is whole-stage codegen, but the ``zip_with``/``aggregate``
+    lambdas are higher-order functions, which Spark interprets: each
+    row walks the expression tree once per centroid and dimension.
 
     Pass the vector column by NAME to get the single-parse build (r16,
     guide §4 applied to the driver): composing the k zip_with/aggregate

@@ -23,6 +23,14 @@ a single ``jobdate``; the reports, the append and the caller's other
 sinks read those rows until the caller drops the returned frames. The
 append reads only the destination's day partitions the batch covers.
 
+A batch is sized by its bytes, not by the cluster's width: the fact is
+checkpointed into one partition per ``session.PARTITION_BYTES`` (64 MB)
+of payload JSON (``batch_partitions``), and every later step takes its
+width from that. A batch under 64 MB is one partition, so both reports
+aggregate it without a shuffle, the fact append writes from one task,
+and ``rows_to_append`` hands a JDBC sink one partition, i.e. one
+connection.
+
 Sinks: parquet (partitioned by weather date — partition pruning at
 scale, one file per day and batch) as primary, JDBC (full:146-171) as
 the compatibility sink.
@@ -48,6 +56,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from weather_data_data_pipeline_spark.session import PARTITION_BYTES
 from weather_data_data_pipeline_spark.sources.observability import (
     audit_metrics,
     load_record,
@@ -125,16 +134,25 @@ FACT_COLUMNS = (
 DEDUP_KEYS = ["country", "city", "weatherDate"]  # full:164
 
 
-def payloads_to_df(spark: SparkSession, payloads: Iterable[dict]) -> DataFrame:
+def batch_partitions(batch_bytes: int) -> int:
+    """Partitions of a weather batch of ``batch_bytes`` payload JSON
+    bytes: one per ``PARTITION_BYTES``, and one for a batch under it."""
+    return max(1, -(-batch_bytes // PARTITION_BYTES))
+
+
+def payloads_to_df(spark: SparkSession, payloads: Iterable[dict | str]) -> DataFrame:
     """Stage raw payload dicts as a one-column DataFrame of JSON strings.
 
     This is the driver/executor boundary: a fleet fetcher (or a files/
     Kafka source) would produce exactly this frame; everything after is
     distributed. Replaces the reference's driver-side loop (full:22-37).
+    A payload already serialised to a JSON string is taken as it is.
     The strings cross to the JVM as Arrow batches (``get_spark`` turns
     Arrow on), so evaluating the frame starts no Python worker.
     """
-    strings = pd.Series([json.dumps(p) for p in payloads], dtype=object)
+    strings = pd.Series(
+        [p if isinstance(p, str) else json.dumps(p) for p in payloads], dtype=object
+    )
     return spark.createDataFrame(
         pd.DataFrame({"payload": strings}), schema="payload string"
     )
@@ -266,10 +284,17 @@ def rows_to_append(new_rows: DataFrame, destination: DataFrame) -> DataFrame:
     only rows not already in the destination are appended, making the
     hourly re-run idempotent. A left-anti join emits each left row at
     most once however often its key repeats on the right, so the
-    destination keys need no dedup first."""
+    destination keys need no dedup first.
+
+    The result has no more partitions than ``new_rows``: a shuffled join
+    would otherwise spread a one-partition batch over every shuffle
+    partition, and a JDBC sink opens one connection per partition.
+    ``new_rows`` is meant to be materialised, as ``run_full_load``'s
+    fact is: its partition count comes from its RDD, and with AQE on,
+    building the RDD of a frame that shuffles runs those shuffles."""
     return new_rows.join(
         destination.select(*DEDUP_KEYS), on=DEDUP_KEYS, how="left_anti"
-    )
+    ).coalesce(new_rows.rdd.getNumPartitions())
 
 
 def append_idempotent(
@@ -287,7 +312,10 @@ def append_idempotent(
     destination is read with the fact's own schema (no inference job)
     and pruned to them, which makes the read cost per batch rather than
     per history, and that batch-bounded key set is broadcast into the
-    anti join. The write lands one file per day partition.
+    anti join. The rows are repartitioned by ``weather_day`` into the
+    batch's days or its partitions, whichever is fewer, so each day
+    partition gets one file and a one-partition batch is written by one
+    task.
     """
     first, last = days
     path = spark._jvm.org.apache.hadoop.fs.Path(dest_path)
@@ -306,7 +334,7 @@ def append_idempotent(
     n_days = (last - first).days + 1 if first is not None else 1
     return observed_append(
         out.withColumn("weather_day", F.to_date("weatherDate")).repartition(
-            n_days, "weather_day"
+            min(n_days, new_rows.rdd.getNumPartitions()), "weather_day"
         ),
         dest_path,
         audit_metrics(),
@@ -327,7 +355,11 @@ def run_full_load(
     sinks → idempotent fact append.
 
     Materialise once: the fact is parsed, flattened and transformed in
-    one Spark job, with one ``jobdate``, and local-checkpointed; the
+    one Spark job, with one ``jobdate``, and local-checkpointed into
+    ``batch_partitions`` of the payloads' JSON bytes (merged from the
+    payload scan without a shuffle while the batch is no wider than the
+    scan). A one-partition checkpoint reports a single partition, so
+    the report aggregates plan no shuffle. The
     reports, the append and any sink the caller writes the returned
     ``fact`` to all read those rows, so every sink of a batch holds the
     same rows (the reference recomputed the lineage for each action,
@@ -340,13 +372,20 @@ def run_full_load(
     min/max ``weatherDate`` (``observability.load_record``), observed on
     the materialising job and the fact write, with no job of its own.
     """
+    strings = [json.dumps(p) for p in payloads]
+    parts = batch_partitions(sum(map(len, strings)))  # ASCII: chars are bytes
     day = F.to_date("weatherDate")
     fact, offered = with_observation(
-        transform_weather(flatten_forecast(payloads_to_df(spark, payloads)), job_ts),
+        transform_weather(flatten_forecast(payloads_to_df(spark, strings)), job_ts),
         "weather_offered",
         [*audit_metrics(ts_col="weatherDate"),
          F.min(day).alias("first_day"), F.max(day).alias("last_day")],
     )
+    # the payload scan has at most defaultParallelism partitions
+    if parts > spark.sparkContext.defaultParallelism:
+        fact = fact.repartition(parts)
+    else:
+        fact = fact.coalesce(parts)
     fact = fact.localCheckpoint()
     batch = offered.get
     avg_temp = calculate_avg_temperature(fact)

@@ -105,6 +105,11 @@ def get_spark(
 # splits, runtime broadcast flips) and stays on — the 100 TB posture.
 SMALL_WORKING_SET_BYTES = 4 << 30
 
+# Bytes one partition is sized to hold: the shuffle width of a small
+# working set (tune_for_working_set) and the partitions of a weather
+# batch (pipeline.weather.batch_partitions).
+PARTITION_BYTES = 64 << 20
+
 
 def tune_for_working_set(spark: SparkSession, working_set_bytes: int) -> bool:
     """Stats-driven AQE policy: disable adaptive re-planning when the
@@ -117,12 +122,12 @@ def tune_for_working_set(spark: SparkSession, working_set_bytes: int) -> bool:
     spark.conf.set("spark.sql.adaptive.enabled", str(enabled).lower())
     if not enabled:
         # Without AQE coalescing, size the shuffle by bytes-per-partition
-        # (~64 MB target) instead of a per-core constant: a tiny shuffle
+        # (PARTITION_BYTES) instead of a per-core constant: a tiny shuffle
         # split 32 ways is 32 tasks of scheduling overhead. Floor of 8
         # keeps the join/agg probe sides spread. (Measured at sf0.1:
         # total 6.3s at 8 partitions vs 7.2s at 32.)
         cpus = spark.sparkContext.defaultParallelism
-        parts = max(8, min(cpus, working_set_bytes // (64 << 20) or 1))
+        parts = max(8, min(cpus, working_set_bytes // PARTITION_BYTES or 1))
         spark.conf.set("spark.sql.shuffle.partitions", str(parts))
     return enabled
 
