@@ -139,8 +139,10 @@ def test_full_load_sinks_hold_the_same_rows(spark, tmp_path):
 
 
 def _group_shape(spark, group: str) -> tuple[int, int]:
-    """(stages, tasks) that ran for a job group, from the status store."""
+    """(stages, tasks) that ran for a job group, from the status store,
+    once the listener bus has delivered every event."""
     sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     store = sc._jsc.sc().statusStore()
     stages = tasks = 0
     for job in sc.statusTracker().getJobIdsForGroup(group):
@@ -204,10 +206,10 @@ def test_small_batch_runs_in_one_partition_end_to_end(spark, tmp_path):
 @pytest.mark.parametrize("parts", [3, 10])
 def test_wide_batch_keeps_its_partitions_to_the_sinks(spark, tmp_path, monkeypatch, parts):
     """A batch of several partition targets is checkpointed into that
-    many partitions: merged from the payload scan's 8 (3), or shuffled
-    out past them (10). Each day partition still gets one file per
-    batch, the JDBC append gets no more partitions than the batch, and
-    both sinks hold the same rows."""
+    many partitions, merged from the payload scan's without a shuffle
+    (3), or keeps the scan's width when it asks for more (10). Each day
+    partition still gets one file per batch, the JDBC append gets no
+    more partitions than the batch, and both sinks hold the same rows."""
     size = sum(len(json.dumps(p)) for p in _batch(1))
     monkeypatch.setattr(W, "PARTITION_BYTES", -(-size // parts))
     assert W.batch_partitions(size) == parts
@@ -217,7 +219,7 @@ def test_wide_batch_keeps_its_partitions_to_the_sinks(spark, tmp_path, monkeypat
     assert set(files.values()) == {1}
 
     fact = _load(spark, 1, dest, url)
-    assert fact.rdd.getNumPartitions() == parts
+    assert 1 < fact.rdd.getNumPartitions() <= parts
     derby = jdbc.read_table(spark, url, "weather_report_data", PROPS)
     assert W.rows_to_append(fact, derby).rdd.getNumPartitions() <= parts
     # batch 1's one new slot per city falls on 2024-01-02, a new day

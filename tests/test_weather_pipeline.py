@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import datetime as dt
 import gc
+import json
 import re
 import time
 from collections import Counter
@@ -38,6 +39,12 @@ def _payload(city: str, country: str, lat: float, lon: float, start_epoch: int,
 YEAR_BOUNDARY_EPOCH = 1703721600
 
 
+def _raw(spark, payloads: list[dict]):
+    """The payload frame of ``payloads``, serialised as a fetcher's
+    responses arrive: one JSON document each."""
+    return W.payloads_to_df(spark, [json.dumps(p) for p in payloads])
+
+
 @pytest.fixture(scope="module")
 def payloads():
     return [
@@ -48,14 +55,14 @@ def payloads():
 
 @pytest.fixture(scope="module")
 def fact(spark, payloads):
-    raw = W.payloads_to_df(spark, payloads)
+    raw = _raw(spark, payloads)
     return W.transform_weather(
         W.flatten_forecast(raw), job_ts=F.lit("2024-01-02 00:00:00").cast("timestamp")
     ).cache()
 
 
 def test_flatten_shape_and_types(spark, payloads):
-    flat = W.flatten_forecast(W.payloads_to_df(spark, payloads))
+    flat = W.flatten_forecast(_raw(spark, payloads))
     assert flat.count() == 80  # 40 forecasts × 2 cities
     types = dict(flat.dtypes)
     assert types["weatherDate"] == "timestamp"
@@ -129,17 +136,22 @@ def _files_per_day(dest) -> Counter:
     return Counter(f.parent.name for f in Path(dest).glob("weather_day=*/*.parquet"))
 
 
+def _executions(spark) -> list:
+    """The session's SQL executions (status-store entries), oldest
+    first, once the listener bus has delivered every event."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return [execs.apply(i) for i in range(execs.size())]
+
+
 def _last_scan(spark) -> tuple[str, dict[str, str]]:
     """Physical plan text and metric values of the session's latest SQL
     execution that scanned parquet."""
-    sc = spark.sparkContext
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    store = spark._jsparkSession.sharedState().statusStore()
-    execs = store.executionsList()
     last = next(
-        e for e in (execs.apply(i) for i in reversed(range(execs.size())))
+        e for e in reversed(_executions(spark))
         if "Scan parquet" in e.physicalPlanDescription()
     )
+    store = spark._jsparkSession.sharedState().statusStore()
     values = store.executionMetrics(last.executionId())
     metrics = {}
     for i in range(last.metrics().size()):
@@ -156,7 +168,7 @@ def _held(spark, fact, held: str):
         # both cities over 2023-12-26 .. 2024-01-03, less Houston on the
         # 29th: two days on each side of the batch, one batch day short
         wide = W.transform_weather(
-            W.flatten_forecast(W.payloads_to_df(spark, [
+            W.flatten_forecast(_raw(spark, [
                 _payload(c, k, 0.0, 0.0, YEAR_BOUNDARY_EPOCH - 2 * 86400, n=72)
                 for c, k in (("Houston", "US"), ("Berlin", "DE"))
             ])),
@@ -216,7 +228,7 @@ def _check_append(spark, fact, root: str, held: str) -> None:
     # A genuinely new batch still lands.
     extra = W.transform_weather(
         W.flatten_forecast(
-            W.payloads_to_df(
+            _raw(
                 spark,
                 [_payload("Paris", "FR", 48.85, 2.35, YEAR_BOUNDARY_EPOCH, n=5)],
             )
@@ -236,7 +248,7 @@ def test_anti_join_no_destination_keys_survive(spark, fact):
 
 
 def test_incremental_filter_trailing_window(spark, payloads):
-    raw = W.flatten_forecast(W.payloads_to_df(spark, payloads))
+    raw = W.flatten_forecast(_raw(spark, payloads))
     old = W.transform_weather(raw, job_ts=F.lit("2024-01-01 00:00:00").cast("timestamp"))
     new = W.transform_weather(raw, job_ts=F.lit("2024-01-01 10:30:00").cast("timestamp"))
     both = old.unionByName(new)
@@ -326,22 +338,15 @@ def test_batch_partitions_follow_batch_bytes():
     assert W.batch_partitions(mb64 + 1) == 2
 
 
-def _executions(spark) -> dict[int, str]:
-    """Physical plan text of every SQL execution of the session, by id."""
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
-    return {
-        e.executionId(): e.physicalPlanDescription()
-        for e in (execs.apply(i) for i in range(execs.size()))
-    }
-
-
 def test_report_writes_plan_no_shuffle(spark, payloads, tmp_path):
     """A batch under 64 MB is checkpointed into one partition, so both
     report aggregates read it where it lies: neither write shuffles."""
-    before = _executions(spark)
+    before = {e.executionId() for e in _executions(spark)}
     W.run_full_load(spark, payloads, str(tmp_path), "2023-12-28", "2023-12-29")
-    new = [p for i, p in _executions(spark).items() if i not in before]
+    new = [
+        e.physicalPlanDescription()
+        for e in _executions(spark) if e.executionId() not in before
+    ]
     for report in ("weekly_avg_temp_report_data", "weather_avg_humidity_report_data"):
         plans = [p for p in new if report in p]
         assert len(plans) == 1, report
@@ -351,7 +356,7 @@ def test_report_writes_plan_no_shuffle(spark, payloads, tmp_path):
 def test_payloads_cross_to_the_jvm_as_arrow(spark, payloads):
     """The payload frame is JVM-resident rows (a local table scan), so
     evaluating it starts no Python worker."""
-    raw = W.payloads_to_df(spark, payloads)
+    raw = _raw(spark, payloads)
     plan = raw._jdf.queryExecution().executedPlan().toString()
     assert plan.startswith("LocalTableScan"), plan
     assert W.payloads_to_df(spark, []).count() == 0

@@ -25,11 +25,11 @@ append reads only the destination's day partitions the batch covers.
 
 A batch is sized by its bytes, not by the cluster's width: the fact is
 checkpointed into one partition per ``session.PARTITION_BYTES`` (64 MB)
-of payload JSON (``batch_partitions``), and every later step takes its
-width from that. A batch under 64 MB is one partition, so both reports
-aggregate it without a shuffle, the fact append writes from one task,
-and ``rows_to_append`` hands a JDBC sink one partition, i.e. one
-connection.
+of payload JSON (``batch_partitions``), at most the payload scan's
+width, and every later step takes its width from that. A batch under
+64 MB is one partition, so both reports aggregate it without a shuffle,
+the fact append writes from one task, and ``rows_to_append`` hands a
+JDBC sink one partition, i.e. one connection.
 
 Sinks: parquet (partitioned by weather date — partition pruning at
 scale, one file per day and batch) as primary, JDBC (full:146-171) as
@@ -140,19 +140,17 @@ def batch_partitions(batch_bytes: int) -> int:
     return max(1, -(-batch_bytes // PARTITION_BYTES))
 
 
-def payloads_to_df(spark: SparkSession, payloads: Iterable[dict | str]) -> DataFrame:
-    """Stage raw payload dicts as a one-column DataFrame of JSON strings.
+def payloads_to_df(spark: SparkSession, payloads: Iterable[str]) -> DataFrame:
+    """Stage raw payloads, one JSON document each (the text an API
+    response carries), as a one-column DataFrame of those strings.
 
     This is the driver/executor boundary: a fleet fetcher (or a files/
     Kafka source) would produce exactly this frame; everything after is
     distributed. Replaces the reference's driver-side loop (full:22-37).
-    A payload already serialised to a JSON string is taken as it is.
     The strings cross to the JVM as Arrow batches (``get_spark`` turns
     Arrow on), so evaluating the frame starts no Python worker.
     """
-    strings = pd.Series(
-        [p if isinstance(p, str) else json.dumps(p) for p in payloads], dtype=object
-    )
+    strings = pd.Series(list(payloads), dtype=object)
     return spark.createDataFrame(
         pd.DataFrame({"payload": strings}), schema="payload string"
     )
@@ -356,10 +354,13 @@ def run_full_load(
 
     Materialise once: the fact is parsed, flattened and transformed in
     one Spark job, with one ``jobdate``, and local-checkpointed into
-    ``batch_partitions`` of the payloads' JSON bytes (merged from the
-    payload scan without a shuffle while the batch is no wider than the
-    scan). A one-partition checkpoint reports a single partition, so
-    the report aggregates plan no shuffle. The
+    ``batch_partitions`` of the payloads' JSON bytes, merged from the
+    payload scan's partitions without a shuffle (a batch that asks for
+    more than the scan has keeps the scan's width). A one-partition
+    checkpoint reports a single partition, so the report aggregates
+    plan no shuffle. One task then parses a whole batch under 64 MB,
+    which saves CPU but lengthens the wall time of batches from about
+    10 MB up (README, weather section). The
     reports, the append and any sink the caller writes the returned
     ``fact`` to all read those rows, so every sink of a batch holds the
     same rows (the reference recomputed the lineage for each action,
@@ -381,12 +382,7 @@ def run_full_load(
         [*audit_metrics(ts_col="weatherDate"),
          F.min(day).alias("first_day"), F.max(day).alias("last_day")],
     )
-    # the payload scan has at most defaultParallelism partitions
-    if parts > spark.sparkContext.defaultParallelism:
-        fact = fact.repartition(parts)
-    else:
-        fact = fact.coalesce(parts)
-    fact = fact.localCheckpoint()
+    fact = fact.coalesce(parts).localCheckpoint()
     batch = offered.get
     avg_temp = calculate_avg_temperature(fact)
     avg_humidity = calculate_avg_humidity(fact, start_date, end_date)

@@ -11,6 +11,8 @@ uses, now visible to the correctness gate as well.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,7 +48,7 @@ def _payload(city: str, country: str, lat: float, lon: float, temp0: float) -> d
 
 def _fact(spark: SparkSession) -> DataFrame:
     apply_runtime_conf(spark)  # UTC — weekofyear/to_date must not float
-    raw = payloads_to_df(spark, [_payload(*c) for c in _CITIES])
+    raw = payloads_to_df(spark, [json.dumps(_payload(*c)) for c in _CITIES])
     return transform_weather(
         raw.transform(flatten_forecast),
         job_ts=F.lit("2024-01-02 00:00:00").cast("timestamp"),
