@@ -18,9 +18,9 @@ Session: the bench tables are warmed into the engine's cache (documents
 at ``tables.DOC_FANOUT`` partitions) and ``session.tune_for_working_set``
 sets the AQE policy, which at sf0.1 turns AQE off and fixes the shuffle
 width. Each query runs once into a ``noop`` sink under its own job
-group, and its bytes are the sum of that group's stages'
-``shuffleWriteBytes``. The gate is pinned to sf0.1, the scale of its
-baseline.
+group, and its bytes are the sum of ``shuffleWriteBytes`` over the
+distinct stages that group's jobs list. The gate is pinned to sf0.1,
+the scale of its baseline.
 
 Bytes are deterministic per (plan, SF) modulo compression jitter; the
 gate flags growth beyond 1.30x + 1 MB slack. New queries and stale
@@ -89,20 +89,22 @@ def run_query(spark, fn, sf_dir: str) -> float:
 
 
 def shuffle_bytes_for_group(spark, group: str) -> int:
-    """Total shuffle-write bytes of every job in a job group, from the
-    AppStatusStore."""
+    """Total shuffle-write bytes of the stages of a job group's jobs,
+    from the AppStatusStore. A stage that several jobs list (jobs
+    running at the same time over one shuffle) is counted once."""
     st = spark.sparkContext.statusTracker()
     store = spark.sparkContext._jsc.sc().statusStore()
-    total = 0
+    stage_ids = set()
     for j in st.getJobIdsForGroup(group):
         info = st.getJobInfo(j)
-        if info is None:
-            continue
-        for sid in info.stageIds:
-            try:
-                total += store.lastStageAttempt(sid).shuffleWriteBytes()
-            except Py4JJavaError:
-                pass  # stage evicted from the store or never ran
+        if info is not None:
+            stage_ids.update(info.stageIds)
+    total = 0
+    for sid in stage_ids:
+        try:
+            total += store.lastStageAttempt(sid).shuffleWriteBytes()
+        except Py4JJavaError:
+            pass  # stage evicted from the store or never ran
     return total
 
 

@@ -39,6 +39,7 @@ def test_tune_for_working_set_policy(spark):
         tune_for_working_set,
     )
 
+    before_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     before_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         assert tune_for_working_set(spark, SMALL_WORKING_SET_BYTES - 1) is False
@@ -47,5 +48,19 @@ def test_tune_for_working_set_policy(spark):
         assert tune_for_working_set(spark, 100 << 40) is True
         assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        spark.conf.set("spark.sql.adaptive.enabled", before_aqe)
         spark.conf.set("spark.sql.shuffle.partitions", before_parts)
+
+
+def test_tune_policy_test_restores_the_confs_it_found(spark):
+    """The policy test runs on the suite's shared session, so it must
+    leave AQE as it found it: every test file after it would otherwise
+    run with the value the test last set."""
+    found = spark.conf.get("spark.sql.adaptive.enabled")
+    try:
+        for start in ("false", "true"):
+            spark.conf.set("spark.sql.adaptive.enabled", start)
+            test_tune_for_working_set_policy(spark)
+            assert spark.conf.get("spark.sql.adaptive.enabled") == start
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", found)

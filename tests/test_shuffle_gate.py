@@ -2,7 +2,8 @@
 (``compare``) is pinned without a Spark session: growth beyond 1.30x +
 1 MB fails, new and stale queries are info, and a missing baseline
 accepts nothing unless --update. Its measurement is pinned on the test
-session: a query measures the same bytes however often it runs."""
+session: a query measures the same bytes however often it runs, and a
+stage that two jobs list counts once."""
 
 import importlib.util
 from pathlib import Path
@@ -67,3 +68,47 @@ def test_a_rerun_measures_the_same_shuffle_bytes(spark):
         measured.append(shuffled)
     # the same bytes, up to compression jitter
     assert measured[0] > 0 and measured[1] == pytest.approx(measured[0], rel=0.01), measured
+
+
+def test_a_stage_two_jobs_list_counts_once(spark):
+    """Two jobs that run at the same time over one shuffle share its map
+    stage: both list the same stage id, and its bytes were written once.
+    So the group measures what one job over that shuffle measures."""
+    import threading
+    import time
+
+    sc = spark.sparkContext
+
+    def slow(rows):
+        time.sleep(1.5)  # keeps the map stage running while job 2 starts
+        return rows
+
+    def run_group(group, jobs):
+        shuffled = (
+            sc.parallelize(range(2000), 4)
+            .mapPartitions(slow)
+            .map(lambda x: (x % 7, x))
+            .reduceByKey(lambda a, b: a + b, 3)
+        )
+
+        def action():
+            sc.setJobGroup(group, group)
+            shuffled.count()
+
+        threads = [threading.Thread(target=action) for _ in range(jobs)]
+        for t in threads:
+            t.start()
+            time.sleep(0.5)
+        for t in threads:
+            t.join()
+        st = sc.statusTracker()
+        stage_lists = [
+            list(st.getJobInfo(j).stageIds) for j in st.getJobIdsForGroup(group)
+        ]
+        return gate.shuffle_bytes_for_group(spark, group), stage_lists
+
+    one, _ = run_group("gate-shared-stage-1", 1)
+    two, stage_lists = run_group("gate-shared-stage-2", 2)
+    listed = [sid for stages in stage_lists for sid in stages]
+    assert len(listed) > len(set(listed)), stage_lists  # a shared stage
+    assert one > 0 and two == one, (one, two)

@@ -11,15 +11,6 @@ search, text analysis, multimodal columns) and designed for 100 TB scale:
 - Pandas UDFs (Arrow) only where built-in functions cannot express semantics
 """
 
-# Install the py4j reflection cache BEFORE anything imports pyspark.ml
-# (its modules early-bind `from py4j.java_gateway import java_import`,
-# and registry's import chain reaches pyspark.ml via the classifier) —
-# see py4j_fastpath's module doc. Idempotent; session.py re-invokes it
-# for direct-submodule import paths.
-from weather_data_data_pipeline_spark import py4j_fastpath as _py4j_fastpath
-
-_py4j_fastpath.install()
-
 from weather_data_data_pipeline_spark.registry import (
     get_query,
     oracle_sql,

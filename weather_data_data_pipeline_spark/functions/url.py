@@ -81,92 +81,6 @@ def _col(c: Column | str) -> Column:
     return c if isinstance(c, Column) else F.col(c)
 
 
-# --- Spark-dialect expr-string twins (r16, guide §4 on the driver) ----
-# The Column chains below cost ~900 py4j round trips per
-# url_domain_dedup_report build; passing a column NAME routes through
-# ONE parsed expression instead. Keep in lockstep with _parts /
-# _parts_sql — three dialects of the same split pipeline.
-
-
-def _parts_spark_sql(expr: str) -> dict[str, str]:
-    u0 = f"split_part({expr}, '#', 1)"
-    has = f"(instr({u0}, '://') > 0)"
-    scheme = (
-        f"CASE WHEN {has} THEN lower(split_part({u0}, '://', 1)) "
-        f"ELSE 'http' END"
-    )
-    rest = f"CASE WHEN {has} THEN split_part({u0}, '://', 2) ELSE {u0} END"
-    hostport = f"split_part(split_part({rest}, '/', 1), '?', 1)"
-    pathq = f"substr({rest}, length({hostport}) + 1)"
-    hostport_na = f"regexp_replace({hostport}, '^.*@', '')"
-    host = (
-        f"regexp_replace(lower(split_part({hostport_na}, ':', 1)), "
-        f"'^(www\\\\.)+', '')"
-    )
-    port = f"split_part({hostport_na}, ':', 2)"
-    path = f"regexp_replace(split_part({pathq}, '?', 1), '/+$', '')"
-    query = (
-        f"CASE WHEN instr({pathq}, '?') > 0 "
-        f"THEN split_part({pathq}, '?', 2) ELSE '' END"
-    )
-    return {
-        "scheme": scheme,
-        "host": host,
-        "port": port,
-        "path": path,
-        "query": query,
-    }
-
-
-def _keep_param_spark_sql(var: str = "p") -> str:
-    terms = [f"{var} <> ''"]
-    for pre in TRACKING_PREFIXES:
-        terms.append(f"NOT startswith({var}, '{pre}')")
-    for name in TRACKING_NAMES:
-        terms.append(f"NOT startswith({var}, '{name}=')")
-        terms.append(f"{var} <> '{name}'")
-    return " AND ".join(terms)
-
-
-def _canonical_url_spark_sql(expr: str) -> str:
-    p = _parts_spark_sql(expr)
-    keep_port = (
-        f"(({p['port']}) <> '' "
-        f"AND NOT (({p['scheme']}) = 'http' AND ({p['port']}) = '80') "
-        f"AND NOT (({p['scheme']}) = 'https' AND ({p['port']}) = '443'))"
-    )
-    params = (
-        f"array_sort(filter(split({p['query']}, '&'), "
-        f"p -> {_keep_param_spark_sql('p')}))"
-    )
-    return (
-        f"CASE WHEN ({expr}) IS NULL THEN CAST(NULL AS STRING) ELSE "
-        f"concat({p['scheme']}, '://', {p['host']}, "
-        f"CASE WHEN {keep_port} THEN concat(':', {p['port']}) "
-        f"ELSE '' END, "
-        f"{p['path']}, "
-        f"CASE WHEN size({params}) > 0 "
-        f"THEN concat('?', array_join({params}, '&')) "
-        f"ELSE '' END) END"
-    )
-
-
-def _registrable_domain_spark_sql(host_expr: str) -> str:
-    labels = f"split({host_expr}, '\\\\.')"
-    last2 = (
-        f"concat_ws('.', element_at({labels}, -2), "
-        f"element_at({labels}, -1))"
-    )
-    suffixes = ", ".join(f"'{s}'" for s in MULTIPART_SUFFIXES)
-    return (
-        f"CASE WHEN ({host_expr}) IS NULL THEN CAST(NULL AS STRING) "
-        f"WHEN size({labels}) <= 2 THEN {host_expr} "
-        f"WHEN ({last2}) IN ({suffixes}) "
-        f"THEN concat_ws('.', element_at({labels}, -3), {last2}) "
-        f"ELSE {last2} END"
-    )
-
-
 def _parts(u: Column) -> dict[str, Column]:
     """Split a raw URL into (scheme, host, port, path, query) Columns.
 
@@ -229,8 +143,6 @@ def canonical_url(c: Column | str) -> Column:
     NULL in → NULL out (pinned explicitly on BOTH engines: DuckDB's
     ``concat`` otherwise SKIPS NULL arguments where Spark's propagates
     them — the one place the twins would silently diverge)."""
-    if isinstance(c, str):
-        return F.expr(_canonical_url_spark_sql(f"`{c}`"))
     u = _col(c)
     p = _parts(u)
     keep_port = (
@@ -259,8 +171,6 @@ def canonical_url(c: Column | str) -> Column:
 
 def canonical_host(c: Column | str) -> Column:
     """Lowercased, www-stripped host of a raw URL."""
-    if isinstance(c, str):
-        return F.expr(_parts_spark_sql(f"`{c}`")["host"])
     return _parts(_col(c))["host"]
 
 
@@ -269,10 +179,6 @@ def registrable_domain(host: Column | str) -> Column:
     three when the last two form a multi-part public suffix. NULL in →
     NULL out (explicit on both engines, same reason as
     :func:`canonical_url`)."""
-    if isinstance(host, str):
-        return F.expr(
-            _registrable_domain_spark_sql(f"`{host}`")
-        )
     h = _col(host)
     labels = F.split(h, r"\.")
     n = F.size(labels)
@@ -286,17 +192,6 @@ def registrable_domain(host: Column | str) -> Column:
         ).otherwise(last2)
     )
     return F.when(h.isNull(), F.lit(None).cast("string")).otherwise(out)
-
-
-def url_registrable_domain(url_col: str) -> Column:
-    """registrable_domain(canonical_host(url)) composed as ONE parsed
-    expression — the per-URL domain extraction every rollup/dedup call
-    site uses. Equivalent to
-    ``registrable_domain(canonical_host(url_col))`` (the host subtree
-    inlines per reference exactly as the Column form's shared-object
-    reuse does), at a single py4j round trip."""
-    host = _parts_spark_sql(f"`{url_col}`")["host"]
-    return F.expr(_registrable_domain_spark_sql(host))
 
 
 def domain_share_rollup(

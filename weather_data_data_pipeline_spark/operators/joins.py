@@ -29,13 +29,6 @@ def anti_join_dedup(
     return new_rows.join(dest_keys, on=list(keys), how="left_anti")
 
 
-def idempotent_append_plan(
-    new_rows: DataFrame, destination: DataFrame, keys: Sequence[str]
-) -> DataFrame:
-    """Rows that an append run would actually write (J1 applied)."""
-    return anti_join_dedup(new_rows, destination, keys)
-
-
 def broadcast_dim_join(
     fact: DataFrame, dim: DataFrame, on: Sequence[str] | None = None, how: str = "inner"
 ) -> DataFrame:

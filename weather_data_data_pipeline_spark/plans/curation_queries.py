@@ -2126,15 +2126,16 @@ def _url_report_oracle() -> str:
 )
 def url_domain_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from weather_data_data_pipeline_spark.functions.url import (
+        canonical_host,
         canonical_url,
-        url_registrable_domain,
+        registrable_domain,
     )
 
     docs = load(spark, sf_dir, "documents")
     c = docs.select(_raw_url_col().alias("raw_url")).select(
         "raw_url",
         canonical_url("raw_url").alias("curl"),
-        url_registrable_domain("raw_url").alias("domain"),
+        registrable_domain(canonical_host("raw_url")).alias("domain"),
     )
     agg = c.groupBy("domain").agg(
         F.count("*").cast("bigint").alias("n_urls"),
@@ -2214,13 +2215,14 @@ def _domain_rollup_oracle() -> str:
 )
 def domain_blocklist_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from weather_data_data_pipeline_spark.functions.url import (
+        canonical_host,
         domain_share_rollup,
-        url_registrable_domain,
+        registrable_domain,
     )
 
     docs = load(spark, sf_dir, "documents")
     c = docs.select(_raw_url_col().alias("raw_url")).select(
-        url_registrable_domain("raw_url").alias("domain")
+        registrable_domain(canonical_host("raw_url")).alias("domain")
     )
     # SHARED rollup fragment (functions/url.py) — the streaming
     # url_blocklist_monitor_sink compiles the identical expressions

@@ -13,15 +13,6 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
-from weather_data_data_pipeline_spark import py4j_fastpath
-
-# Driver-side reflection cache for py4j (see py4j_fastpath module doc):
-# installed at import so every entry path — perfbench, the driver's own
-# harness importing __spark_entry__, scripts — builds plans with one
-# round trip per F.* call instead of three. Pure process-local lookup
-# caching of immutable JVM handles; no Spark semantics change.
-py4j_fastpath.install()
-
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 # Parent dir of this package — Python workers unpickle UDF closures by
@@ -82,11 +73,11 @@ def get_spark(
         # fetched cities from query predicates).
         "spark.sql.python.filterPushdown.enabled": "true",
         # Disable PySpark's per-API-call call-site capture (DataFrame
-        # debugging context): it adds 2+ py4j round-trips to EVERY
-        # Column/DataFrame operation — measured ~60% of plan-construction
-        # wall time (0.58s of 0.96s over 5 builds of TPC-H Q1). Error
-        # messages lose the Python call-site line, nothing else; turn it
-        # back on when debugging a plan, not in production paths.
+        # debugging context): it adds py4j round-trips to EVERY
+        # Column/DataFrame operation. Measured (sf0.1, 4 vCPUs): with it
+        # on, six llm_curation plan builds made 3,459 py4j calls, not
+        # 1,509. Error messages lose the Python call-site line, nothing
+        # else; turn it back on when debugging a plan.
         "spark.python.sql.dataFrameDebugging.enabled": "false",
         # worker_daemon: 0.28 → 0.05 s of worker CPU per task (CPython 3.11).
         "spark.python.daemon.module": "weather_data_data_pipeline_spark.worker_daemon",
