@@ -11,8 +11,8 @@ disabled, a broadcast flipping to shuffle — all show up as the same
 Exchange count but more bytes on the wire.
 
 Usage:
-    python scripts/check_shuffle_bytes.py            # gate
-    python scripts/check_shuffle_bytes.py --update   # accept
+    SPARK_GRAFT_CPUS=32 python scripts/check_shuffle_bytes.py            # gate
+    SPARK_GRAFT_CPUS=32 python scripts/check_shuffle_bytes.py --update   # accept
 
 Session: the bench tables are warmed into the engine's cache (documents
 at ``tables.DOC_FANOUT`` partitions) and ``session.tune_for_working_set``
@@ -22,9 +22,14 @@ group, and its bytes are the sum of ``shuffleWriteBytes`` over the
 distinct stages that group's jobs list. The gate is pinned to sf0.1,
 the scale of its baseline.
 
-Bytes are deterministic per (plan, SF) modulo compression jitter; the
-gate flags growth beyond 1.30x + 1 MB slack. New queries and stale
-baseline entries are reported as info; new queries enter the baseline
+Bytes are deterministic per (plan, SF, cores) modulo compression
+jitter: ``SPARK_GRAFT_CPUS`` sets the session's ``local[N]`` width,
+and a partition count that follows it changes a query's bytes
+(``embedding_near_dup`` writes 9,795,851 B at 4 cores and 6,615,874 B
+at 32). The baseline was recorded at 32, so pin
+``SPARK_GRAFT_CPUS=32`` as ``plan_hashes.py`` does. The gate flags
+growth beyond 1.30x + 1 MB slack. New queries and stale baseline
+entries are reported as info; new queries enter the baseline
 only under --update. Nothing is written unless --update is given.
 
 The session helpers here (``warm_bench_tables``, ``run_query``,

@@ -394,6 +394,32 @@ def test_band_shape_validation():
     assert 0 < lsh_candidate_recall(0.5, 32, 8) < 1
 
 
+def test_minhash_entry_points_refuse_a_band_shape_that_drops_permutations(
+    spark,
+):
+    """The banding itself refuses a band shape that drops permutations.
+    With 64 bands over 32 portable permutations every bucket would be
+    md5('') and every pair of documents a candidate; 10 bands over 64
+    xxhash64 permutations would silently drop 4 of them."""
+    import pytest
+
+    from weather_data_data_pipeline_spark.functions.dedup import (
+        incremental_near_dedup,
+        minhash_dedup_pairs_portable,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "the cat sat on the mat again"), (2, "a dog ran in the park today")],
+        "doc_id long, text string",
+    )
+    with pytest.raises(ValueError):
+        minhash_dedup_pairs_portable(docs, "doc_id", "text", num_perm=32, bands=64)
+    with pytest.raises(ValueError):
+        minhash_dedup_pairs(docs, "doc_id", "text", num_perm=64, bands=10)
+    with pytest.raises(ValueError):
+        incremental_near_dedup(docs, None, "doc_id", "text", bands=10)
+
+
 def test_lsh_swap_reproduces_exact_pairs_on_corpus(spark):
     """SCALE.md's prescribed saturation remedy — swap jaccard_pairs for
     the capped LSH family — is one line BECAUSE the two agree where it

@@ -466,62 +466,156 @@ def test_near_dedup_stream_append_matches_sequential_batches(spark, tmp_path):
     assert jaccard_pairs(kept, "doc_id", "text", threshold=0.5).count() == 0
 
 
-def test_near_dedup_stream_append_indexed_matches_unindexed(spark, tmp_path):
-    """The index-probing streaming sink must produce the SAME corpus as
-    the recompute-per-batch sink (index == recompute, lifted to the
-    stream), and must maintain the band-partitioned index on disk as it
-    appends."""
+_ND_B1 = [
+    (1, "the quick brown fox jumps over the lazy dog near the river bank"),
+    (2, "unrelated text about shuffle partitioning strategies in spark"),
+]
+_ND_B2 = [
+    (10, _ND_B1[0][1] + " again"),  # near-dup of kept 1
+    (11, "fresh content about bloom filters pruning join probes early"),
+    (12, "fresh content about bloom filters pruning join probes soon"),  # of 11
+]
+_ND_SCHEMA = "doc_id long, text string"
+
+
+def _index_ids(spark, dest):
+    sigs = spark.read.parquet(f"{dest}_minhash_index/signatures")
+    return sorted(r["doc_id"] for r in sigs.select("doc_id").collect())
+
+
+def test_near_dedup_stream_append_keeps_band_partitioned_index(spark, tmp_path):
+    """The near-dedup sink maintains its MinHash index beside the corpus
+    (``<dest>_minhash_index``) as it appends: buckets one directory per
+    band, signatures covering exactly the kept documents."""
     import os
 
     from weather_data_data_pipeline_spark.functions.dedup import jaccard_pairs
 
-    base = "the quick brown fox jumps over the lazy dog near the river bank"
-    b1 = [(1, base), (2, "unrelated text about shuffle partitioning strategies in spark")]
-    b2 = [
-        (10, base + " again"),
-        (11, "fresh content about bloom filters pruning join probes early"),
-        (12, "fresh content about bloom filters pruning join probes soon"),
-    ]
-    schema = "doc_id long, text string"
-    src = str(tmp_path / "src_nd_idx")
-    # one file per logical batch (see the unindexed test)
-    spark.createDataFrame(b1, schema).coalesce(1).write.parquet(src)
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(src)
-
-    def run(sink_fn, dest, ckpt, **kw):
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(src)
+    schema = spark.createDataFrame([], _ND_SCHEMA).schema
+    src = str(tmp_path / "src")
+    _one_file_per_batch(spark, src, [_ND_B1, _ND_B2], schema)
+    dest = str(tmp_path / "kept")
+    S.run_available_now(
+        S.near_dedup_stream_append(
+            _file_stream(spark, src, schema),
+            dest, "doc_id", "text", str(tmp_path / "ck"),
         )
-        q = sink_fn(stream, dest, **kw).trigger(availableNow=True).start()
-        q.awaitTermination(180)
-        return sorted(r["doc_id"] for r in spark.read.parquet(dest).collect())
-
-    idx = str(tmp_path / "nd_index")
-    got_indexed = run(
-        lambda s, d, **kw: S.near_dedup_stream_append_indexed(
-            s, d, idx, "doc_id", "text", str(tmp_path / "ck_i")
-        ),
-        str(tmp_path / "kept_indexed"),
-        None,
     )
-    got_plain = run(
-        lambda s, d, **kw: S.near_dedup_stream_append(
-            s, d, "doc_id", "text", str(tmp_path / "ck_p")
-        ),
-        str(tmp_path / "kept_plain"),
-        None,
-    )
-    assert got_indexed == got_plain
-    kept = spark.read.parquet(str(tmp_path / "kept_indexed"))
+    kept = spark.read.parquet(dest)
+    got = sorted(r["doc_id"] for r in kept.collect())
+    assert got == [1, 2, 11]
     assert jaccard_pairs(kept, "doc_id", "text", threshold=0.5).count() == 0
-    # the index was materialized band-partitioned and covers the kept docs
-    bands = [d for d in os.listdir(f"{idx}/buckets") if d.startswith("band=")]
-    assert len(bands) > 0
-    sigs = spark.read.parquet(f"{idx}/signatures")
-    assert sorted(r["doc_id"] for r in sigs.select("doc_id").collect()) == got_indexed
+    buckets = f"{dest}_minhash_index/buckets"
+    assert len([d for d in os.listdir(buckets) if d.startswith("band=")]) == 16
+    assert _index_ids(spark, dest) == got
+
+
+def test_near_dedup_stream_append_builds_a_missing_index(spark, tmp_path):
+    """A corpus written without an index (as every destination of the
+    earlier recompute-per-batch sink is) gets its index built from the
+    corpus on the next batch, and that batch still drops a near-duplicate
+    of a kept document."""
+    dest = str(tmp_path / "kept")
+    spark.createDataFrame(_ND_B1, _ND_SCHEMA).write.parquet(dest)
+    src = str(tmp_path / "src")
+    schema = spark.read.parquet(dest).schema
+    _one_file_per_batch(spark, src, [_ND_B2], schema)
+    S.run_available_now(
+        S.near_dedup_stream_append(
+            _file_stream(spark, src, schema),
+            dest, "doc_id", "text", str(tmp_path / "ck"),
+        )
+    )
+    got = sorted(r["doc_id"] for r in spark.read.parquet(dest).collect())
+    assert got == [1, 2, 11]
+    assert _index_ids(spark, dest) == got
+
+
+def test_near_dedup_stream_append_after_a_batch_without_shingles(
+    spark, tmp_path
+):
+    """A first batch whose documents are all shorter than one shingle
+    leaves an index with no bucket file, which cannot be read back. The
+    next batches must still run, probe once there are buckets, and index
+    every document that has a signature."""
+    schema = spark.createDataFrame([], _ND_SCHEMA).schema
+    src = str(tmp_path / "src")
+    short = [(100, "tiny"), (101, "two words")]
+    _one_file_per_batch(spark, src, [short, _ND_B1, _ND_B2], schema)
+    dest = str(tmp_path / "kept")
+    S.run_available_now(
+        S.near_dedup_stream_append(
+            _file_stream(spark, src, schema),
+            dest, "doc_id", "text", str(tmp_path / "ck"),
+        )
+    )
+    got = sorted(r["doc_id"] for r in spark.read.parquet(dest).collect())
+    assert got == [1, 2, 11, 100, 101]
+    assert _index_ids(spark, dest) == [1, 2, 11]
+
+
+def test_near_dedup_stream_append_replays_a_crashed_batch_once(
+    spark, tmp_path, monkeypatch
+):
+    """A crash at any write of a micro-batch, then a restart on the same
+    checkpoint, leaves each kept document once in the corpus and in the
+    index. The sink writes the index before the corpus: index rows of a
+    crashed batch have no corpus text and never verify, so the replay
+    keeps that batch again; in the other order the replay would find no
+    candidate in the stale index and append the batch a second time."""
+    import itertools
+    import shutil
+
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    schema = spark.createDataFrame([], _ND_SCHEMA).schema
+    src = str(tmp_path / "src")
+    _one_file_per_batch(spark, src, [_ND_B1], schema)
+    base = tmp_path / "after_batch0"
+    S.run_available_now(
+        S.near_dedup_stream_append(
+            _file_stream(spark, src, schema),
+            str(base / "kept"), "doc_id", "text", str(base / "ck"),
+        )
+    )
+    _one_file_per_batch(spark, src, [_ND_B2], schema)
+
+    real_parquet = DataFrameWriter.parquet
+    for k in itertools.count(1):
+        run = tmp_path / f"crash_at_write_{k}"
+        shutil.copytree(base, run)
+        dest, ck = str(run / "kept"), str(run / "ck")
+        calls = []
+
+        def parquet(self, *args, **kwargs):
+            calls.append(args)
+            if len(calls) == k:
+                raise RuntimeError(f"injected failure of write {k}")
+            return real_parquet(self, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+        writer = S.near_dedup_stream_append(
+            _file_stream(spark, src, schema), dest, "doc_id", "text", ck
+        )
+        try:
+            S.run_available_now(writer)
+            crashed = False
+        except StreamingQueryException:
+            crashed = True
+        monkeypatch.setattr(DataFrameWriter, "parquet", real_parquet)
+        if crashed:
+            S.run_available_now(
+                S.near_dedup_stream_append(
+                    _file_stream(spark, src, schema), dest, "doc_id", "text", ck
+                )
+            )
+        got = sorted(r["doc_id"] for r in spark.read.parquet(dest).collect())
+        assert got == [1, 2, 11], f"crash at write {k}"
+        assert set(_index_ids(spark, dest)) >= set(got), f"crash at write {k}"
+        if not crashed:
+            break
+    assert k > 2  # the batch wrote the index and the corpus
 
 
 def test_drift_monitor_stream_matches_batch_psi(spark, tmp_path):

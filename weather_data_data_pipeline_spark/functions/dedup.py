@@ -6,17 +6,21 @@ Scale design (100 TB corpus of documents):
 - jaccard:  exact pairwise similarity via an inverted shingle index
             (explode→self-join→count); quadratic in the worst case, so it
             is the *verifier*, not the candidate generator, at scale.
-- minhash:  64-permutation signatures (two interchangeable physical
-            forms, see minhash_signatures / minhash_signatures_vectorized);
-            banded LSH turns all-pairs into per-bucket micro-joins. This
-            is the scalable candidate generator; candidates are then
-            verified with exact Jaccard on the (tiny) candidate set.
+- minhash:  64-permutation signatures (minhash_signatures_vectorized;
+            minhash_signatures_portable is the md5 family an SQL oracle
+            replays); banded LSH turns all-pairs into per-bucket
+            micro-joins. This is the scalable candidate generator;
+            candidates are then verified with exact Jaccard on the
+            (tiny) candidate set. Banding, the capped band join, the
+            cross-corpus drop and the within-batch drop are each one
+            private helper that every MinHash entry point shares.
 - simhash:  64-bit signature via bit-vote aggregation, Hamming-banded
             join for near-dup candidates.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame
@@ -252,42 +256,6 @@ def _pair_overlap(
     return pairs.join(ca, "id_a").join(cb, "id_b")
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    num_perm: int = DEFAULT_NUM_PERM,
-) -> DataFrame:
-    """MinHash signature per document: sig[i] = min over shingles of
-    xxhash64(i, xxhash64(shingle)).
-
-    Two-level hashing: the variable-length shingle string is hashed ONCE
-    to a long, then the 64 "permutations" re-hash that fixed 8-byte value
-    with the permutation index as seed material. Hashing 64 longs costs a
-    fraction of hashing 64 strings — measured 4.5× faster end-to-end at
-    sf0.1 than the one-level xxhash64(i, shingle) form.
-
-    Explode + 64 min-aggregates: every expression (xxhash64, min) stays
-    inside whole-stage codegen and the aggregation is partial+final, so
-    the shuffle carries one 64-long row per document. (A "shuffle-free"
-    nested higher-order-function formulation — array_min ∘ transform —
-    was measured 14× slower at sf0.1: HOF lambdas are interpreted, not
-    codegen'd. Measured, not guessed.)
-    """
-    sh = hashed_shingles(df, id_col, text_col, n)
-    # parsed expr strings, not composed Columns: num_perm × 4 py4j
-    # calls of plan-build driver time otherwise (the simhash r8 lesson)
-    mins = [
-        F.expr(f"min(xxhash64({i}, h)) AS h{i}")
-        for i in range(num_perm)
-    ]
-    agg = sh.groupBy(id_col).agg(*mins)
-    return agg.select(
-        id_col, F.array(*[f"h{i}" for i in range(num_perm)]).alias("signature")
-    )
-
-
 def _splitmix64(x):
     """SplitMix64 finalizer over a uint64 ndarray — the vectorized
     permutation family for MinHash (input is already an xxhash64 value,
@@ -312,14 +280,13 @@ def minhash_signatures_vectorized(
     permutations of a document computed as one (shingles × num_perm)
     numpy broadcast.
 
-    Tradeoff vs the JVM form (:func:`minhash_signatures`), measured at
-    sf0.1 warm: 0.5s vs 0.9s — the 64 per-shingle hash evaluations move
-    from codegen'd-but-scalar JVM calls into SIMD numpy. The cost is
-    shuffle width: collect_list carries every shingle hash (~O(tokens)
-    longs/doc) where the min-agg form shuffles a fixed 64 longs/doc
-    after map-side partial aggregation. CPU-bound deployments (this
-    box) want this form; shuffle-bound clusters want the JVM form —
-    both produce valid signatures and share the banding/verify stages.
+    Tradeoff against a JVM form of 64 ``min(xxhash64(i, h))``
+    aggregates, measured at sf0.1 warm: 0.5s vs 0.9s — the 64
+    per-shingle hash evaluations move from codegen'd-but-scalar JVM
+    calls into SIMD numpy. The cost is shuffle width: collect_list
+    carries every shingle hash (~O(tokens) longs/doc) where a min-agg
+    form shuffles a fixed 64 longs/doc after map-side partial
+    aggregation.
 
     ANSI note: the multiply-wrap permutation family is expressible in
     JVM expressions only with overflow-wrapping arithmetic, which ANSI
@@ -360,6 +327,92 @@ def minhash_signatures_vectorized(
     return lists.select(id_col, sig_udf("hs").alias("signature"))
 
 
+def _xxhash64_band(b: int, rows: int) -> "F.Column":
+    """Bucket of band ``b`` in the xxhash64 family: xxhash64 over the
+    band's signature slots accessed by index (codegen'd getItem), not a
+    string concat inside a higher-order-function lambda (interpreted per
+    element)."""
+    return F.xxhash64(*[F.col("signature")[b * rows + j] for j in range(rows)])
+
+
+def _md5_band(b: int, rows: int) -> "F.Column":
+    """Bucket of band ``b`` in the portable family:
+    ``md5(h_i || '|' || h_j ...)``, the expression the SQL oracles
+    replay (see :func:`minhash_dedup_pairs_portable`)."""
+    return F.md5(
+        F.concat_ws("|", *[F.col(f"h{b * rows + j}") for j in range(rows)])
+    )
+
+
+def _band_buckets(
+    sigs: DataFrame,
+    id_col: str,
+    num_perm: int,
+    bands: int,
+    band_bucket: Callable[[int, int], "F.Column"],
+    out_col: str | None = None,
+) -> DataFrame:
+    """(id, band, bucket) rows, one per document and band: the one
+    explode every MinHash entry point bands with. ``band_bucket`` is the
+    family's bucket expression (:func:`_xxhash64_band` over a
+    ``signature`` array, :func:`_md5_band` over ``h0..`` columns); the
+    id column is renamed to ``out_col`` when given. A band shape that
+    drops permutations is refused here (:func:`_check_band_shape`)."""
+    _check_band_shape(num_perm, bands)
+    rows = num_perm // bands
+    out_col = out_col or id_col
+    structs = [
+        F.struct(F.lit(b).alias("band"), band_bucket(b, rows).alias("bucket"))
+        for b in range(bands)
+    ]
+    return sigs.select(
+        F.col(id_col).alias(out_col), F.explode(F.array(*structs)).alias("bb")
+    ).select(
+        out_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+    )
+
+
+def _band_self_join(
+    banded: DataFrame, id_col: str, max_bucket_size: int | None
+) -> DataFrame:
+    """Candidate pairs (id_a < id_b) of documents that share a band
+    bucket, with the optional star cap of :func:`minhash_lsh_candidates`:
+    buckets larger than ``max_bucket_size`` pair each member with the
+    bucket's min id instead of with every other member."""
+
+    def dense(rows: DataFrame) -> DataFrame:
+        a = rows.select(F.col(id_col).alias("id_a"), "band", "bucket")
+        b = rows.select(F.col(id_col).alias("id_b"), "band", "bucket")
+        return (
+            a.join(b, ["band", "bucket"])
+            .where(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b")
+        )
+
+    if max_bucket_size is None:
+        return dense(banded).dropDuplicates()
+    # bucket size + representative via ONE window pass (single shuffle on
+    # the bucket key) instead of aggregate-then-rejoin (two shuffles of
+    # the same banded rows — measured 0.2s slower at sf0.1).
+    # Materialized: three consumers (both dense-join sides + the star
+    # branch) would otherwise each re-run the explode+window pipeline —
+    # measured 3× the shuffle bytes at sf0.1 (plan showed 3 identical
+    # Exchanges, 0 reused).
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("band", "bucket")
+    tagged = (
+        banded.withColumn("_m", F.count("*").over(w))
+        .withColumn("_rep", F.min(id_col).over(w))
+        .localCheckpoint(eager=True)
+    )
+    star = tagged.where(
+        (F.col("_m") > max_bucket_size) & (F.col(id_col) != F.col("_rep"))
+    ).select(F.col("_rep").alias("id_a"), F.col(id_col).alias("id_b"))
+    small = tagged.where(F.col("_m") <= max_bucket_size)
+    return dense(small).union(star).dropDuplicates()
+
+
 def minhash_lsh_candidates(
     sigs: DataFrame,
     id_col: str,
@@ -389,65 +442,9 @@ def minhash_lsh_candidates(
     overwhelmingly, and LSH's OR-amplification gives such a member
     bands-1 more chances to surface in a small bucket; but the cap IS
     a recall trade, not a free lunch. Pass ``max_bucket_size=None``
-    for exact candidate enumeration.
-
-    Band buckets are xxhash64 over the band's signature elements accessed
-    by index (codegen'd getItem), not a string concat inside a
-    higher-order-function lambda (interpreted per element)."""
-    rows_per_band = num_perm // bands
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(
-                *[
-                    F.col("signature")[b * rows_per_band + j]
-                    for j in range(rows_per_band)
-                ]
-            ).alias("bucket"),
-        )
-        for b in range(bands)
-    ]
-    banded = sigs.select(
-        F.col(id_col), F.explode(F.array(*band_structs)).alias("bb")
-    ).select(
-        id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
-    if max_bucket_size is None:
-        a = banded.select(F.col(id_col).alias("id_a"), "band", "bucket")
-        b = banded.select(F.col(id_col).alias("id_b"), "band", "bucket")
-        return (
-            a.join(b, ["band", "bucket"])
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .dropDuplicates()
-        )
-    # bucket size + representative via ONE window pass (single shuffle on
-    # the bucket key) instead of aggregate-then-rejoin (two shuffles of
-    # the same banded rows — measured 0.2s slower at sf0.1).
-    # Materialized: three consumers (both dense-join sides + the star
-    # branch) would otherwise each re-run the explode+window pipeline —
-    # the r4 stress caught the portable twin paying 3× the shuffle.
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("band", "bucket")
-    tagged = (
-        banded.withColumn("_m", F.count("*").over(w))
-        .withColumn("_rep", F.min(id_col).over(w))
-        .localCheckpoint(eager=True)
-    )
-    small = tagged.where(F.col("_m") <= max_bucket_size)
-    a = small.select(F.col(id_col).alias("id_a"), "band", "bucket")
-    b = small.select(F.col(id_col).alias("id_b"), "band", "bucket")
-    dense_pairs = (
-        a.join(b, ["band", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
-    star_pairs = (
-        tagged.where((F.col("_m") > max_bucket_size) & (F.col(id_col) != F.col("_rep")))
-        .select(F.col("_rep").alias("id_a"), F.col(id_col).alias("id_b"))
-    )
-    return dense_pairs.union(star_pairs).dropDuplicates()
+    for exact candidate enumeration."""
+    banded = _band_buckets(sigs, id_col, num_perm, bands, _xxhash64_band)
+    return _band_self_join(banded, id_col, max_bucket_size)
 
 
 def minhash_dedup_pairs(
@@ -618,61 +615,8 @@ def minhash_dedup_pairs_portable(
     sigs = minhash_signatures_portable(
         df, id_col, text_col, n, num_perm
     ).localCheckpoint(eager=True)
-    rows_per_band = num_perm // bands
-    structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    *[
-                        F.col(f"h{b * rows_per_band + j}")
-                        for j in range(rows_per_band)
-                    ],
-                )
-            ).alias("bucket"),
-        )
-        for b in range(bands)
-    ]
-    banded = sigs.select(
-        F.col(id_col), F.explode(F.array(*structs)).alias("bb")
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    if max_bucket_size is None:
-        a = banded.select(F.col(id_col).alias("id_a"), "band", "bucket")
-        b = banded.select(F.col(id_col).alias("id_b"), "band", "bucket")
-        cand = (
-            a.join(b, ["band", "bucket"])
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .dropDuplicates()
-        )
-    else:
-        # one window pass tags size + min-id hub (single shuffle on the
-        # bucket key — same shape as minhash_lsh_candidates).
-        # Materialized: THREE consumers read it (both dense-join sides
-        # and the star branch) and without the checkpoint each re-runs
-        # the explode+window pipeline — measured 3× the shuffle bytes
-        # at sf0.1 (plan showed 3 identical Exchanges, 0 reused).
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("band", "bucket")
-        tagged = (
-            banded.withColumn("_m", F.count("*").over(w))
-            .withColumn("_rep", F.min(id_col).over(w))
-            .localCheckpoint(eager=True)
-        )
-        small = tagged.where(F.col("_m") <= max_bucket_size)
-        a = small.select(F.col(id_col).alias("id_a"), "band", "bucket")
-        b = small.select(F.col(id_col).alias("id_b"), "band", "bucket")
-        dense = (
-            a.join(b, ["band", "bucket"])
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-        )
-        star = tagged.where(
-            (F.col("_m") > max_bucket_size) & (F.col(id_col) != F.col("_rep"))
-        ).select(F.col("_rep").alias("id_a"), F.col(id_col).alias("id_b"))
-        cand = dense.union(star).dropDuplicates()
+    banded = _band_buckets(sigs, id_col, num_perm, bands, _md5_band)
+    cand = _band_self_join(banded, id_col, max_bucket_size)
     # Materialized: verification consumes cand twice (the id semi-join
     # and the pair join), and the banded self-join would re-execute per
     # consumer — same reasoning as minhash_dedup_pairs.
@@ -970,6 +914,135 @@ def simhash_near_dup_pairs_portable(
     )
 
 
+class _MinHashFamily(NamedTuple):
+    """What one MinHash hash family supplies to the incremental path:
+    its signature builder, its band bucket expression and its
+    within-corpus pair generator (signatures → banded candidates →
+    exact-Jaccard verify)."""
+
+    signatures: Callable[..., DataFrame]
+    band_bucket: Callable[[int, int], "F.Column"]
+    pairs: Callable[..., DataFrame]
+
+
+_XXHASH64 = _MinHashFamily(
+    minhash_signatures_vectorized, _xxhash64_band, minhash_dedup_pairs
+)
+_MD5 = _MinHashFamily(
+    minhash_signatures_portable, _md5_band, minhash_dedup_pairs_portable
+)
+
+
+def _drop_kept_matches(
+    new_df: DataFrame,
+    new_buckets: DataFrame,
+    kept_df: DataFrame,
+    kept_buckets: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    threshold: float,
+) -> DataFrame:
+    """``new_df`` without the documents that near-duplicate a kept one.
+    Candidate (new_id, kept_id) pairs share a band bucket (``new_buckets``
+    keyed ``new_id``, ``kept_buckets`` keyed ``kept_id``); each is
+    verified by exact Jaccard on full shingle arrays, and the new ids
+    that match are anti-joined away.
+
+    The test is the unrounded ``inter / union >= threshold`` that the
+    ``dedup_incremental_batch`` oracle replays, not
+    :func:`verify_jaccard_pairs`' 4-digit rounding. The join on kept
+    text is inner, so a bucket row whose document is not in ``kept_df``
+    never verifies."""
+    cand = (
+        new_buckets.join(kept_buckets, ["band", "bucket"])
+        .select("new_id", "kept_id")
+        .dropDuplicates()
+    )
+    sh_new = new_df.select(
+        F.col(id_col).alias("new_id"), shingle_array(text_col, n).alias("sh_a")
+    )
+    sh_kept = kept_df.select(
+        F.col(id_col).alias("kept_id"), shingle_array(text_col, n).alias("sh_b")
+    )
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.size("sh_a") + F.size("sh_b") - inter
+    dup_new_ids = (
+        cand.join(sh_new, "new_id")
+        .join(sh_kept, "kept_id")
+        .where(inter / union >= threshold)
+        .select(F.col("new_id").alias(id_col))
+        .dropDuplicates()
+    )
+    return new_df.join(dup_new_ids, id_col, "left_anti")
+
+
+def _keep_component_mins(
+    survivors: DataFrame, pairs: DataFrame, id_col: str
+) -> DataFrame:
+    """``survivors`` without every document that is not the min id of
+    its connected component in the near-duplicate ``pairs`` graph."""
+    clusters = connected_components(pairs)
+    drop = clusters.where(F.col("doc_id") != F.col("cluster_id")).select(
+        F.col("doc_id").alias(id_col)
+    )
+    return survivors.join(drop, id_col, "left_anti")
+
+
+def _recomputed_kept_buckets(
+    fam: _MinHashFamily,
+    kept_df: DataFrame | None,
+    id_col: str,
+    text_col: str,
+    n: int,
+    num_perm: int,
+    bands: int,
+) -> DataFrame | None:
+    """The kept corpus's (kept_id, band, bucket) rows recomputed from its
+    text, or None when there is no kept document to probe."""
+    if kept_df is None or kept_df.isEmpty():
+        return None
+    sigs = fam.signatures(kept_df, id_col, text_col, n, num_perm)
+    return _band_buckets(
+        sigs.localCheckpoint(eager=True), id_col, num_perm, bands,
+        fam.band_bucket, "kept_id",
+    )
+
+
+def _incremental_keep(
+    fam: _MinHashFamily,
+    new_df: DataFrame,
+    kept_df: DataFrame | None,
+    kept_buckets: DataFrame | None,
+    id_col: str,
+    text_col: str,
+    n: int,
+    threshold: float,
+    num_perm: int,
+    bands: int,
+    max_bucket_size: int | None,
+) -> DataFrame:
+    """The per-batch decision of every incremental near-dedup: drop the
+    new documents that match a kept one (when ``kept_buckets`` is
+    given), then keep each within-batch component's min id."""
+    survivors = new_df
+    if kept_buckets is not None:
+        sig_new = fam.signatures(new_df, id_col, text_col, n, num_perm)
+        new_buckets = _band_buckets(
+            sig_new.localCheckpoint(eager=True), id_col, num_perm, bands,
+            fam.band_bucket, "new_id",
+        )
+        survivors = _drop_kept_matches(
+            new_df, new_buckets, kept_df, kept_buckets, id_col, text_col, n,
+            threshold,
+        )
+    pairs = fam.pairs(
+        survivors, id_col, text_col, n, threshold, num_perm, bands,
+        max_bucket_size,
+    )
+    return _keep_component_mins(survivors, pairs, id_col)
+
+
 def incremental_near_dedup(
     new_df: DataFrame,
     kept_df: DataFrame | None,
@@ -1001,70 +1074,17 @@ def incremental_near_dedup(
     near-duplicate, and replaying a batch adds nothing — are the ones
     regression-tested (tests/test_dedup_caps.py).
 
-    At scale the kept side's signatures are the persisted artifact
-    (recomputed here from text for self-containedness); band buckets
-    join shuffle-bounded exactly as in :func:`minhash_lsh_candidates`.
+    This form recomputes the kept side's signatures from text; it is
+    the reference :func:`incremental_near_dedup_indexed`, which probes
+    a persisted index instead, is tested against.
     """
-    survivors = new_df
-    if kept_df is not None and not kept_df.isEmpty():
-        sig_new = minhash_signatures_vectorized(
-            new_df, id_col, text_col, n, num_perm
-        ).localCheckpoint(eager=True)
-        sig_kept = minhash_signatures_vectorized(
-            kept_df, id_col, text_col, n, num_perm
-        ).localCheckpoint(eager=True)
-
-        def banded(sigs, out):
-            rows_per_band = num_perm // bands
-            structs = [
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.xxhash64(
-                        *[
-                            F.col("signature")[b * rows_per_band + j]
-                            for j in range(rows_per_band)
-                        ]
-                    ).alias("bucket"),
-                )
-                for b in range(bands)
-            ]
-            return sigs.select(
-                F.col(id_col).alias(out), F.explode(F.array(*structs)).alias("bb")
-            ).select(out, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-
-        cand = (
-            banded(sig_new, "new_id")
-            .join(banded(sig_kept, "kept_id"), ["band", "bucket"])
-            .select("new_id", "kept_id")
-            .dropDuplicates()
-        )
-        # exact-Jaccard verify on full shingle arrays, candidates only
-        sh_new = new_df.select(
-            F.col(id_col).alias("new_id"), shingle_array(text_col, n).alias("sh_a")
-        )
-        sh_kept = kept_df.select(
-            F.col(id_col).alias("kept_id"), shingle_array(text_col, n).alias("sh_b")
-        )
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        union = F.size("sh_a") + F.size("sh_b") - inter
-        dup_new_ids = (
-            cand.join(sh_new, "new_id")
-            .join(sh_kept, "kept_id")
-            .where(inter / union >= threshold)
-            .select(F.col("new_id").alias(id_col))
-            .dropDuplicates()
-        )
-        survivors = new_df.join(dup_new_ids, id_col, "left_anti")
-
-    # within-batch near-dedup of the survivors: min-id per component
-    pairs = minhash_dedup_pairs(
-        survivors, id_col, text_col, n, threshold, num_perm, bands, max_bucket_size
+    kept_buckets = _recomputed_kept_buckets(
+        _XXHASH64, kept_df, id_col, text_col, n, num_perm, bands
     )
-    clusters = connected_components(pairs)
-    drop = clusters.where(F.col("doc_id") != F.col("cluster_id")).select(
-        F.col("doc_id").alias(id_col)
+    return _incremental_keep(
+        _XXHASH64, new_df, kept_df, kept_buckets, id_col, text_col, n,
+        threshold, num_perm, bands, max_bucket_size,
     )
-    return survivors.join(drop, id_col, "left_anti")
 
 
 def incremental_near_dedup_portable(
@@ -1087,75 +1107,36 @@ def incremental_near_dedup_portable(
     twin. Same two-stage shape and greedy-vs-global caveat as the
     xxhash64 production family; the md5-per-shingle cost is the
     portability tax."""
-    survivors = new_df
-    if kept_df is not None and not kept_df.isEmpty():
-        sig_new = minhash_signatures_portable(
-            new_df, id_col, text_col, n, num_perm
-        ).localCheckpoint(eager=True)
-        sig_kept = minhash_signatures_portable(
-            kept_df, id_col, text_col, n, num_perm
-        ).localCheckpoint(eager=True)
-        rows_per_band = num_perm // bands
-
-        def banded(sigs: DataFrame, out: str) -> DataFrame:
-            structs = [
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.md5(
-                        F.concat_ws(
-                            "|",
-                            *[
-                                F.col(f"h{b * rows_per_band + j}")
-                                for j in range(rows_per_band)
-                            ],
-                        )
-                    ).alias("bucket"),
-                )
-                for b in range(bands)
-            ]
-            return sigs.select(
-                F.col(id_col).alias(out),
-                F.explode(F.array(*structs)).alias("bb"),
-            ).select(
-                out,
-                F.col("bb.band").alias("band"),
-                F.col("bb.bucket").alias("bucket"),
-            )
-
-        cand = (
-            banded(sig_new, "new_id")
-            .join(banded(sig_kept, "kept_id"), ["band", "bucket"])
-            .select("new_id", "kept_id")
-            .dropDuplicates()
-        )
-        sh_new = new_df.select(
-            F.col(id_col).alias("new_id"),
-            shingle_array(text_col, n).alias("sh_a"),
-        )
-        sh_kept = kept_df.select(
-            F.col(id_col).alias("kept_id"),
-            shingle_array(text_col, n).alias("sh_b"),
-        )
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        union = F.size("sh_a") + F.size("sh_b") - inter
-        dup_new_ids = (
-            cand.join(sh_new, "new_id")
-            .join(sh_kept, "kept_id")
-            .where(inter / union >= threshold)
-            .select(F.col("new_id").alias(id_col))
-            .dropDuplicates()
-        )
-        survivors = new_df.join(dup_new_ids, id_col, "left_anti")
-
-    pairs = minhash_dedup_pairs_portable(
-        survivors, id_col, text_col, n, threshold, num_perm, bands,
-        max_bucket_size,
+    kept_buckets = _recomputed_kept_buckets(
+        _MD5, kept_df, id_col, text_col, n, num_perm, bands
     )
-    clusters = connected_components(pairs)
-    drop = clusters.where(F.col("doc_id") != F.col("cluster_id")).select(
-        F.col("doc_id").alias(id_col)
+    return _incremental_keep(
+        _MD5, new_df, kept_df, kept_buckets, id_col, text_col, n, threshold,
+        num_perm, bands, max_bucket_size,
     )
-    return survivors.join(drop, id_col, "left_anti")
+
+
+def _write_minhash_index(
+    df: DataFrame,
+    path: str,
+    mode: str,
+    id_col: str,
+    text_col: str,
+    n: int,
+    num_perm: int,
+    bands: int,
+) -> None:
+    """Write ``df``'s signatures and band buckets to the index at
+    ``path`` with save mode ``mode``."""
+    # Compute signatures ONCE, pin them, and derive both writes from the
+    # pinned frame (the signature lineage re-shingles the batch if left
+    # lazy across the two sinks).
+    sigs = minhash_signatures_vectorized(
+        df, id_col, text_col, n, num_perm
+    ).localCheckpoint(eager=True)
+    sigs.write.mode(mode).parquet(f"{path}/signatures")
+    banded = _band_buckets(sigs, id_col, num_perm, bands, _xxhash64_band)
+    banded.write.mode(mode).partitionBy("band").parquet(f"{path}/buckets")
 
 
 def build_minhash_index(
@@ -1170,33 +1151,11 @@ def build_minhash_index(
     """Materialize the near-dedup index a long-lived corpus keeps beside
     its data: ``<path>/signatures`` (one row per doc: id + num_perm
     longs) and ``<path>/buckets`` (id, band, bucket) parquet partitioned
-    by ``band`` — so a probe of an arriving batch reads only the band
-    directories it collides with, and Catalyst prunes the rest at file
-    listing. ``incremental_near_dedup_indexed`` consumes it; appending a
-    deduped batch appends its signatures/buckets here with the same
-    plans (one scan over the new rows).
+    by ``band``. ``incremental_near_dedup_indexed`` consumes it;
+    appending a deduped batch appends its signatures/buckets here with
+    the same plans (one scan over the new rows).
     """
-    sigs = minhash_signatures_vectorized(df, id_col, text_col, n, num_perm)
-    sigs.write.mode("overwrite").parquet(f"{path}/signatures")
-    spark = df.sparkSession
-    sigs_back = spark.read.parquet(f"{path}/signatures")
-    rows_per_band = num_perm // bands
-    structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(
-                *[
-                    F.col("signature")[b * rows_per_band + j]
-                    for j in range(rows_per_band)
-                ]
-            ).alias("bucket"),
-        )
-        for b in range(bands)
-    ]
-    banded = sigs_back.select(
-        F.col(id_col), F.explode(F.array(*structs)).alias("bb")
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    banded.write.mode("overwrite").partitionBy("band").parquet(f"{path}/buckets")
+    _write_minhash_index(df, path, "overwrite", id_col, text_col, n, num_perm, bands)
 
 
 def append_to_minhash_index(
@@ -1211,30 +1170,7 @@ def append_to_minhash_index(
     """Append an (already-deduplicated) batch's signatures and band
     buckets to the persisted index — the per-batch maintenance write of
     a continuously ingesting corpus."""
-    # Compute signatures ONCE, pin them, and derive both writes from the
-    # pinned frame (the signature lineage re-shingles the batch if left
-    # lazy across the two sinks).
-    sigs = minhash_signatures_vectorized(
-        new_df, id_col, text_col, n, num_perm
-    ).localCheckpoint(eager=True)
-    sigs.write.mode("append").parquet(f"{path}/signatures")
-    rows_per_band = num_perm // bands
-    structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(
-                *[
-                    F.col("signature")[b * rows_per_band + j]
-                    for j in range(rows_per_band)
-                ]
-            ).alias("bucket"),
-        )
-        for b in range(bands)
-    ]
-    banded = sigs.select(
-        F.col(id_col), F.explode(F.array(*structs)).alias("bb")
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    banded.write.mode("append").partitionBy("band").parquet(f"{path}/buckets")
+    _write_minhash_index(new_df, path, "append", id_col, text_col, n, num_perm, bands)
 
 
 def incremental_near_dedup_indexed(
@@ -1252,68 +1188,20 @@ def incremental_near_dedup_indexed(
     """:func:`incremental_near_dedup` against a PERSISTED index: the kept
     corpus's signatures/buckets come from ``build_minhash_index`` output
     instead of being recomputed from text per batch — at 100 TB the
-    difference between re-shingling the whole corpus every batch and
-    one bucket-partition-pruned join. ``kept_df`` supplies text only
+    difference between re-hashing the whole corpus every batch and one
+    join with the stored buckets. ``kept_df`` supplies text only
     for the exact-verification of cross-corpus candidates (columns
     ``id_col``, ``text_col``)."""
-    spark = new_df.sparkSession
-    survivors = new_df
+    kept_buckets = None
     if index_path is not None and kept_df is not None:
-        kept_buckets = spark.read.parquet(f"{index_path}/buckets")
-        sig_new = minhash_signatures_vectorized(
-            new_df, id_col, text_col, n, num_perm
-        ).localCheckpoint(eager=True)
-        rows_per_band = num_perm // bands
-        structs = [
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    *[
-                        F.col("signature")[b * rows_per_band + j]
-                        for j in range(rows_per_band)
-                    ]
-                ).alias("bucket"),
-            )
-            for b in range(bands)
-        ]
-        new_banded = sig_new.select(
-            F.col(id_col).alias("new_id"), F.explode(F.array(*structs)).alias("bb")
-        ).select("new_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-        cand = (
-            new_banded.join(
-                kept_buckets.select(
-                    F.col(id_col).alias("kept_id"), "band", "bucket"
-                ),
-                ["band", "bucket"],
-            )
-            .select("new_id", "kept_id")
-            .dropDuplicates()
-        )
-        sh_new = new_df.select(
-            F.col(id_col).alias("new_id"), shingle_array(text_col, n).alias("sh_a")
-        )
-        sh_kept = kept_df.select(
-            F.col(id_col).alias("kept_id"), shingle_array(text_col, n).alias("sh_b")
-        )
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        union = F.size("sh_a") + F.size("sh_b") - inter
-        dup_new_ids = (
-            cand.join(sh_new, "new_id")
-            .join(sh_kept, "kept_id")
-            .where(inter / union >= threshold)
-            .select(F.col("new_id").alias(id_col))
-            .dropDuplicates()
-        )
-        survivors = new_df.join(dup_new_ids, id_col, "left_anti")
+        kept_buckets = new_df.sparkSession.read.parquet(
+            f"{index_path}/buckets"
+        ).select(F.col(id_col).alias("kept_id"), "band", "bucket")
+    return _incremental_keep(
+        _XXHASH64, new_df, kept_df, kept_buckets, id_col, text_col, n,
+        threshold, num_perm, bands, max_bucket_size,
+    )
 
-    pairs = minhash_dedup_pairs(
-        survivors, id_col, text_col, n, threshold, num_perm, bands, max_bucket_size
-    )
-    clusters = connected_components(pairs)
-    drop = clusters.where(F.col("doc_id") != F.col("cluster_id")).select(
-        F.col("doc_id").alias(id_col)
-    )
-    return survivors.join(drop, id_col, "left_anti")
 
 def _span_islands(
     df: "DataFrame",
@@ -2281,9 +2169,10 @@ def _check_band_shape(num_perm: int, bands: int) -> None:
     """bands must divide num_perm with >= 1 row per band: a silent
     floor would drop leftover permutations, and r = 0 makes the S-curve
     return 1.0 for every threshold while the bucket key hashes ZERO
-    columns (every doc in one bucket per band) — the saturation probe
-    would report total saturation on a healthy corpus, inverting the
-    signal it exists to give."""
+    columns (every doc in one bucket per band): every pair becomes a
+    candidate, and the saturation probe would report total saturation
+    on a healthy corpus. :func:`_band_buckets` calls it, so every
+    MinHash entry point refuses such a shape."""
     if bands < 1 or num_perm < bands or num_perm % bands != 0:
         raise ValueError(
             f"bands ({bands}) must divide num_perm ({num_perm}) with at "
@@ -2315,21 +2204,8 @@ def lsh_bucket_stats(
     Cost: the signature pipeline + one aggregate — no candidate join,
     so the probe is safe to run even when the real query would not be.
     """
-    _check_band_shape(num_perm, bands)
     sigs = minhash_signatures_portable(df, id_col, text_col, n, num_perm)
-    rows_per_band = num_perm // bands
-    buckets = F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    *[F.col(f"h{b * rows_per_band + i}") for i in range(rows_per_band)],
-                )
-            )
-            for b in range(bands)
-        ]
-    )
-    banded = sigs.select(F.posexplode(buckets).alias("band", "bucket"))
+    banded = _band_buckets(sigs, id_col, num_perm, bands, _md5_band)
     occ = banded.groupBy("band", "bucket").agg(F.count("*").alias("m"))
     m = F.col("m")
     return occ.agg(

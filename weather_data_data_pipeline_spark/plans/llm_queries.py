@@ -401,9 +401,10 @@ def ngram_containment_pairs_query(spark: SparkSession, sf_dir: str) -> DataFrame
     # two-stage pipeline instead; this family keeps the cheap hash and
     # its exact-Jaccard ground-truth tests.
     oracle=None,
-    doc="Two-stage near-dedup at scale: 64-perm MinHash signatures (64 "
-    "JVM min-aggs over xxhash64 — no UDF), 16-band LSH candidate "
-    "generation, exact-Jaccard verification on candidates only.",
+    doc="Two-stage near-dedup at scale: 64-perm MinHash signatures (one "
+    "Arrow pandas UDF of splitmix64 permutations over xxhash64 shingle "
+    "hashes), 16-band LSH candidate generation, exact-Jaccard "
+    "verification on candidates only.",
     tags=("llm", "dedup", "rows-only", "bench"),
 )
 def minhash_dedup_pairs_query(spark: SparkSession, sf_dir: str) -> DataFrame:

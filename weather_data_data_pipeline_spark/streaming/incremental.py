@@ -34,7 +34,7 @@ them are wired through :func:`_foreach_batch`):
   so a re-delivered batch rewrites exactly its own partition instead
   of appending a second copy. A reader of the output directory sees
   ``batch_id`` as an int partition column. The destination-anti-join
-  sinks (:func:`idempotent_stream_append` and the near-dedup twins)
+  sinks (:func:`idempotent_stream_append` and the near-dedup sink)
   append survivors instead; the anti-join against the destination is
   what makes their replays no-ops.
 - **Frozen state ⇒ stream equals batch.** A sink's model, eval set or
@@ -229,94 +229,53 @@ def near_dedup_stream_append(
     threshold: float = 0.5,
 ) -> DataStreamWriter:
     """Streaming twin of :func:`idempotent_stream_append` for NEAR
-    duplicates: each micro-batch runs
-    ``functions.dedup.incremental_near_dedup`` against the accumulated
-    destination corpus and appends only the survivors — a continuously
-    ingesting, continuously deduplicated training corpus.
+    duplicates: each micro-batch probes the kept corpus's persisted
+    MinHash index (``functions.dedup.incremental_near_dedup_indexed``)
+    and appends only the survivors — a continuously ingesting,
+    continuously deduplicated training corpus.
 
-    State shape at scale: the per-batch work is LSH-bounded (banded
-    bucket joins against the kept corpus's signatures — persist those
-    alongside the corpus to skip recomputing them per batch); no
-    streaming state store is involved, so the watermark horizon does not
-    bound dedup history — the DESTINATION is the state, exactly like
-    the reference's anti-join pattern (full:160-171) but resilient to
-    paraphrase-level duplication, not just key equality.
-    """
-    from weather_data_data_pipeline_spark.functions.dedup import (
-        incremental_near_dedup,
-    )
+    The index lives at ``<dest_path>_minhash_index``, beside the corpus
+    and not inside it. Each batch (1) joins its band buckets with the
+    index's, (2) exact-verifies candidates against kept text, (3) near-dedups
+    within itself, then (4) appends the survivors to the index and
+    then to the corpus. The index is written first: a crash between
+    the two leaves index rows without corpus text, which never verify,
+    so the replayed batch is kept again and written once. A corpus
+    whose index is missing or unreadable (one written before the index
+    existed) gets it built from the corpus before the probe.
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        kept = _read_parquet_or_none(batch_df.sparkSession, dest_path)
-        out = incremental_near_dedup(
-            batch_df, kept, id_col, text_col, threshold=threshold
-        )
-        out.write.mode("append").parquet(dest_path)
-
-    return _foreach_batch(stream, checkpoint, write_batch)
-
-
-def near_dedup_stream_append_indexed(
-    stream: DataFrame,
-    dest_path: str,
-    index_path: str,
-    id_col: str,
-    text_col: str,
-    checkpoint: str,
-    threshold: float = 0.5,
-) -> DataStreamWriter:
-    """:func:`near_dedup_stream_append` with the PERSISTED MinHash index
-    as the probe structure — the at-scale form its docstring promises:
-    instead of re-shingling the whole accumulated corpus every
-    micro-batch, each batch (1) probes ``<index_path>/buckets``
-    (band-partitioned parquet, so only colliding band directories are
-    scanned), (2) exact-verifies candidates against kept text,
-    (3) near-dedups within itself, then (4) appends the survivors to
-    BOTH the corpus and the index with one signature pass.
-
-    Per-batch cost is O(batch) signature work + candidate-bounded
-    verification — independent of corpus size except through the
-    (pruned) bucket probe. The corpus+index pair IS the streaming
-    state; no state store, no watermark horizon on dedup history.
+    Per-batch signature work is O(batch): the kept corpus is not
+    re-hashed. The corpus+index pair IS the streaming state; no state
+    store, no watermark horizon on dedup history.
     """
     from weather_data_data_pipeline_spark.functions.dedup import (
         append_to_minhash_index,
         build_minhash_index,
-        incremental_near_dedup,
         incremental_near_dedup_indexed,
     )
+
+    index_path = dest_path.rstrip("/") + "_minhash_index"
+
+    def index_readable(spark: SparkSession) -> bool:
+        try:
+            spark.read.parquet(f"{index_path}/buckets").schema
+            return True
+        except Exception:
+            return False
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         kept = _read_parquet_or_none(spark, dest_path)
-        try:
-            # probe readability, not just existence: a corpus row
-            # without a readable index (crash between the two appends
-            # below) must degrade to recompute, never to skipping the
-            # cross-corpus dedup
-            spark.read.parquet(f"{index_path}/buckets").schema
-            idx = index_path
-        except Exception:
-            idx = None
-        degraded = kept is not None and idx is None
-        if degraded:
-            out = incremental_near_dedup(
-                batch_df, kept, id_col, text_col, threshold=threshold
-            )
-        else:
-            out = incremental_near_dedup_indexed(
-                batch_df, kept, idx, id_col, text_col, threshold=threshold
-            )
+        if kept is not None and not index_readable(spark):
+            build_minhash_index(kept, index_path, id_col, text_col)
+        # a corpus of documents shorter than one shingle leaves no bucket file
+        idx = index_path if kept is not None and index_readable(spark) else None
+        out = incremental_near_dedup_indexed(
+            batch_df, kept, idx, id_col, text_col, threshold=threshold
+        )
         out = out.localCheckpoint(eager=True)  # two sinks share the lineage
+        append_to_minhash_index(out, index_path, id_col, text_col)
         out.write.mode("append").parquet(dest_path)
-        if degraded:
-            # the index didn't cover the kept corpus — rebuild it whole
-            # so subsequent batches probe a complete structure
-            build_minhash_index(
-                spark.read.parquet(dest_path), index_path, id_col, text_col
-            )
-        else:
-            append_to_minhash_index(out, index_path, id_col, text_col)
 
     return _foreach_batch(stream, checkpoint, write_batch)
 
