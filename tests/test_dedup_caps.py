@@ -224,6 +224,45 @@ def test_incremental_near_dedup_empty_kept_equals_batch(spark):
     assert {r["doc_id"] for r in inc.collect()} == want
 
 
+def _plan_nodes(node):
+    """Every node of a physical plan, an AQE plan by its current plan."""
+    if node.nodeName() == "AdaptiveSparkPlan":
+        node = node.executedPlan()
+    children = node.children()
+    yield node
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def test_incremental_near_dedup_shingles_only_candidate_kept_docs(spark):
+    """The cross-corpus verify must shingle only the kept documents some
+    candidate names, not the whole kept corpus on every batch: in the
+    executed plan the kept side's shingle Project sits above a LeftSemi
+    join on the candidate ids."""
+    from weather_data_data_pipeline_spark.functions.dedup import (
+        incremental_near_dedup,
+    )
+    from weather_data_data_pipeline_spark.sources.tables import load
+    from tests.conftest import SF_DIR
+
+    docs = load(spark, SF_DIR, "documents")
+    kept = docs.where(F.col("doc_id") < 150)
+    new = docs.where(F.col("doc_id").between(150, 169))
+    out = incremental_near_dedup(new, kept, "doc_id", "text", threshold=0.5)
+    plan = out._jdf.queryExecution().executedPlan()
+    kept_shingles = [
+        p for p in _plan_nodes(plan)
+        if p.nodeName() == "Project"
+        and " AS sh_b#" in p.projectList().mkString(", ")
+    ]
+    assert kept_shingles, "no kept-side shingle Project in the plan"
+    for p in kept_shingles:
+        below = [c for c in _plan_nodes(p) if c.nodeName().endswith("Join")]
+        assert any(j.joinType().toString() == "LeftSemi" for j in below), (
+            p.toString()
+        )
+
+
 def test_indexed_incremental_dedup_matches_recompute(spark, tmp_path):
     """The persisted-index path must make the same keep/drop decisions
     as recomputing kept-corpus signatures from text, and the buckets

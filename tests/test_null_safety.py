@@ -490,7 +490,7 @@ def test_embedding_operators_survive_null_and_zero_vectors(spark):
         brute_force_topk_gemm,
         cosine,
         cosine_near_dup_pairs,
-        semantic_dedup_fused,
+        semantic_dedup,
     )
     from pyspark.sql import functions as F
 
@@ -518,7 +518,7 @@ def test_embedding_operators_survive_null_and_zero_vectors(spark):
     # SemDeDup: invalid vectors still LABELED (kept, rep=self), no edges
     out = {
         r["vec_id"]: (r["kept"], r["rep_id"])
-        for r in semantic_dedup_fused(
+        for r in semantic_dedup(
             emb, [[1.0] + [0.0] * (dim - 1)], threshold=0.5
         ).collect()
     }

@@ -12,9 +12,15 @@ from weather_data_data_pipeline_spark.functions.similarity import (
     cosine_near_dup_pairs,
     ivf_topk,
     lsh_near_dup_pairs,
+    lsh_recall_report,
     lsh_topk,
+    seeded_sign_planes,
+    semantic_dedup,
 )
 from weather_data_data_pipeline_spark.sources.tables import load
+
+# the registered queries' planes: 16 tables × 4 sign planes over dim 64
+PLANES = seeded_sign_planes(n_tables=16, n_planes=4, dim=64)
 
 
 def _pairs(df):
@@ -31,7 +37,7 @@ def test_ann_recall_vs_brute_force(spark):
     ivf_recall = len(exact & ivf) / len(exact)
     assert ivf_recall >= 0.7, f"IVF recall@10 collapsed: {ivf_recall}"
 
-    lsh = _pairs(lsh_topk(emb, q, k=10))
+    lsh = _pairs(lsh_topk(emb, q, k=10, n_planes=4, planes=PLANES))
     lsh_recall = len(exact & lsh) / len(exact)
     assert lsh_recall >= 0.6, f"LSH recall@10 collapsed: {lsh_recall}"
 
@@ -44,28 +50,13 @@ def test_lsh_near_dup_recall_and_no_false_positives(spark):
     }
     lsh = {
         (r["id_a"], r["id_b"])
-        for r in lsh_near_dup_pairs(emb, threshold=0.35).collect()
+        for r in lsh_near_dup_pairs(
+            emb, threshold=0.35, n_planes=4, planes=PLANES
+        ).collect()
     }
     assert lsh <= exact, "verification must kill every sub-threshold candidate"
     recall = len(exact & lsh) / max(1, len(exact))
     assert recall >= 0.8, f"LSH near-dup recall collapsed: {recall}"
-
-    # The literal-plane variant (the registered, oracle-mirrored plan)
-    # carries the same contract: subset of exact, healthy recall.
-    from weather_data_data_pipeline_spark.functions.similarity import (
-        seeded_sign_planes,
-    )
-
-    planes = seeded_sign_planes(n_tables=16, n_planes=4, dim=64)
-    lit = {
-        (r["id_a"], r["id_b"])
-        for r in lsh_near_dup_pairs(
-            emb, threshold=0.35, n_planes=4, planes=planes
-        ).collect()
-    }
-    assert lit <= exact
-    lit_recall = len(exact & lit) / max(1, len(exact))
-    assert lit_recall >= 0.8, f"literal-plane recall collapsed: {lit_recall}"
 
 
 def test_semantic_dedup_invariants(spark):
@@ -74,10 +65,7 @@ def test_semantic_dedup_invariants(spark):
     cluster are near-duplicates of each other (the defining guarantee);
     (c) dropped rows really do have a kept near-dup chain (their rep is
     kept)."""
-    from weather_data_data_pipeline_spark.functions.similarity import (
-        cosine,
-        semantic_dedup,
-    )
+    from weather_data_data_pipeline_spark.functions.similarity import cosine
 
     emb = load(spark, SF_DIR, "embeddings")
     seeds = emb.select("vec_id", "embedding").orderBy("vec_id").limit(8).collect()
@@ -111,29 +99,6 @@ def test_semantic_dedup_invariants(spark):
     assert offenders == 0, f"{offenders} kept near-dup pairs survived"
 
 
-def test_lsh_topk_self_equals_two_sided(spark):
-    """lsh_topk_self (buckets computed once, queries filtered from the
-    corpus bucket table) must return exactly what the general two-sided
-    lsh_topk returns for the same planes — it is a plan optimization,
-    not a semantic variant."""
-    from weather_data_data_pipeline_spark.functions.similarity import (
-        lsh_topk_self,
-        seeded_sign_planes,
-    )
-
-    emb = load(spark, SF_DIR, "embeddings")
-    planes = seeded_sign_planes(n_tables=16, n_planes=4, dim=64)
-    two_sided = lsh_topk(
-        emb, emb.where(F.col("vec_id") < 10), k=10, n_planes=4, planes=planes
-    )
-    fused = lsh_topk_self(emb, F.col("vec_id") < 10, k=10, n_planes=4, planes=planes)
-    key = lambda df: sorted(
-        (r["query_id"], r["rn"], r["neighbor_id"], r["cosine"])
-        for r in df.collect()
-    )
-    assert key(two_sided) == key(fused)
-
-
 def test_lsh_near_dup_chunked_verify_equals_unchunked(spark, monkeypatch):
     """The per-bucket GEMM verifier scores in O(chunk × m) row blocks so a
     degenerate bucket cannot demand an m×m matrix in one Python worker.
@@ -146,7 +111,9 @@ def test_lsh_near_dup_chunked_verify_equals_unchunked(spark, monkeypatch):
     def run():
         return {
             (r["id_a"], r["id_b"], r["cosine"])
-            for r in lsh_near_dup_pairs(emb, threshold=0.35).collect()
+            for r in lsh_near_dup_pairs(
+                emb, threshold=0.35, n_planes=4, planes=PLANES
+            ).collect()
         }
 
     baseline = run()
@@ -353,126 +320,84 @@ def test_nearest_in_set_non_bigint_ids(spark):
     assert got == {7: 100, 8: 200}
 
 
-def test_lsh_topk_fused_equals_two_sided(spark):
-    """lsh_topk_fused (single mapInPandas pass: bucket GEMM + collision
-    mask + cosine re-rank) must return exactly what the general
-    two-sided lsh_topk returns for the same planes — a plan fusion,
-    not a semantic variant (r10, VERDICT r9 ask #3)."""
-    from weather_data_data_pipeline_spark.functions.similarity import (
-        lsh_topk_fused,
-        seeded_sign_planes,
-    )
-
-    emb = load(spark, SF_DIR, "embeddings")
-    planes = seeded_sign_planes(n_tables=16, n_planes=4, dim=64)
-    two_sided = lsh_topk(
-        emb, emb.where(F.col("vec_id") < 10), k=10, n_planes=4, planes=planes
-    )
-    fused = lsh_topk_fused(
-        emb, emb.where(F.col("vec_id") < 10), k=10, n_planes=4, planes=planes
-    )
-    key = lambda df: sorted(
-        (r["query_id"], r["rn"], r["neighbor_id"], r["cosine"])
-        for r in df.collect()
-    )
-    assert key(two_sided) == key(fused)
-
-
-def test_lsh_recall_report_fused_equals_composition(spark):
-    """The fused recall report (truth and approx ranked from ONE corpus
-    GEMM pass) must equal the separate brute_force_topk_gemm + lsh_topk
+def test_lsh_recall_report_equals_composition(spark):
+    """The recall report (truth and approx ranked from ONE corpus GEMM
+    pass) must equal the separate brute_force_topk_gemm + lsh_topk
     composition value-for-value."""
     from weather_data_data_pipeline_spark.functions.similarity import (
         brute_force_topk_gemm,
-        lsh_recall_report_fused,
-        seeded_sign_planes,
     )
 
     emb = load(spark, SF_DIR, "embeddings")
-    planes = seeded_sign_planes(n_tables=16, n_planes=4, dim=64)
-    fused = {
+    q = emb.where(F.col("vec_id") < 10)
+    report = {
         r["query_id"]: (r["n_true"], r["n_hit"], r["recall"])
-        for r in lsh_recall_report_fused(
-            emb, emb.where(F.col("vec_id") < 10), k=10, n_planes=4,
-            planes=planes,
+        for r in lsh_recall_report(
+            emb, q, k=10, n_planes=4, planes=PLANES
         ).collect()
     }
-    truth = brute_force_topk_gemm(
-        emb, emb.where(F.col("vec_id") < 10), k=10
-    ).select("query_id", "neighbor_id")
-    approx = lsh_topk(
-        emb, emb.where(F.col("vec_id") < 10), k=10, n_planes=4,
-        planes=planes,
-    ).select("query_id", F.col("neighbor_id").alias("a_neighbor"))
-    joined = (
-        truth.join(
-            approx,
-            (truth["query_id"] == approx["query_id"])
-            & (truth["neighbor_id"] == approx["a_neighbor"]),
-            "left",
-        )
-        .groupBy(truth["query_id"])
-        .agg(
-            F.count("*").alias("n_true"),
-            F.count("a_neighbor").alias("n_hit"),
-            F.round(
-                F.count("a_neighbor") / F.count("*").cast("double"), 4
-            ).alias("recall"),
-        )
-    )
-    want = {
-        r["query_id"]: (r["n_true"], r["n_hit"], r["recall"])
-        for r in joined.collect()
+    truth = _pairs(brute_force_topk_gemm(emb, q, k=10))
+    approx = _pairs(lsh_topk(emb, q, k=10, n_planes=4, planes=PLANES))
+    want = {}
+    for qid, nid in truth:
+        n_true, n_hit = want.get(qid, (0, 0))
+        want[qid] = (n_true + 1, n_hit + ((qid, nid) in approx))
+    assert report == {
+        qid: (n, h, round(h / n, 4)) for qid, (n, h) in want.items()
     }
-    assert fused == want
 
 
-def test_semantic_dedup_fused_equals_unfused_both_branches(spark):
-    """semantic_dedup_fused (cell-local union-find inside the scoring
-    task) must equal semantic_dedup row-for-row — SemDeDup edges never
-    leave a cell, so the fusion is a plan change, not a semantic one.
-    Checked on BOTH branches: exact dense enumeration (no cap) and the
-    hot-cell star-edge path (cap far below the cell sizes)."""
-    from weather_data_data_pipeline_spark.functions.similarity import (
-        semantic_dedup,
-        semantic_dedup_fused,
+def test_lsh_refuses_planes_that_split_into_no_whole_tables(spark):
+    """Buckets are packed from ``len(planes) // n_planes`` tables, both
+    in Spark and in the oracle's SQL, so a plane list that is not a
+    multiple of ``n_planes`` would silently drop its last planes. Every
+    LSH entry point refuses that shape before it runs a job."""
+    import pytest
+
+    emb = spark.createDataFrame(
+        [(i, [float(i == j) for j in range(64)]) for i in range(4)],
+        "vec_id long, embedding array<float>",
     )
+    for planes, n_planes in ((PLANES[:-1], 4), (PLANES, 3), (PLANES, 0)):
+        with pytest.raises(ValueError, match="n_planes"):
+            lsh_near_dup_pairs(emb, n_planes=n_planes, planes=planes)
+        with pytest.raises(ValueError, match="n_planes"):
+            lsh_topk(emb, emb, n_planes=n_planes, planes=planes)
+        with pytest.raises(ValueError, match="n_planes"):
+            lsh_recall_report(emb, emb, n_planes=n_planes, planes=planes)
+
+
+def test_semantic_dedup_registered_caps_select_each_branch(spark):
+    """The oracle parity of the two registered SemDeDup queries is the
+    only reference for its two branches, so pin which branch each runs.
+    At sf0.001 each of the 8 seed-centroid cells holds more than 40
+    members: semantic_dedup_keep_capped (cap 40) takes the star branch
+    in every cell, giving exactly what a cap of 1 gives, while
+    semantic_dedup_keep (no cap) takes the dense branch, and the two
+    answers differ."""
+    from weather_data_data_pipeline_spark.plans.llm_queries import (
+        semantic_dedup_keep,
+        semantic_dedup_keep_capped,
+    )
+
+    def key(df):
+        return sorted(
+            (r["vec_id"], r["cluster"], r["rep_id"], r["kept"])
+            for r in df.collect()
+        )
+
+    dense = key(semantic_dedup_keep(spark, SF_DIR))
+    sizes = {}
+    for _, cell, _, _ in dense:
+        sizes[cell] = sizes.get(cell, 0) + 1
+    assert sizes == {0: 68, 1: 53, 2: 63, 3: 71, 4: 62, 5: 64, 6: 60, 7: 59}
+    assert min(sizes.values()) > 40
 
     emb = load(spark, SF_DIR, "embeddings")
     seeds = emb.orderBy("vec_id").limit(8).collect()
     cents = [[float(x) for x in r["embedding"]] for r in seeds]
-    for cap in (None, 10):
-        key = lambda df: sorted(
-            (r["vec_id"], r["cluster"], r["rep_id"], r["kept"])
-            for r in df.collect()
-        )
-        assert key(
-            semantic_dedup_fused(emb, cents, threshold=0.35, max_cell_size=cap)
-        ) == key(
-            semantic_dedup(emb, cents, threshold=0.35, max_cell_size=cap)
-        ), f"cap={cap}"
-
-
-def test_query_broadcast_hint_sentinel_skips_probe(spark):
-    """ADVICE r11 #3 + ADVICE r12: FORCE_BROADCAST (None) forces
-    broadcast WITHOUT the eager limit+count probe job; 0 still opts
-    out to the shuffle plan; negative thresholds raise instead of
-    silently inverting the pre-r12 opt-out meaning of -1."""
-    from unittest.mock import patch
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from weather_data_data_pipeline_spark.functions import similarity as S
-
-    df = spark.range(5)
-    with patch.object(df.__class__, "count", side_effect=AssertionError(
-        "sentinel must not run a count job"
-    )):
-        assert S._query_broadcast_hint(df, S.FORCE_BROADCAST) is F.broadcast
-        assert S._query_broadcast_hint(df, None) is F.broadcast
-        ident = S._query_broadcast_hint(df, 0)
-        with pytest.raises(ValueError, match="broadcast_threshold"):
-            S._query_broadcast_hint(df, -1)
-    out = ident(df)
-    assert out is df  # identity, no broadcast hint
+    star = key(semantic_dedup_keep_capped(spark, SF_DIR))
+    assert star == key(
+        semantic_dedup(emb, cents, threshold=0.35, max_cell_size=1)
+    )
+    assert star != dense

@@ -864,29 +864,6 @@ def test_char_entropy_columns_edges_and_hof_equivalence(spark):
         assert got[doc_id][:3] == (nn, uu, ee), (doc_id, got[doc_id], (nn, uu, ee))
 
 
-def test_lsh_topk_broadcast_gate_fallback_identical(spark):
-    """ADVICE r10 #4: above the broadcast bound (or at threshold 0)
-    lsh_topk must fall back to shuffle joins with IDENTICAL results —
-    the gate changes the physical strategy, never the answer."""
-    from weather_data_data_pipeline_spark.functions.similarity import (
-        lsh_topk,
-        seeded_sign_planes,
-    )
-
-    emb = load(spark, SF_DIR, "embeddings")
-    planes = seeded_sign_planes(4, 16, 64, seed=11)
-    q = emb.where(F.col("vec_id") < 5)
-
-    def key(df):
-        return sorted(map(tuple, df.collect()))
-
-    hinted = key(lsh_topk(emb, q, k=5, planes=planes))
-    shuffled = key(
-        lsh_topk(emb, q, k=5, planes=planes, broadcast_threshold=0)
-    )
-    assert hinted == shuffled and len(hinted) > 0
-
-
 def test_pmi_collocations_hand_computed(spark):
     """PMI against hand arithmetic: corpus 'a b a b' + 'a c' gives
     unigrams a:3 b:2 c:1 (N=6), bigrams (a,b):2 (b,a):1 (a,c):1 (B=4);

@@ -947,7 +947,10 @@ def _drop_kept_matches(
     Candidate (new_id, kept_id) pairs share a band bucket (``new_buckets``
     keyed ``new_id``, ``kept_buckets`` keyed ``kept_id``); each is
     verified by exact Jaccard on full shingle arrays, and the new ids
-    that match are anti-joined away.
+    that match are anti-joined away. As in :func:`verify_jaccard_pairs`,
+    only the kept documents some candidate names build shingle arrays
+    (a broadcast semi-join on the candidate ids), so the cost per batch
+    does not grow with the kept corpus.
 
     The test is the unrounded ``inter / union >= threshold`` that the
     ``dedup_incremental_batch`` oracle replays, not
@@ -962,7 +965,8 @@ def _drop_kept_matches(
     sh_new = new_df.select(
         F.col(id_col).alias("new_id"), shingle_array(text_col, n).alias("sh_a")
     )
-    sh_kept = kept_df.select(
+    kept_ids = cand.select(F.col("kept_id").alias(id_col)).dropDuplicates()
+    sh_kept = kept_df.join(F.broadcast(kept_ids), id_col, "left_semi").select(
         F.col(id_col).alias("kept_id"), shingle_array(text_col, n).alias("sh_b")
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))

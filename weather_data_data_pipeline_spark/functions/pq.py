@@ -534,7 +534,7 @@ def pq_recall_candidates_fused(
     flat-PQ ADC, and IVF-PQ ADC — as (family, query_id, neighbor_id,
     dist); a global window per (family, query) finishes the ranking.
 
-    The r11 fusion (the lsh_recall_report_fused pattern): the unfused
+    The r11 fusion (the lsh_recall_report pattern): the unfused
     report paid three separate corpus passes (the GEMM truth kernel,
     pq_encode + broadcast-LUT join, ivf_pq_encode + probe join) plus
     their window stages — ~0.2 s of Arrow/stage floor EACH at bench

@@ -5,9 +5,10 @@
   double precision — no Python in the loop; the query side is broadcast
   so the corpus never shuffles.
 - LSH-bucketed ANN (random hyperplanes): the scale path. Signatures are
-  built from deterministic hash-derived hyperplanes (no stored model),
-  so the operator is a pure DataFrame transform. Candidates are
-  re-ranked with exact cosine.
+  built from literal seeded sign planes (:func:`seeded_sign_planes`),
+  the same literals a DuckDB oracle replays, so the approximate
+  operators are value-checked end to end. Candidates are re-ranked
+  with exact cosine.
 
 At 100 TB the corpus side stays partitioned; only O(queries × k) rows
 ever leave the executors.
@@ -286,12 +287,24 @@ def _ensure_parallelism(df: DataFrame) -> DataFrame:
     return df
 
 
+def _check_plane_shape(planes: list[list[float]], n_planes: int) -> None:
+    """The plane list must hold whole tables: :func:`_pack_buckets` and
+    the oracles' bucket SQL both take ``len(planes) // n_planes`` tables,
+    so a remainder would silently drop the last planes. Every LSH entry
+    point calls this before it builds a plan."""
+    if n_planes < 1 or len(planes) < n_planes or len(planes) % n_planes:
+        raise ValueError(
+            f"{len(planes)} planes do not split into tables of n_planes "
+            f"({n_planes}): need a positive multiple of n_planes"
+        )
+
+
 def _pack_buckets(bits, n_planes: int):
     """(rows, n_tables*n_planes) sign bits → (rows, n_tables) int64
     bucket ids, little-endian within each table — the ONE definition of
-    the LSH bucket encoding (rhp_table_buckets_from_planes, the fused
-    top-k, and the fused recall report all compile it; edits here keep
-    every oracle-replayed candidate set in lockstep)."""
+    the LSH bucket encoding (rhp_table_buckets_from_planes, lsh_topk and
+    lsh_recall_report all compile it; edits here keep every
+    oracle-replayed candidate set in lockstep)."""
     import numpy as np
 
     n_tables = bits.shape[1] // n_planes
@@ -306,14 +319,13 @@ def _query_matrix(queries: DataFrame, id_col: str, vec_col: str):
     """Collect a (small by contract) query batch to (ids, raw float64
     matrix, normalized matrix) — ONE collect, so the three stay
     row-aligned (two separate collects would not guarantee the same
-    row order). The driver-side prep shared by every fused GEMM
-    operator (brute_force_topk_gemm's posture).
+    row order). The driver-side prep shared by lsh_topk and
+    lsh_recall_report (brute_force_topk_gemm's posture).
 
-    NULL *and* zero-norm query vectors are dropped here (ADVICE r14:
-    the non-fused forms route through ``drop_invalid_vectors(
-    require_nonzero=True)``; a zero-norm row surviving into the
-    normalized matrix becomes all-NaN and NaN cosines can still win a
-    lexsort, breaking the fused==non-fused output contract). An empty
+    NULL *and* zero-norm query vectors are dropped here, as
+    ``drop_invalid_vectors(require_nonzero=True)`` drops them on the
+    corpus side: a zero-norm row surviving into the normalized matrix
+    becomes all-NaN, and NaN cosines can still win a lexsort. An empty
     post-filter batch raises a clear error instead of np.stack's
     opaque "need at least one array to stack"."""
     import numpy as np
@@ -343,15 +355,18 @@ def rhp_table_buckets_from_planes(
     planes: list[list[float]],
     n_planes: int,
 ) -> DataFrame:
-    """(id, table, bucket) rows like :func:`rhp_table_buckets`, but from
-    explicit literal planes (``planes[t*n_planes+p]``) instead of
-    hash-derived ones — the variant an external oracle can replay.
+    """(id, table, bucket) rows for OR-amplified LSH from explicit
+    literal planes (``planes[t*n_planes+p]``): ``len(planes) //
+    n_planes`` independent tables of ``n_planes`` planes each — the
+    bucketing an external oracle can replay.
 
     Signatures are one GEMM per Arrow batch (proj = X @ Pᵀ, bits packed
     little-endian per table) instead of 64 interpreted Catalyst lambdas
     per row — ~30× faster, and still engine-portable because sign bits
     tolerate any double-precision summation order (|proj| on real data
-    is orders of magnitude above the ~1e-13 order-dependent rounding)."""
+    is orders of magnitude above the ~1e-13 order-dependent rounding).
+    Only 3 small columns explode, so the n_tables× row inflation never
+    carries the embedding payload."""
     import numpy as np
 
     P = np.asarray(planes, dtype=np.float64)
@@ -388,9 +403,8 @@ def lsh_near_dup_pairs(
     vec_col: str = "embedding",
     threshold: float = 0.9,
     n_planes: int = 4,
-    n_tables: int = 16,
-    dim: int = 64,
-    planes: list[list[float]] | None = None,
+    *,
+    planes: list[list[float]],
 ) -> DataFrame:
     """Embedding near-duplicate pairs at scale: OR-amplified LSH candidate
     generation (any-table bucket collision) + exact cosine verification
@@ -399,36 +413,34 @@ def lsh_near_dup_pairs(
     1-(1-p^b)^L per pair and regression-tested; cost is linear in
     candidates instead of quadratic in the corpus.
 
+    ``planes`` are literal engine-portable hyperplanes (flat,
+    ``t*n_planes+p``, e.g. :func:`seeded_sign_planes`), so an external
+    oracle can mirror candidate generation exactly; the table count L
+    is ``len(planes) // n_planes``, and a plane list that does not split
+    into whole tables is refused.
+
     Physical shape (the reason this is the registered plan and brute
     force is only a test verifier): the bucket groups shuffle hash-
     partitioned by (table, bucket) key — no full-corpus broadcast, no
-    BroadcastNestedLoopJoin. Each vector joins its n_tables (table,
-    bucket) rows, so the group shuffle carries every vector n_tables
-    times (8.57 MB for 32,000 records at sf0.1); only (id_a, id_b,
-    cosine) survivors shuffle after it. Tune (n_planes, n_tables) to the
-    threshold: near-dup at cosine ≥ 0.9 wants b=16, L=32 (random-pair
-    collision 2^-16/table); the low thresholds used on the synthetic
-    test corpus need coarser buckets (b=4) for recall.
-
-    ``planes`` (flat, ``t*n_planes+p``, e.g. :func:`seeded_sign_planes`)
-    switches bucketing to literal engine-portable hyperplanes so an
-    external oracle can mirror candidate generation exactly.
+    BroadcastNestedLoopJoin. Each vector joins its L (table, bucket)
+    rows, so the group shuffle carries every vector L times (8.57 MB
+    for 32,000 records at sf0.1); only (id_a, id_b, cosine) survivors
+    shuffle after it. This is the path for a corpus-sized neighbour
+    search, which :func:`lsh_topk` (driver-side queries) cannot serve.
+    Tune b = ``n_planes`` and L to the threshold: near-dup at cosine
+    ≥ 0.9 wants b=16, L=32 (random-pair collision 2^-16/table); the
+    low thresholds of the synthetic test corpus need b=4 for recall.
     """
     import numpy as np
 
+    _check_plane_shape(planes, n_planes)
     df = _ensure_parallelism(
         drop_invalid_vectors(df, vec_col, require_nonzero=True)
     )
-    if planes is not None:
-        tb = rhp_table_buckets_from_planes(
-            df.select(F.col(id_col).alias("_id"), F.col(vec_col)),
-            "_id", vec_col, planes, n_planes,
-        )
-    else:
-        tb = rhp_table_buckets(
-            df.select(F.col(id_col).alias("_id"), F.col(vec_col)),
-            "_id", vec_col, n_planes, n_tables, dim,
-        )
+    tb = rhp_table_buckets_from_planes(
+        df.select(F.col(id_col).alias("_id"), F.col(vec_col)),
+        "_id", vec_col, planes, n_planes,
+    )
     # Verify inside each (table, bucket) group with one GEMM: members'
     # vectors join in by id (n_tables× the corpus rows, but each group is
     # small by LSH construction), every within-bucket pair is scored
@@ -480,70 +492,6 @@ def lsh_near_dup_pairs(
     return pairs.dropDuplicates(["id_a", "id_b"]).select(
         "id_a", "id_b", F.round("cosine_raw", 4).alias("cosine")
     )
-
-
-def _hyperplane_sign(vec: Column, plane_id: int, dim: int) -> Column:
-    """Sign of <vec, r_p> for a deterministic pseudo-random hyperplane:
-    component j of plane p = (xxhash64(p, j) scaled to [-1, 1]). Computed
-    inline with higher-order functions — the 'model' is just a hash seed,
-    so signatures are reproducible on any cluster with no stored state."""
-    proj = F.aggregate(
-        F.zip_with(
-            vec,
-            F.sequence(F.lit(0), F.lit(dim - 1)),
-            lambda x, j: x.cast("double")
-            * (F.xxhash64(F.lit(plane_id), j).cast("double") / F.lit(float(1 << 63))),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    return (proj >= 0).cast("int")
-
-
-def rhp_signature(
-    df: DataFrame, vec_col: str, n_planes: int = 16, dim: int = 64
-) -> DataFrame:
-    """Random-hyperplane (SimHash-for-vectors) signature as an int bucket:
-    bit p = sign(<vec, plane_p>). Cos-similar vectors collide with
-    probability (1 - θ/π)^n_planes."""
-    bits = [
-        _hyperplane_sign(F.col(vec_col), p, dim) * F.lit(1 << p) for p in range(n_planes)
-    ]
-    acc = bits[0]
-    for b in bits[1:]:
-        acc = acc + b
-    return df.withColumn("bucket", acc.cast("long"))
-
-
-def rhp_table_buckets(
-    df: DataFrame,
-    id_out: str,
-    vec_col: str,
-    n_planes: int,
-    n_tables: int,
-    dim: int,
-) -> DataFrame:
-    """(id, table, bucket) rows for OR-amplified LSH: ``n_tables``
-    independent hash tables of ``n_planes`` hyperplanes each (planes for
-    table t are hash-derived with ids t*n_planes+p, so tables are
-    independent and fully deterministic). Only 3 small columns explode —
-    vectors are re-joined by id after candidate generation, so the
-    n_tables× row inflation never carries the embedding payload."""
-    tables = []
-    for t in range(n_tables):
-        bits = [
-            _hyperplane_sign(F.col(vec_col), t * n_planes + p, dim) * F.lit(1 << p)
-            for p in range(n_planes)
-        ]
-        acc = bits[0]
-        for b in bits[1:]:
-            acc = acc + b
-        tables.append(
-            F.struct(F.lit(t).alias("table"), acc.cast("long").alias("bucket"))
-        )
-    return df.select(
-        F.col(id_out), F.explode(F.array(*tables)).alias("tb")
-    ).select(id_out, F.col("tb.table").alias("table"), F.col("tb.bucket").alias("bucket"))
 
 
 def train_ivf_centroids(
@@ -679,52 +627,6 @@ def ivf_topk(
     )
 
 
-# Sentinel for broadcast_threshold: skip the bounded-count probe and
-# apply F.broadcast unconditionally — for callers that already KNOW the
-# query batch is small (e.g. a handful of seeded query vectors). A
-# distinct value (not a repurposed int range) per ADVICE r12.
-FORCE_BROADCAST = None
-
-
-def _query_broadcast_hint(queries: DataFrame, threshold: "int | None"):
-    """Broadcast-or-shuffle gate for the query-side frames of the LSH
-    plans (ADVICE r10 #4): the broadcast hints below are only safe
-    while the query batch is small, and query cardinality is
-    data-dependent — a hard-coded hint silently turns a working
-    shuffle plan into a driver/executor OOM when someone feeds a
-    corpus-sized query frame. Probe with a bounded count
-    (``limit(threshold+1)`` short-circuits the scan) and return
-    ``F.broadcast`` only under the bound; at ``threshold=0`` (the
-    explicit opt-out) or above the bound return identity so every
-    join falls back to the optimizer's shuffle strategy.
-
-    The probe is an EAGER Spark job at plan-construction time — in
-    :func:`lsh_topk_self` it filters the full corpus by the query
-    predicate, an extra corpus scan when matches are sparse (ADVICE
-    r11 #3). Callers that already KNOW the query batch is small pass
-    ``threshold=None`` (the :data:`FORCE_BROADCAST` sentinel): force
-    broadcast, no probe job. Negative thresholds are a ValueError —
-    r12 briefly repurposed ``threshold < 0`` as the force sentinel,
-    silently inverting what a pre-r12 ``-1`` (opt out to the shuffle
-    plan) meant; ADVICE r12 flagged the flip, so the force sentinel
-    is now a DISTINCT value that never meant anything else."""
-    if threshold is FORCE_BROADCAST:
-        return F.broadcast
-    if threshold < 0:
-        raise ValueError(
-            "broadcast_threshold must be >= 0 (0 opts out to the "
-            "shuffle plan) or FORCE_BROADCAST/None to force the "
-            "broadcast hint without the probe job; got "
-            f"{threshold!r}. Negative values are rejected: pre-r12 "
-            "they opted OUT, r12 briefly made them force broadcast — "
-            "an unprobed broadcast of a possibly corpus-sized frame."
-        )
-    if threshold == 0:
-        return lambda df: df
-    n_q = queries.limit(threshold + 1).count()
-    return F.broadcast if n_q <= threshold else (lambda df: df)
-
-
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -732,135 +634,35 @@ def lsh_topk(
     vec_col: str = "embedding",
     k: int = 10,
     n_planes: int = 4,
-    n_tables: int = 16,
-    dim: int = 64,
-    planes: list[list[float]] | None = None,
-    broadcast_threshold: "int | None" = 65536,
+    *,
+    planes: list[list[float]],
 ) -> DataFrame:
-    """ANN top-k via OR-amplified random-hyperplane LSH: ``n_tables``
-    independent tables of ``n_planes`` planes each; a corpus vector is a
-    candidate if it shares a bucket with the query in ANY table, then
-    candidates are re-ranked with exact cosine.
+    """ANN top-k via OR-amplified random-hyperplane LSH: L = ``len(planes)
+    // n_planes`` tables of ``n_planes`` literal planes (flat-indexed
+    ``t*n_planes+p``, e.g. :func:`seeded_sign_planes`, which a DuckDB
+    oracle replays verbatim); a corpus vector is a candidate if it
+    shares a bucket with the query in ANY table, self excluded, and
+    candidates are re-ranked with exact cosine. Recall at angle θ is
+    1-(1-p^b)^L with p = 1-θ/π, b = n_planes: b=4, L=16 measures
+    recall@10 0.88 on the sf0.001 test embeddings.
 
-    ``planes`` (flat-indexed ``t*n_planes+p`` literals, e.g.
-    :func:`seeded_sign_planes`) switches bucketing to explicit
-    engine-portable hyperplanes — the variant whose candidate
-    generation a DuckDB oracle replays verbatim, making this
-    approximate operator value-hash-checkable end-to-end (same trick
-    as ``lsh_near_dup_pairs``).
+    ONE corpus pass: the query vectors are collected to the driver
+    (:func:`_query_matrix`, the :func:`brute_force_topk_gemm` posture),
+    and one ``mapInPandas`` stage computes, per Arrow batch, the corpus
+    bucket signatures (GEMM against the planes), the any-table collision
+    mask against the query buckets, and the exact cosines (GEMM against
+    the normalized queries), keeping each batch's per-query top-k in
+    (score desc, id asc) order — the final rank's total order, so the
+    global top-k is contained in the union. A window over those
+    survivors picks the answer; the corpus never shuffles.
 
-    Recall for neighbors at angle θ is 1-(1-p^b)^L with p = 1-θ/π,
-    b = n_planes, L = n_tables — the AND/OR construction every LSH paper
-    uses. A single table (L=1) at b=8 has ~2% recall at cosine ≈ 0.4;
-    the b=4, L=16 default measures ~0.9 on the test embeddings. Cost
-    shape: the bucket join shuffles only (id, table, bucket) rows;
-    embeddings are joined back by id for the exact re-rank, so the L×
-    inflation never carries the vector payload.
-
-    ``broadcast_threshold`` gates the query-side broadcast hints
-    (ADVICE r10 #4): at or under the bound (bounded-probe counted) the
-    query buckets, candidate pairs and query vectors broadcast so the
-    corpus never shuffles; above it the plan falls back to shuffle
-    joins. The bound caps the query-side frames directly; candidate
-    inflation is still queries × L × bucket occupancy, so size the
-    threshold with expected occupancy in mind (or pass 0 to force the
-    shuffle plan outright on skew-prone corpora, or
-    ``FORCE_BROADCAST``/``None`` to force broadcast WITHOUT the probe
-    job when the caller already knows the batch is small — ADVICE
-    r11 #3). BREAKING (r13, ADVICE r12): negative thresholds now
-    raise — r12 briefly treated them as the force sentinel, inverting
-    the pre-r12 opt-out meaning of ``-1``.
-    """
-    corpus = drop_invalid_vectors(corpus, vec_col, require_nonzero=True)
-    queries = drop_invalid_vectors(queries, vec_col, require_nonzero=True)
-    hint = _query_broadcast_hint(queries, broadcast_threshold)
-    if planes is not None:
-        cb = rhp_table_buckets_from_planes(
-            corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col)),
-            "neighbor_id", vec_col, planes, n_planes,
-        )
-        qb = rhp_table_buckets_from_planes(
-            queries.select(F.col(id_col).alias("query_id"), F.col(vec_col)),
-            "query_id", vec_col, planes, n_planes,
-        )
-    else:
-        cb = rhp_table_buckets(
-            corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col)),
-            "neighbor_id", vec_col, n_planes, n_tables, dim,
-        )
-        qb = rhp_table_buckets(
-            queries.select(F.col(id_col).alias("query_id"), F.col(vec_col)),
-            "query_id", vec_col, n_planes, n_tables, dim,
-        )
-    # query-side buckets and surviving candidates are |queries|-bounded:
-    # under the gate, broadcast both so neither the corpus bucket table
-    # nor the corpus vectors ever shuffle (r10 — see lsh_topk_self for
-    # the reasoning); above it, shuffle joins (ADVICE r10 #4)
-    cand = (
-        cb.join(hint(qb), ["table", "bucket"])
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-        .dropDuplicates()
-    )
-    c_vec = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
-    )
-    q_vec = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    )
-    scored = hint(cand).join(c_vec, "neighbor_id").join(hint(q_vec), "query_id").select(
-        "query_id",
-        "neighbor_id",
-        (_dot(F.col("q_vec"), F.col("c_vec"))
-         / (_norm(F.col("q_vec")) * _norm(F.col("c_vec")))).alias("cosine_raw"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cosine_raw", 4).alias("cosine"),
-            F.col("rn").cast("int").alias("rn"),
-        )
-    )
-
-
-def lsh_topk_fused(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_planes: int = 4,
-    planes: list[list[float]] | None = None,
-) -> DataFrame:
-    """:func:`lsh_topk` for a SMALL query batch, fused into ONE corpus
-    pass (r10, VERDICT r9 ask #3): the query vectors are materialized
-    driver-side (the serving-path posture — a query batch lives with
-    the caller by definition; same contract as
-    :func:`brute_force_topk_gemm`), and a single ``mapInPandas`` stage
-    computes, per Arrow batch, the corpus bucket signatures (GEMM
-    against the literal planes), the any-table collision mask against
-    the precomputed query buckets, and the exact cosine re-rank scores
-    (GEMM against the normalized query matrix) — keeping only each
-    batch's per-query top-k, ordered by (score desc, id asc), the same
-    total order as the final rank, so the global top-k is provably
-    contained in the union of per-batch top-k. A final window over the
-    O(batches x queries x k) survivors picks the answer.
-
-    Candidate semantics are IDENTICAL to :func:`lsh_topk` (any-table
-    bucket equality on the same plane literals, self excluded), so the
-    DuckDB oracle replay is unchanged; row-equality to the unfused form
-    is pinned in tests/test_similarity.py. Cost shape: the unfused plan
-    spends 2 Python stages + 2 joins + a dedup shuffle; this is 1
-    Python stage + one tiny candidate shuffle — and at 100 TB the
-    corpus STILL never shuffles (only ranked candidates do)."""
+    The cost of that shape: the query batch must fit on the driver and
+    in every task's closure, so this serves driver-sized batches only.
+    A corpus-sized neighbour search (an all-corpus kNN graph) belongs
+    to :func:`lsh_near_dup_pairs`' shuffle plan."""
     import numpy as np
 
-    if planes is None:
-        raise ValueError("lsh_topk_fused requires literal planes")
+    _check_plane_shape(planes, n_planes)
     corpus = drop_invalid_vectors(corpus, vec_col, require_nonzero=True)
     P = np.asarray(planes, dtype="float64")
     # sign bits come from the RAW query vectors (the same GEMM the
@@ -919,29 +721,29 @@ def lsh_topk_fused(
     )
 
 
-def lsh_recall_report_fused(
+def lsh_recall_report(
     corpus: DataFrame,
     queries: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 10,
     n_planes: int = 4,
-    planes: list[list[float]] | None = None,
+    *,
+    planes: list[list[float]],
 ) -> DataFrame:
-    """Recall@k of the literal-plane LSH against the exact cosine
-    truth, BOTH sides from ONE corpus pass (r10 — the "fuse the two
-    ranker sides" linearization): per Arrow batch, one GEMM scores
+    """Recall@k of :func:`lsh_topk` against the exact cosine truth,
+    BOTH sides from ONE corpus pass: per Arrow batch, one GEMM scores
     every (candidate, query) pair; the truth side keeps the per-batch
     top-k over ALL rows, the approx side keeps the per-batch top-k
     over the bucket-collision survivors — the same matrix, two masks.
     Final per-query ranks come from one window over both families and
     the recall join touches q x k rows. Values are identical to
     running :func:`brute_force_topk_gemm` and :func:`lsh_topk`
-    separately (same arithmetic; pinned in tests)."""
+    separately (same arithmetic; pinned in tests). Same driver-sized
+    query batch as :func:`lsh_topk`."""
     import numpy as np
 
-    if planes is None:
-        raise ValueError("lsh_recall_report_fused requires literal planes")
+    _check_plane_shape(planes, n_planes)
     corpus = drop_invalid_vectors(corpus, vec_col, require_nonzero=True)
     P = np.asarray(planes, dtype="float64")
     q_ids, Q, Qn = _query_matrix(queries, id_col, vec_col)
@@ -1021,112 +823,6 @@ def lsh_recall_report_fused(
     )
 
 
-def lsh_topk_self(
-    corpus: DataFrame,
-    query_pred,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_planes: int = 4,
-    planes: list[list[float]] | None = None,
-    n_tables: int = 16,
-    dim: int = 64,
-    broadcast_threshold: "int | None" = 65536,
-) -> DataFrame:
-    """:func:`lsh_topk` specialized for the common "neighbors of these
-    corpus rows" shape: ``query_pred`` (a boolean Column) selects the
-    query subset FROM the corpus, so bucket signatures are computed
-    ONCE over the corpus and the query side is a broadcast-semi filter
-    on the materialized bucket table — one Arrow/mapInPandas stage
-    instead of two. With a handful of queries the saving is small
-    (measured within noise at sf0.1: the query-side stage was tiny);
-    the shape matters when the query set is LARGE — an all-corpus kNN
-    graph build pays the signature GEMM once instead of twice. It also
-    mirrors exactly how the DuckDB oracle expresses the query (bucket
-    CTE + WHERE for the query side), keeping replayed plans aligned.
-    Verified row-identical to the two-sided form in
-    tests/test_similarity.py.
-
-    ``broadcast_threshold``: same gate as :func:`lsh_topk` — 0 opts
-    out to the shuffle plan, ``FORCE_BROADCAST``/``None`` skips the
-    probe job, and negative values raise (BREAKING r13, ADVICE r12:
-    r12 briefly made negatives force an unprobed broadcast)."""
-    corpus = drop_invalid_vectors(corpus, vec_col, require_nonzero=True)
-    if planes is not None:
-        tb = rhp_table_buckets_from_planes(
-            corpus.select(F.col(id_col).alias("_id"), F.col(vec_col)),
-            "_id", vec_col, planes, n_planes,
-        )
-    else:
-        tb = rhp_table_buckets(
-            corpus.select(F.col(id_col).alias("_id"), F.col(vec_col)),
-            "_id", vec_col, n_planes, n_tables, dim,
-        )
-    # tb has two consumers (all buckets vs query buckets) and is
-    # RECOMPUTED per consumer — deliberately NOT localCheckpointed
-    # (r8 bisect): the signature build is one narrow linear GEMM pass,
-    # and materializing it means writing 16N (id, table, bucket) rows
-    # to executor-local disk plus a blocking driver job before the
-    # real query starts. Measured at sf0.1: recompute ≈ checkpoint
-    # wall-for-wall, and at 100 TB recompute wins — a cheap narrow
-    # stage should never be spilled to disk to save its own re-run.
-    # (A single-consumption groupBy(table,bucket) + collect_list
-    # rewrite measured ~15% faster locally but materializes FULL
-    # bucket membership in one aggregation buffer — unbounded on a
-    # hot bucket at corpus scale — and was rejected.)
-    qids = corpus.where(query_pred).select(F.col(id_col).alias("_qid"))
-    hint = _query_broadcast_hint(qids, broadcast_threshold)
-    cb = tb.select(F.col("_id").alias("neighbor_id"), "table", "bucket")
-    qb = (
-        tb.join(hint(qids), tb["_id"] == qids["_qid"], "left_semi")
-        .select(F.col("_id").alias("query_id"), "table", "bucket")
-    )
-    # r10 (VERDICT r9 ask #3): the query-side bucket table is |queries|
-    # × L rows — BROADCAST it (under the ADVICE-r10-#4 gate: the
-    # query_pred selectivity is data-dependent, so the hint is probed,
-    # not assumed), so the corpus bucket side never shuffles on
-    # (table, bucket) at all (the 16N-row exchange was the measured
-    # cost center). mapInPandas output has no stats, so the optimizer
-    # can't discover this on its own. Correct at 100 TB for the
-    # query-batch shape this function serves (the all-corpus kNN-graph
-    # shape belongs to lsh_near_dup_pairs' shuffle plan instead).
-    cand = (
-        cb.join(hint(qb), ["table", "bucket"])
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-        .dropDuplicates()
-    )
-    c_vec = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
-    )
-    q_vec = corpus.where(query_pred).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    )
-    # same reasoning for the re-rank: candidates are bounded by queries
-    # × L × bucket occupancy — broadcast THEM instead of shuffling the
-    # whole corpus by neighbor_id for a hash join (same gate: above
-    # the bound the occupancy product is exactly what OOMs)
-    scored = hint(cand).join(c_vec, "neighbor_id").join(
-        hint(q_vec), "query_id"
-    ).select(
-        "query_id",
-        "neighbor_id",
-        (_dot(F.col("q_vec"), F.col("c_vec"))
-         / (_norm(F.col("q_vec")) * _norm(F.col("c_vec")))).alias("cosine_raw"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cosine_raw", 4).alias("cosine"),
-            F.col("rn").cast("int").alias("rn"),
-        )
-    )
-
-
 def semantic_dedup(
     df: DataFrame,
     centroids: list[list[float]],
@@ -1150,15 +846,17 @@ def semantic_dedup(
 
     Scale shape: assignment is a narrow codegen'd projection (centroids
     ride as literals — `functions/clustering.py: nearest_centroid`, no
-    join, no shuffle); pairwise scoring is one applyInPandas GEMM per
-    cluster, chunked (`_pairs_above_threshold`) so a degenerate cluster
-    costs O(chunk × m) memory; components are the same bounded
-    min-label propagation as text dedup. Total work is O(Σ m_c²)
-    GEMM flops instead of O(n²) — the k-fold reduction that makes
-    pairwise semantic comparison feasible at corpus scale. Cross-
-    cluster near-duplicates are missed BY DESIGN (the SemDeDup trade:
-    k-means cells approximate the neighborhood structure); raise k for
-    cheaper cells, lower it for better recall.
+    join); then ONE cell shuffle, and one applyInPandas task per cell
+    scores its pairs with a chunked GEMM (`_pairs_above_threshold`, so
+    a degenerate cell costs O(chunk × m) memory) and runs the
+    union-find itself. Edges never leave a cell, so components are
+    cell-local: the task emits the final rows directly, with no pair
+    table, no separate components step and no join back. Total work is
+    O(Σ m_c²) GEMM flops instead of O(n²) — the k-fold reduction that
+    makes pairwise semantic comparison feasible at corpus scale.
+    Cross-cluster near-duplicates are missed BY DESIGN (the SemDeDup
+    trade: k-means cells approximate the neighborhood structure); raise
+    k for cheaper cells, lower it for better recall.
 
     ``max_cell_size`` bounds the per-task FLOPs the same way
     ``max_bucket_size`` bounds MinHash buckets
@@ -1181,112 +879,6 @@ def semantic_dedup(
     good proxy in practice. ``max_cell_size=None`` (default) keeps
     exact within-cell enumeration.
     """
-    import numpy as np
-
-    from weather_data_data_pipeline_spark.functions.clustering import (
-        nearest_centroid,
-    )
-    from weather_data_data_pipeline_spark.functions.dedup import (
-        connected_components,
-    )
-
-    df = _ensure_parallelism(df)
-    best = nearest_centroid(vec_col, centroids)
-    # two consumers (scored per cluster + joined back below) RECOMPUTE
-    # this narrow centroid-assignment projection — deliberately NOT
-    # localCheckpointed (r8): the projection is a cheap codegen'd map
-    # over the (cached) input, while the eager checkpoint was a full
-    # blocking write of every vector to executor disk before the real
-    # work started (measured: ~0.3 s of the query's 2 s wall at sf0.1,
-    # and at 100 TB a materialization of the whole corpus's vectors)
-    assigned = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        best["cluster"].alias("cluster"),
-    )
-
-    chunk_rows = _VERIFY_CHUNK
-
-    def score(pdf):
-        import pandas as pd
-
-        ids = pdf["_id"].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        m = len(ids)
-        # NULL embeddings score NULL cosine against everything (the
-        # oracle's semantics), so they contribute no edges — mask them
-        # out of the GEMM instead of crashing np.stack (r14 NULL audit)
-        vecs = pdf["_v"].iloc[order].tolist()
-        vidx = np.array(
-            [i for i, v in enumerate(vecs) if v is not None], dtype="int64"
-        )
-        empty = pd.DataFrame(
-            {
-                "id_a": np.array([], dtype="int64"),
-                "id_b": np.array([], dtype="int64"),
-                "cosine_raw": np.array([], dtype="float64"),
-            }
-        )
-        if len(vidx) < 2:
-            return empty
-        V = np.stack([np.asarray(vecs[i], dtype=np.float64) for i in vidx])
-        vids = ids[vidx]
-        if max_cell_size is not None and m > max_cell_size:
-            # hot cell: star edges to the min-id hub, O(m·d) not O(m²·d).
-            # The hub is the cell's min id; if ITS vector is NULL every
-            # hub cosine is NULL → no star edges (oracle parity)
-            if vidx[0] != 0:
-                return empty
-            Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-            cos = Vn[1:] @ Vn[0]
-            hit = cos >= threshold
-            return pd.DataFrame(
-                {
-                    "id_a": np.full(int(hit.sum()), ids[0], dtype=ids.dtype),
-                    "id_b": vids[1:][hit],
-                    "cosine_raw": cos[hit],
-                }
-            )
-        id_a, id_b, cos = _pairs_above_threshold(vids, V, threshold, chunk_rows)
-        return pd.DataFrame({"id_a": id_a, "id_b": id_b, "cosine_raw": cos})
-
-    pairs = assigned.groupBy("cluster").applyInPandas(
-        score, "id_a long, id_b long, cosine_raw double"
-    )
-    reps = connected_components(pairs).select(
-        F.col("doc_id").alias("_id"), F.col("cluster_id").alias("_rep")
-    )
-    return (
-        assigned.join(reps, "_id", "left")
-        .select(
-            F.col("_id").alias(id_col),
-            "cluster",
-            F.coalesce(F.col("_rep"), F.col("_id")).alias("rep_id"),
-        )
-        .withColumn("kept", F.col("rep_id") == F.col(id_col))
-    )
-
-
-def semantic_dedup_fused(
-    df: DataFrame,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.9,
-    max_cell_size: int | None = None,
-) -> DataFrame:
-    """:func:`semantic_dedup`, fused into ONE pass (r10 prototype, the
-    r11 swap candidate): SemDeDup edges exist only WITHIN a k-means
-    cell, so near-dup components are cell-local by construction — the
-    per-cell ``applyInPandas`` task can run the union-find itself and
-    emit the final (id, cluster, rep_id, kept) rows directly, instead
-    of materializing a pair table, running a separate connected-
-    components step, and joining representatives back onto a
-    recomputed assignment. Same cell shuffle, strictly fewer stages;
-    semantics IDENTICAL (union of the same edge set the unfused form
-    scores — dense pairs in small cells, hub star edges in hot ones;
-    pinned equal in tests/test_similarity.py on both branches)."""
     import numpy as np
 
     from weather_data_data_pipeline_spark.functions.clustering import (

@@ -141,22 +141,6 @@ def rolling_fingerprint(texts: pd.Series) -> pd.Series:
     )
 
 
-def doc_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full text-analysis profile to a documents frame."""
-    c = F.col(text_col)
-    return df.select(
-        "*",
-        token_count(c).alias("n_tokens"),
-        bpe_ish_token_count(c).alias("n_subword_tokens"),
-        F.round(stopword_ratio(c), 4).alias("stop_ratio"),
-        F.round(punct_ratio(c), 4).alias("punct_ratio"),
-        F.round(mean_token_length(c), 4).alias("mean_token_len"),
-        F.round(quality_score(c), 2).alias("quality"),
-        language_id(c).alias("lang_pred"),
-        rolling_fingerprint(c).alias("fingerprint"),
-    )
-
-
 def chunk_documents(
     df: DataFrame,
     id_col: str = "doc_id",

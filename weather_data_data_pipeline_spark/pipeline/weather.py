@@ -56,6 +56,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from weather_data_data_pipeline_spark.operators.joins import anti_join_dedup
 from weather_data_data_pipeline_spark.session import PARTITION_BYTES
 from weather_data_data_pipeline_spark.sources.observability import (
     audit_metrics,
@@ -278,11 +279,9 @@ def incremental_filter(
 
 
 def rows_to_append(new_rows: DataFrame, destination: DataFrame) -> DataFrame:
-    """J1 (full:163-167): left-anti join on the composite natural key —
-    only rows not already in the destination are appended, making the
-    hourly re-run idempotent. A left-anti join emits each left row at
-    most once however often its key repeats on the right, so the
-    destination keys need no dedup first.
+    """J1 (full:163-167): :func:`anti_join_dedup` on the composite
+    natural key — only rows not already in the destination are
+    appended, making the hourly re-run idempotent.
 
     The result has no more partitions than ``new_rows``: a shuffled join
     would otherwise spread a one-partition batch over every shuffle
@@ -290,9 +289,9 @@ def rows_to_append(new_rows: DataFrame, destination: DataFrame) -> DataFrame:
     ``new_rows`` is meant to be materialised, as ``run_full_load``'s
     fact is: its partition count comes from its RDD, and with AQE on,
     building the RDD of a frame that shuffles runs those shuffles."""
-    return new_rows.join(
-        destination.select(*DEDUP_KEYS), on=DEDUP_KEYS, how="left_anti"
-    ).coalesce(new_rows.rdd.getNumPartitions())
+    return anti_join_dedup(new_rows, destination, DEDUP_KEYS).coalesce(
+        new_rows.rdd.getNumPartitions()
+    )
 
 
 def append_idempotent(

@@ -43,8 +43,10 @@ from weather_data_data_pipeline_spark.functions.similarity import (
     brute_force_topk_gemm,
     ivf_topk,
     lsh_near_dup_pairs,
+    lsh_recall_report,
     lsh_topk,
     seeded_sign_planes,
+    semantic_dedup,
 )
 from weather_data_data_pipeline_spark.functions.text import (
     STOPWORDS,
@@ -696,7 +698,7 @@ def _lsh_oracle_sql(
     "generation from the same plane literals, so the approximate "
     "operator is still value-hash-checked. Recall vs the brute-force "
     "verifier (cosine_near_dup_pairs, test-only) is regression-tested "
-    "in tests/test_similarity.py.",
+    "in tests/test_similarity.py on the same plane literals.",
     tags=("llm", "similarity", "dedup", "bench"),
 )
 def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -908,27 +910,22 @@ def vocab_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="ANN top-k via OR-amplified random-hyperplane LSH (16 tables × 4 "
     "literal sign planes): corpus and queries hashed to sign-pattern "
     "buckets, any-table collision candidates, exact double-precision "
-    "cosine re-rank. The 100 TB path — a shuffle on (table, bucket) "
-    "replaces the cross product, and the L× row inflation carries only "
-    "(id, table, bucket) triples, never the vector payload. The DuckDB "
-    "oracle replays the identical plane literals, so the approximate "
-    "operator is hash-checked, not just row-counted; the hash-derived-"
-    "plane variant (no stored planes) keeps its recall regression test.",
+    "cosine re-rank, all in ONE mapInPandas pass over the corpus with "
+    "the 10 query vectors collected to the driver; only ranked "
+    "candidates shuffle, the corpus never does. Serves driver-sized "
+    "query batches; a corpus-sized neighbour search is "
+    "embedding_near_dup's shuffle plan. The DuckDB oracle replays the "
+    "identical plane literals, so the approximate operator is "
+    "hash-checked, not just row-counted; its recall@10 against brute "
+    "force is regression-tested in tests/test_similarity.py.",
     tags=("llm", "similarity", "bench"),
 )
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from weather_data_data_pipeline_spark.functions.similarity import (
-        lsh_topk_fused,
-    )
-
     emb = load(spark, sf_dir, "embeddings")
-    # FUSED single-pass form (r10, VERDICT r9 ask #3): bucket GEMM,
-    # any-table collision mask, and exact cosine re-rank all in ONE
-    # mapInPandas stage (the unfused lsh_topk plan paid 2 Python stages
-    # + 2 joins + a dedup shuffle). Candidate semantics and arithmetic
-    # identical — row-equal to lsh_topk/lsh_topk_self in
-    # tests/test_similarity.py, and the same DuckDB oracle replays it.
-    return lsh_topk_fused(
+    # bucket GEMM, any-table collision mask and exact cosine re-rank in
+    # ONE mapInPandas stage; the DuckDB oracle above replays the same
+    # candidate generation from the same plane literals
+    return lsh_topk(
         emb,
         emb.where(F.col("vec_id") < 10),
         k=10,
@@ -997,26 +994,22 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "plane LSH top-k (ann_lsh_topk's exact plan) against the brute-"
     "force cosine top-10 ground truth (embedding_cosine_topk's exact "
     "plan). The measurement a 100 TB deployment runs on a sample before "
-    "routing retrieval through the approximate index. Scale shape: the "
-    "truth side scans the corpus once per (small) query batch via the "
-    "batched GEMM, the approx side shuffles (id, table, bucket) triples "
-    "only; the recall join touches q×k rows. Both constituent plans are "
-    "independently oracle-green; here their COMPOSITION is hash-checked.",
+    "routing retrieval through the approximate index. Scale shape: ONE "
+    "corpus pass scores every (candidate, query) pair by GEMM against "
+    "the (small) driver-side query batch; the truth top-k and the "
+    "LSH-candidate top-k are two masks over that matrix, and the recall "
+    "join touches q×k rows. Both constituent plans are independently "
+    "oracle-green; here their COMPOSITION is hash-checked.",
     tags=("llm", "similarity", "bench"),
 )
 def embedding_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from weather_data_data_pipeline_spark.functions.similarity import (
-        lsh_recall_report_fused,
-    )
-
     emb = load(spark, sf_dir, "embeddings")
-    # BOTH ranker sides from ONE corpus GEMM pass (r10, VERDICT r9 ask
-    # #3 — the hybrid_rerank_topk-style linearization): the truth top-k
-    # and the LSH-candidate top-k are two masks over the same per-batch
+    # BOTH ranker sides from ONE corpus GEMM pass: the truth top-k and
+    # the LSH-candidate top-k are two masks over the same per-batch
     # cosine matrix. Values identical to the separate
     # brute_force_topk_gemm + lsh_topk composition (pinned in
     # tests/test_similarity.py); the same DuckDB oracle replays it.
-    return lsh_recall_report_fused(
+    return lsh_recall_report(
         emb,
         emb.where(F.col("vec_id") < 10),
         k=10,
@@ -1464,31 +1457,26 @@ def embedding_outlier_zscores(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "dedup", "similarity", "bench"),
 )
 def semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r11: runs the FUSED plan (cell-local union-find inside the
-    # per-cell applyInPandas task — one shuffle, no pair
-    # materialization, no rep join). Same edge set and values as the
-    # unfused functions/similarity.py:semantic_dedup (row-equality
-    # pinned in tests/test_similarity.py); oracle unchanged.
-    from weather_data_data_pipeline_spark.functions.similarity import (
-        semantic_dedup_fused,
-    )
-
+    # cell-local union-find inside the per-cell applyInPandas task: one
+    # shuffle, no pair materialization, no rep join. No cap, so every
+    # cell runs the dense branch.
     emb = load(spark, sf_dir, "embeddings")
     seeds = (
         emb.select("vec_id", "embedding").orderBy("vec_id").limit(8).collect()
     )
     cents = [[float(x) for x in r["embedding"]] for r in seeds]
-    return semantic_dedup_fused(emb, cents, threshold=0.35)
+    return semantic_dedup(emb, cents, threshold=0.35)
 
 
 @register(
     "semantic_dedup_keep_capped",
     # The HOT-CELL path of semantic_dedup exercised for real: the member
-    # cap (40) is far below the ~62-vector average cell size, so most
-    # cells take the star-edge branch — and the oracle replays that
-    # branch exactly (per-cell size + min-id hub, dense pairs only in
-    # small cells, hub-cosine star edges in oversized ones, then the
-    # same recursive-CTE components). Proves the FLOPs cap added for
+    # cap (40) is below every sf0.001 cell's size (53 to 71, pinned in
+    # tests/test_similarity.py), so every cell takes the star-edge
+    # branch — and the oracle replays that branch exactly (per-cell
+    # size + min-id hub, dense pairs only in small cells, hub-cosine
+    # star edges in oversized ones, then the same recursive-CTE
+    # components). Proves the FLOPs cap added for
     # VERDICT r3 ask #4 is value-correct, not merely bounded.
     oracle=f"""
     WITH RECURSIVE cents AS (
@@ -1549,8 +1537,9 @@ def semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="semantic_dedup_keep with max_cell_size=40 — the hot-cell "
     "star-edge branch (functions/similarity.py: semantic_dedup) under "
-    "oracle verification. Cells over the cap score members against the "
-    "min-id hub only (O(m*d) FLOPs per task instead of O(m^2*d)); "
+    "oracle verification; at sf0.001 every cell is over the cap. Cells "
+    "over the cap score members against the min-id hub only (O(m*d) "
+    "FLOPs per task instead of O(m^2*d)); "
     "members hub-similar above threshold form one component exactly, "
     "hub-dissimilar members lose elided dense links — the stated "
     "recall trade, here hash-checked against a DuckDB replay of the "
@@ -1559,18 +1548,14 @@ def semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "dedup", "similarity", "bench"),
 )
 def semantic_dedup_keep_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r11: fused plan (see semantic_dedup_keep) — the hot-cell star
-    # branch runs inside the same single per-cell task.
-    from weather_data_data_pipeline_spark.functions.similarity import (
-        semantic_dedup_fused,
-    )
-
+    # the hot-cell star branch runs inside the same per-cell task as
+    # semantic_dedup_keep's dense branch
     emb = load(spark, sf_dir, "embeddings")
     seeds = (
         emb.select("vec_id", "embedding").orderBy("vec_id").limit(8).collect()
     )
     cents = [[float(x) for x in r["embedding"]] for r in seeds]
-    return semantic_dedup_fused(emb, cents, threshold=0.35, max_cell_size=40)
+    return semantic_dedup(emb, cents, threshold=0.35, max_cell_size=40)
 
 
 @register(
