@@ -5,7 +5,8 @@ DuckDB oracle and the frozen DSIR model use, for every bucket count.
 ``dedup._positional_gram_hashes`` hashes token slots rather than the
 joined gram string, so its ``h`` must group (id, pos) into exactly the
 classes the gram text does. Both must build their keys without an
-interpreted ``transform`` lambda. The MEM index that persists ``h``
+interpreted ``transform`` lambda, and the registered BM25 and DSIR
+queries must plan no lambda at all. The MEM index that persists ``h``
 must refuse an index written with the older gram-string hash, and the
 stop-gram cuts must follow the AQE posture's broadcast guard.
 """
@@ -18,6 +19,8 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import SF_DIR
+from weather_data_data_pipeline_spark import registry
 from weather_data_data_pipeline_spark.functions import dedup
 from weather_data_data_pipeline_spark.functions.importance import (
     hashed_gram_buckets,
@@ -130,12 +133,20 @@ def test_gram_helpers_build_keys_without_transform_lambda(spark):
     assert "transform(" not in pos_plan
     assert "lambdafunction" not in pos_plan
     dsir_plan = _optimized(hashed_gram_buckets(docs, "doc_id", "text", 64))
-    assert "transform(" not in dsir_plan
+    assert "lambdafunction" not in dsir_plan
     assert "conv(" not in dsir_plan
     # a bucket count that does not divide 256 keeps the eight-digit conv
     assert "conv(" in _optimized(
         hashed_gram_buckets(docs, "doc_id", "text", 100)
     )
+
+
+@pytest.mark.parametrize("name", ["bm25_search_topk", "dsir_score_frozen"])
+def test_registered_token_queries_plan_no_lambda(spark, name):
+    # the non-empty token array is array_remove, and bm25 counts a term
+    # as the elements array_remove drops: no interpreted lambda per token
+    plan = _optimized(registry.get_query(name).fn(spark, SF_DIR))
+    assert "lambdafunction" not in plan
 
 
 def _words(prefix, n):

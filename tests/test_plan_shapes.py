@@ -51,3 +51,34 @@ def test_rho_excess_loss_select_has_no_single_partition_funnel(spark):
     assert gathers, "expected the two scalar aggregates' gathers"
     funnels = [g.toString() for g in gathers if not _is_partial_aggregate(g.child())]
     assert not funnels, funnels
+
+
+def _broadcasts_of_raw_rows(plan) -> list:
+    """Every broadcast exchange of an executed plan whose input reaches
+    a ``Generate`` (an explode of the corpus) without passing through a
+    hash aggregate: a broadcast of corpus-sized rows, not of a count
+    table."""
+    found, stack = [], [(plan, None)]
+    while stack:
+        node, broadcast = stack.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":  # AQE on: its initial plan
+            node = node.executedPlan()
+        name = node.nodeName()
+        if name == "BroadcastExchange":
+            broadcast = node
+        elif name == "HashAggregate":
+            broadcast = None
+        elif name == "Generate" and broadcast is not None:
+            found.append(broadcast.toString())
+        children = node.children()
+        stack.extend((children.apply(i), broadcast) for i in range(children.size()))
+    return found
+
+
+def test_rho_excess_loss_select_broadcasts_count_tables_only(spark):
+    """Both joins back to the grams build from the unigram count table,
+    so the per-document partial sums run where the documents are: the
+    exploded token and bigram streams are never broadcast."""
+    df = registry.get_query("rho_excess_loss_select").fn(spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan()
+    assert not _broadcasts_of_raw_rows(plan)

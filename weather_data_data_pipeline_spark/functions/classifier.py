@@ -39,6 +39,8 @@ from pyspark.ml.feature import HashingTF, RegexTokenizer
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .text import nonempty_tokens
+
 DEFAULT_NUM_FEATURES = 1 << 12  # 4096 hashed unigram buckets
 
 
@@ -295,10 +297,7 @@ def score_frozen_md5(
     # (hashed_gram_buckets, gopher/ccnet, every oracle's string_split)
     # — a regex split would diverge from the DuckDB replay and from the
     # fit-time featurization on any tab/newline whitespace
-    toks = F.filter(
-        F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), " "),
-        lambda t: t != F.lit(""),
-    )
+    toks = nonempty_tokens(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
     margin = F.aggregate(
         toks,
         F.lit(f"{intercept:.6f}").cast("decimal(38,6)"),

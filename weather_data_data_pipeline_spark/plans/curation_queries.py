@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from weather_data_data_pipeline_spark.functions.text import nonempty_tokens
 from weather_data_data_pipeline_spark.registry import register
 from weather_data_data_pipeline_spark.sources.tables import load, load_fanout
 
@@ -33,7 +34,7 @@ _DEC = "decimal(38,6)"
 # live SparkContext (F.split materializes its limit literal eagerly),
 # and this module must import Spark-free for oracle-only consumers.
 def _ws_tokens() -> F.Column:
-    return F.size(F.filter(F.split("text", " "), lambda t: t != ""))
+    return F.size(nonempty_tokens("text"))
 
 
 _WS_TOKENS_SQL = "len(list_filter(string_split(text, ' '), t -> t <> ''))"
@@ -272,7 +273,7 @@ _NOVELTY_N = 3  # token n-gram width
 )
 def ngram_novelty_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_fanout(spark, sf_dir, "documents")
-    arr = F.filter(F.split("text", " "), lambda t: t != F.lit(""))
+    arr = nonempty_tokens("text")
     arrs = docs.select("doc_id", arr.alias("t"))
     grams = (
         arrs.where(F.size("t") >= _NOVELTY_N)
@@ -615,9 +616,7 @@ def vocab_nucleus_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_fanout(spark, sf_dir, "documents")
     tok = docs.select(
         "lang",
-        F.explode(
-            F.filter(F.split("text", " "), lambda t: t != F.lit(""))
-        ).alias("term"),
+        F.explode(nonempty_tokens("text")).alias("term"),
     )
     uni = tok.groupBy("lang", "term").agg(F.count("*").alias("c"))
     w_rank = (
@@ -1150,9 +1149,7 @@ def term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_fanout(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
-        F.explode(
-            F.filter(F.split("text", " "), lambda t: t != F.lit(""))
-        ).alias("term"),
+        F.explode(nonempty_tokens("text")).alias("term"),
     )
     d = tok.agg(F.count_distinct("doc_id").alias("n_docs"))
     stats = tok.groupBy("term").agg(
@@ -1630,7 +1627,7 @@ def _maxcov_oracle(k: int) -> str:
 )
 def max_coverage_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_fanout(spark, sf_dir, "documents")
-    arr = F.filter(F.split("text", " "), lambda t: t != F.lit(""))
+    arr = nonempty_tokens("text")
     arrs = docs.select("doc_id", arr.alias("t"))
     sh = (
         arrs.where(F.size("t") >= _MAXCOV_N)

@@ -58,6 +58,7 @@ from weather_data_data_pipeline_spark.functions.text import (
     md5_threshold,
     tf_idf_top_terms,
     mean_token_length,
+    nonempty_tokens,
     punct_ratio,
     quality_score,
     rolling_fingerprint,
@@ -149,7 +150,7 @@ def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def corpus_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    ws = F.size(F.filter(F.split("text", " "), lambda t: t != ""))
+    ws = F.size(nonempty_tokens("text"))
     return docs.groupBy("lang").agg(
         F.sum(bpe_ish_token_count("text").cast("long")).alias("bpe_ish_tokens"),
         F.sum(ws.cast("long")).alias("ws_tokens"),

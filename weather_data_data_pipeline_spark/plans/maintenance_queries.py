@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from weather_data_data_pipeline_spark.functions.text import nonempty_tokens
 from weather_data_data_pipeline_spark.operators.merge import (
     merge_upsert,
     orphan_count,
@@ -553,9 +554,7 @@ def data_expectations_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dataset_card_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    toks = F.size(
-        F.filter(F.split(F.col("text"), " "), lambda t: t != F.lit(""))
-    )
+    toks = F.size(nonempty_tokens(F.col("text")))
     stats = docs.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum(toks).cast("long").alias("total_tokens"),

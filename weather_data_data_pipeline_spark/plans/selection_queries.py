@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from weather_data_data_pipeline_spark.functions.text import nonempty_tokens
 from weather_data_data_pipeline_spark.registry import register
 from weather_data_data_pipeline_spark.sources.tables import load, load_fanout
 
@@ -491,7 +492,7 @@ def doremi_domain_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load_fanout(spark, sf_dir, "documents")
-    arr = F.filter(F.split(F.col("text"), " "), lambda t: t != F.lit(""))
+    arr = nonempty_tokens(F.col("text"))
     arrs = docs.select("source", arr.alias("t"))
     # ONE corpus explode covers BOTH models: unigram strings plus
     # "w1 w2" bigram strings in the same gram column (the r5 plan ran
@@ -1055,11 +1056,7 @@ def curation_pipeline_frozen_e2e(
     nonempty = clean.where(
         F.col("clean_text").isNotNull()
         & (
-            F.size(
-                F.filter(
-                    F.split("clean_text", " "), lambda t: t != F.lit("")
-                )
-            )
+            F.size(nonempty_tokens("clean_text"))
             > 0
         )
     )
@@ -1236,11 +1233,7 @@ def unimax_language_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     counts = docs.groupBy("lang").agg(
         F.sum(
-            F.size(
-                F.filter(
-                    F.split(F.col("text"), " "), lambda t: t != F.lit("")
-                )
-            ).cast("long")
+            F.size(nonempty_tokens(F.col("text"))).cast("long")
         ).alias("n_tokens")
     )
     # single-row bounded collect: the total is one scalar, the same
@@ -1329,7 +1322,7 @@ def rho_excess_loss_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load_fanout(spark, sf_dir, "documents")
-    arr = F.filter(F.split(F.col("text"), " "), lambda t: t != F.lit(""))
+    arr = nonempty_tokens(F.col("text"))
     arrs = docs.select("doc_id", arr.alias("t"))
     toks = arrs.select("doc_id", F.explode("t").alias("tok"))
     # Total tokens and vocab size are integer identities OF uni —
@@ -1364,8 +1357,15 @@ def rho_excess_loss_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _dec6(loss_col):
         return F.round(loss_col, 6).cast("decimal(38,6)")
 
+    # Both joins back to the grams broadcast the vocabulary-sized uni,
+    # so the per-document partial sums run on the document-partitioned
+    # gram side: one partial row per document. Left to size estimates,
+    # Catalyst broadcast the exploded grams instead and kept uni's
+    # tok partitioning, which shuffled each document's partial sums
+    # from every partition (1,532,543 B written at sf0.1 against
+    # 395,698 B with the hints).
     ref = (
-        toks.join(uni.select("tok", "c", "total"), "tok")
+        toks.join(F.broadcast(uni.select("tok", "c", "total")), "tok")
         .groupBy("doc_id")
         .agg(
             F.count("*").cast("bigint").alias("n_tokens"),
@@ -1379,7 +1379,10 @@ def rho_excess_loss_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     proxy = (
         bi.join(bg, ["w1", "w2"])
-        .join(uni.select(F.col("tok").alias("w1"), "c", "vs"), "w1")
+        .join(
+            F.broadcast(uni.select(F.col("tok").alias("w1"), "c", "vs")),
+            "w1",
+        )
         .groupBy("doc_id")
         .agg(
             F.round(

@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
+from weather_data_data_pipeline_spark.functions.text import nonempty_tokens
 from weather_data_data_pipeline_spark.operators.joins import anti_join_dedup
 from weather_data_data_pipeline_spark.sources.layout import write_versioned
 from weather_data_data_pipeline_spark.sources.tables import load, normalize_ntz
@@ -782,9 +783,7 @@ def _packing_batch_writer(
         if batch_id < last_id:
             return  # older than the last committed batch: already done
         offset = before if batch_id == last_id else after
-        toks = F.size(
-            F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
-        )
+        toks = F.size(nonempty_tokens(F.col(text_col)))
         base = batch_df.select(
             F.col(id_col), toks.cast("long").alias("n_tok")
         )
